@@ -3,10 +3,16 @@
 # defects (AQE plan flips, corpus-scaled bucket widths, HLL error
 # bounds) that only appear at the larger factor.
 
-.PHONY: test oracles oracles-sf01 bench scaling all
+.PHONY: test test-sinks oracles oracles-sf01 bench scaling all
 
 test:
 	python -m pytest tests/ -x -q
+
+# The CoW/MoR sink and stream tests alone, under the tier-1 environment.
+test-sinks:
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+	python -m pytest tests/test_streaming.py tests/test_mor_sink.py \
+	tests/test_table_properties.py -q -p no:cacheprovider
 
 oracles:
 	python tools/check_oracles.py

@@ -39,13 +39,13 @@ class MergeResult:
     final: DataFrame  # post-merge target table state
     routed: DataFrame  # one row per deduped change: key, op, lsn, route, conflict
     bad: DataFrame  # quarantined malformed changes (reference S8 'bad' sink)
+    delta: DataFrame  # changed rows only: merged values for applied
+    # upserts + 'D' markers, the write set of a merge-on-read sink —
+    # O(batch) rows instead of O(touched partitions)
     cached: DataFrame | None = None  # persisted join (persist_join=True);
     # caller unpersists after consuming final/routed
     field_diffs: DataFrame | None = None  # per-field old→new audit rows
     # (field_audit=True) — reference fields-audit log, record_update.py:626-641
-    delta: DataFrame | None = None  # changed rows only (emit_delta=True):
-    # merged values for applied upserts + 'D' markers, the write set of a
-    # merge-on-read sink — O(batch) rows instead of O(touched partitions)
 
     def unpersist(self) -> None:
         if self.cached is not None:
@@ -80,7 +80,6 @@ def apply_changes(
     require_perfect_match: bool = False,
     persist_join: bool = False,
     field_audit: bool = False,
-    emit_delta: bool = False,
 ) -> MergeResult:
     """Apply a change batch to the target table state, returning the
     new state plus routing/quarantine side outputs.
@@ -250,21 +249,16 @@ def apply_changes(
         )
     )
 
-    delta = None
-    if emit_delta:
-        # The write set of a merge-on-read sink: only rows the batch
-        # actually changed — merged values for applied upserts plus
-        # delete markers. Rejected/stale/noop rows emit nothing, so a
-        # replay of an already-applied batch produces an EMPTY delta.
-        delta = (
-            j.filter(applied | deleted)
-            .select(
-                *[F.col(f"c_{k}").alias(k) for k in KEY_COLS],
-                *merged_cols,
-                F.col("c_lsn").alias("lsn"),
-                F.when(deleted, F.lit("D")).otherwise(F.lit("U")).alias("_op"),
-            )
-        )
+    # The write set of a merge-on-read sink: only rows the batch actually
+    # changed — merged values for applied upserts plus delete markers.
+    # Rejected/stale/noop rows emit nothing, so a replay of an
+    # already-applied batch produces an EMPTY delta.
+    delta = j.filter(applied | deleted).select(
+        *[F.col(f"c_{k}").alias(k) for k in KEY_COLS],
+        *merged_cols,
+        F.col("c_lsn").alias("lsn"),
+        F.when(deleted, F.lit("D")).otherwise(F.lit("U")).alias("_op"),
+    )
 
     routed = j.filter(has_c).select(
         *[F.col(f"c_{k}").alias(k) for k in KEY_COLS],
@@ -278,7 +272,7 @@ def apply_changes(
         final=final,
         routed=routed,
         bad=bad,
+        delta=delta,
         cached=j if persist_join else None,
         field_diffs=field_diffs,
-        delta=delta,
     )

@@ -4,25 +4,42 @@
 ``apply_merge(batch_df)`` is idempotent per batch_id and per LSN.
 
 Scale design: the target table is hash-bucketed on conv_id into
-``bucket=<k>`` directory partitions. A batch MERGE:
+``bucket=<k>`` directory partitions. The copy-on-write
+(:class:`ParquetMergeSink`) and merge-on-read
+(:class:`MorParquetMergeSink`) sinks commit a batch through one
+``apply_merge`` skeleton:
 
-1. computes the set of buckets its keys touch (one tiny distinct agg —
-   at most n_buckets values to the driver);
-2. reads ONLY those partitions (partition pruning — the scan filter is
-   on the partition column, so untouched data is never read);
-3. full-outer MERGE-applies the batch against that slice;
-4. dynamically overwrites ONLY the touched partitions
-   (``partitionOverwriteMode=dynamic``).
+1. a batch_id that already has lineage rows is a replay: it is skipped
+   after ``_publish`` finishes any publish the failed attempt left
+   undone (the LSN guard in the MERGE makes even a forced re-apply
+   converge);
+2. ``_prepare_batch`` key-repartitions and persists the batch and
+   collects the set of buckets its keys touch (at most n_buckets values
+   to the driver);
+3. ``_read_buckets`` reads ONLY those buckets (partition pruning — the
+   scan filter is on the partition column, so untouched data is never
+   read);
+4. ``apply_changes`` full-outer MERGE-applies the batch against that
+   slice;
+5. ``_stage`` writes the sink's rows for the batch, bucketed, to a
+   per-batch staging directory;
+6. ``_commit_lineage_and_audits`` appends the lineage rows — THE ledger
+   commit — and then the routed, bad and field-audit rows;
+7. ``_publish`` makes the staged rows visible.
 
-At 100 TB with n_buckets sized so a bucket ≈ a few GB, a batch that
-touches 1% of conversations rewrites ~1% of the table — the same I/O
-shape as an Iceberg copy-on-write MERGE with bucket partitioning.
-Schema evolution is additive: new columns appear on rewritten buckets;
-``mergeSchema=true`` on read presents old buckets with nulls.
+The sinks differ only in what step 5 writes and when readers see it.
+Copy-on-write stages the new version of every touched bucket and swaps
+those bucket directories into ``data/`` inside ``_stage``, BEFORE the
+ledger commit; its ``_publish`` has nothing left to do. Merge-on-read
+stages only the changed rows (a delta) and renames them into
+``delta/`` in ``_publish``, AFTER the ledger commit.
 
-The lineage table doubles as the exactly-once ledger: a batch_id that
-already has lineage rows is a replay and is skipped outright (the
-LSN guard in the MERGE itself makes even a forced re-apply converge).
+At 100 TB with n_buckets sized so a bucket ≈ a few GB, a copy-on-write
+batch that touches 1% of conversations rewrites ~1% of the table — the
+same I/O shape as an Iceberg copy-on-write MERGE with bucket
+partitioning. Schema evolution is additive: new columns appear on
+rewritten buckets; ``mergeSchema=true`` on read presents old buckets
+with nulls.
 """
 
 from __future__ import annotations
@@ -41,6 +58,7 @@ from ..schemas import KEY_COLS, TRANSCRIPTS_SCHEMA
 
 BUCKET_COL = "bucket"
 PROPS_FILE = "_table_properties.json"
+AUDIT_TABLES = ("lineage", "routed", "bad", "field_audit")
 
 log = logging.getLogger(__name__)
 
@@ -226,30 +244,41 @@ class ParquetMergeSink:
 
     def init(self, base: DataFrame) -> None:
         self._persist_layout()
-        # key-clustered within each bucket file: parquet row-group
-        # min/max stats on (conv_id, turn_idx) let point/range reads
-        # skip row groups — the local analogue of Iceberg's sort order
+        self._write_bucketed(base, self.data_path, self.n_buckets)
+
+    def _write_bucketed(self, df: DataFrame, path: str, n_parts: int) -> None:
+        """Overwrite ``path`` with ``df`` in ``bucket=<k>`` directories,
+        written by ``n_parts`` tasks. Rows are key-clustered within each
+        bucket file: parquet row-group min/max stats on (conv_id,
+        turn_idx) let point/range reads skip row groups — the local
+        analogue of Iceberg's sort order. The bucket leads the sort: the
+        dynamic-partition writer requires its ordering to be prefixed by
+        the partition column, else it inserts its own bucket-only sort
+        and destroys the key clustering."""
         (
-            base.withColumn(BUCKET_COL, bucket_expr(self.n_buckets))
-            .repartition(self.n_buckets, BUCKET_COL)
+            df.withColumn(BUCKET_COL, bucket_expr(self.n_buckets))
+            .repartition(n_parts, BUCKET_COL)
             .sortWithinPartitions(BUCKET_COL, *KEY_COLS)
             .write.mode("overwrite")
             .partitionBy(BUCKET_COL)
-            .parquet(self.data_path)
+            .parquet(path)
         )
 
     def read(self) -> DataFrame:
         if not self.exists():  # fully-deleted table
             return self.spark.createDataFrame([], TRANSCRIPTS_SCHEMA)
-        return (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(self.data_path)
-            .drop(BUCKET_COL)
-        )
+        return self._read_buckets(None)
 
-    def _read_buckets(self, buckets: list[int]) -> DataFrame:
-        df = self.spark.read.option("mergeSchema", "true").parquet(self.data_path)
-        return df.filter(F.col(BUCKET_COL).isin(buckets)).drop(BUCKET_COL)
+    def _read_buckets(self, buckets: list[int] | None) -> DataFrame:
+        """Current state of ``buckets`` (None = all) of an existing table."""
+        return self._scan(self.data_path, buckets)
+
+    def _scan(self, path: str, buckets: list[int] | None) -> DataFrame:
+        """Rows of the bucketed directory ``path``, pruned to ``buckets``."""
+        df = self.spark.read.option("mergeSchema", "true").parquet(path)
+        if buckets is not None:
+            df = df.filter(F.col(BUCKET_COL).isin(buckets))
+        return df.drop(BUCKET_COL)
 
     # -- exactly-once ledger ---------------------------------------------
     def _ledger(self) -> set[int]:
@@ -306,42 +335,54 @@ class ParquetMergeSink:
                 "attempt failed between ledger commit and audit append)",
                 batch_id, self.path,
             )
+            # A same-object retry after a failure between the ledger
+            # commit and the publish: the staged rows are complete (they
+            # are staged before the ledger), so roll them forward here
+            # exactly like init-time recovery would.
+            self._publish(batch_id)
             return None
         self._persist_layout()  # streams onto an un-init'd path create the table
+        self._maintain()
         batch_df, touched = self._prepare_batch(batch_df)
-        base = self._read_buckets(touched) if self.exists() else self._empty_base(batch_df)
-        # persist_join: the dedup+join+gate plan is evaluated exactly once
-        # (by the staging write below); routed/lineage/bad then project
-        # from the cache instead of re-running the merge.
-        res = apply_changes(
-            base,
-            batch_df,
-            persist_join=True,
-            field_audit=(audit == "fields"),
-            **merge_opts,
-        )
+        res = None
+        try:
+            base = self._read_buckets(touched) if self.exists() else self._empty_base(batch_df)
+            # persist_join: the dedup+join+gate plan is evaluated exactly
+            # once (by the staging write); routed/lineage/bad then project
+            # from the cache instead of re-running the merge.
+            res = apply_changes(
+                base,
+                batch_df,
+                persist_join=True,
+                field_audit=(audit == "fields"),
+                **merge_opts,
+            )
+            self._stage(res, touched, batch_id)
+            self._commit_lineage_and_audits(res, batch_id, audit)
+            self._publish(batch_id)
+        finally:
+            # also on failure: a retry of a ledgered batch returns early
+            # above and would leave both caches in executor memory
+            batch_df.unpersist()
+            if res is not None:
+                res.unpersist()
+        return res
 
-        final = res.final.withColumn(BUCKET_COL, bucket_expr(self.n_buckets))
-        routed = res.routed
-        # Write the new version of the touched buckets to a staging dir,
-        # then swap partition directories into place. Writing straight
-        # over data_path would race: the merge plan reads the very files
-        # the dynamic-overwrite commit deletes. (Iceberg's snapshot
-        # commit is the atomic version of this swap — sink_iceberg.py.)
-        # The staging write also materializes the persisted join, so the
-        # post-swap reads below never touch the replaced files.
+    # -- sink hooks: what a batch writes, and when readers see it -------
+    def _maintain(self) -> None:
+        """Table maintenance due before a batch reads the table (none)."""
+
+    def _stage(self, res: MergeResult, touched: list[int], batch_id: int) -> None:
+        """Write the new version of the touched buckets to a staging dir,
+        then swap bucket directories into place — before the ledger
+        commit. Writing straight over data_path would race: the merge
+        plan reads the very files the overwrite deletes. (Iceberg's
+        snapshot commit is the atomic version of this swap —
+        sink_iceberg.py.) The staging write also materializes the
+        persisted join, so the commit tail never touches the replaced
+        files."""
         staging = os.path.join(self.path, f"_staging_batch_{batch_id}")
-        (
-            final.repartition(max(len(touched), 1), BUCKET_COL)
-            # bucket first: the dynamic-partition writer requires its
-            # ordering to be prefixed by the partition column, else it
-            # inserts its own bucket-only sort and destroys the key
-            # clustering; (bucket, conv, turn) satisfies both
-            .sortWithinPartitions(BUCKET_COL, *KEY_COLS)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(staging)
-        )
+        self._write_bucketed(res.final, staging, max(len(touched), 1))
         # Crash-safe swap: the old bucket is moved aside (atomic rename)
         # rather than rmtree'd, so no crash window can lose a bucket's
         # base rows. Recovery in _recover_staging restores any bucket
@@ -360,10 +401,10 @@ class ParquetMergeSink:
                 os.replace(src, dst)
         shutil.rmtree(staging, ignore_errors=True)
         shutil.rmtree(trash_dir, ignore_errors=True)
-        self._commit_lineage_and_audits(res, batch_id, audit)
-        batch_df.unpersist()
-        res.unpersist()
-        return res
+
+    def _publish(self, batch_id: int) -> None:
+        """Make a ledgered batch's staged rows visible; copy-on-write
+        already swapped them in during ``_stage``."""
 
     def _prepare_batch(self, batch_df: DataFrame) -> tuple[DataFrame, list[int]]:
         """Shared pre-merge setup: key-repartition a thin micro-batch
@@ -460,47 +501,45 @@ class ParquetMergeSink:
         analogue). Content is unchanged — the exactly-once ledger reads
         identically afterwards. Returns files-before per table."""
         before: dict[str, int] = {}
-        for name, path in (
-            ("lineage", self.lineage_path),
-            ("routed", self.routed_path),
-            ("bad", self.bad_path),
-            ("field_audit", self.field_audit_path),
-        ):
+        for name in AUDIT_TABLES:
+            path = os.path.join(self.path, name)
             if not os.path.isdir(path):
                 continue
             files = [f for f in os.listdir(path) if f.endswith(".parquet")]
             before[name] = len(files)
             if len(files) <= target_files:
                 continue
-            staging = path + "_compacting"
-            (
-                # mergeSchema: the table may mix files written before a
-                # lineage-schema addition — sampling one old footer
-                # would otherwise silently drop the newer columns
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(path)
-                .coalesce(target_files)
-                .write.mode("overwrite")
-                .parquet(staging)
+            # mergeSchema: the table may mix files written before a
+            # lineage-schema addition — sampling one old footer would
+            # otherwise silently drop the newer columns
+            compacted = self.spark.read.option("mergeSchema", "true").parquet(path)
+            self._swap_dir(
+                path, compacted.coalesce(target_files).write.mode("overwrite").parquet
             )
-            trash = path + "_old"
-            shutil.rmtree(trash, ignore_errors=True)
-            os.replace(path, trash)
-            os.replace(staging, path)
-            shutil.rmtree(trash, ignore_errors=True)
         return before
 
+    def _swap_dir(self, path: str, write) -> None:
+        """Replace directory ``path`` with what ``write(staging)`` writes:
+        stage, then ``path → path_old`` and ``staging → path`` (two
+        atomic renames), then drop the old copy. _recover_compaction
+        undoes a crash between the renames."""
+        staging, trash = path + "_compacting", path + "_old"
+        write(staging)
+        shutil.rmtree(trash, ignore_errors=True)
+        if os.path.isdir(path):
+            os.replace(path, trash)
+        os.replace(staging, path)
+        shutil.rmtree(trash, ignore_errors=True)
+
     def _recover_compaction(self) -> None:
-        """Crash recovery for compact_audit's two-step swap: a kill
-        between `path -> path_old` and `staging -> path` leaves the
-        table (possibly the exactly-once ledger) missing; restore the
-        original and discard the incomplete staging dir."""
-        for path in (
-            self.lineage_path,
-            self.routed_path,
-            self.bad_path,
-            self.field_audit_path,
-        ):
+        """Crash recovery for _swap_dir (compact_audit, and compact_data
+        on a merge-on-read table): a kill between `path -> path_old` and
+        `staging -> path` leaves the table (possibly the exactly-once
+        ledger, or the base) missing; restore the original and discard
+        the incomplete staging dir. A copy-on-write table never swaps
+        data/ this way, so for it that entry is a no-op."""
+        for name in (*AUDIT_TABLES, "data"):
+            path = os.path.join(self.path, name)
             trash, staging = path + "_old", path + "_compacting"
             if not os.path.isdir(path) and os.path.isdir(trash):
                 os.replace(trash, path)
@@ -546,13 +585,16 @@ class MorParquetMergeSink(ParquetMergeSink):
     ``compact_data()`` folds deltas back into the bucketed base
     (rewrite_data_files analogue).
 
-    Commit protocol per batch: stage delta → lineage append (THE
-    ledger commit) → audits → atomic rename into delta/. A crash
-    before the ledger replays the batch (staged dir is invisible and
-    gets rewritten, no audit rows written yet → no duplicates); a
-    crash after the ledger is rolled FORWARD by init-time recovery
-    (the staged delta is complete by construction) — audit rows of
-    that batch may be lost but never doubled, the same contract as the
+    Commit protocol per batch — the shared ``apply_merge`` skeleton
+    with this sink's hooks: ``_stage`` writes the delta to
+    ``_delta_staging_batch_<id>`` → lineage append (THE ledger commit)
+    → audits → ``_publish`` renames it into delta/, AFTER the ledger.
+    A crash before the ledger replays the batch (staged dir is
+    invisible and gets rewritten, no audit rows written yet → no
+    duplicates); a crash after the ledger is rolled FORWARD by
+    init-time recovery, or by ``_publish`` on a same-object retry (the
+    staged delta is complete by construction) — audit rows of that
+    batch may be lost but never doubled, the same contract as the
     copy-on-write sink.
     """
 
@@ -599,31 +641,27 @@ class MorParquetMergeSink(ParquetMergeSink):
         # batch dir implies parquet files — no O(total files) walk.
         return bool(self._delta_batch_dirs())
 
-    def _mor_view(self, buckets: list[int] | None) -> DataFrame:
+    def exists(self) -> bool:
+        """True when base buckets or published deltas hold rows."""
+        return super().exists() or self._has_deltas()
+
+    def _read_buckets(self, buckets: list[int] | None) -> DataFrame:
         """Current state = last writer per key over base ∪ deltas.
         Spark 4 plans row_number()=1 as WindowGroupLimit (partial+final)
         so the reconstruction is map-side-limited, not a full sort."""
         parts = []
-        if self.exists():
-            b = self.spark.read.option("mergeSchema", "true").parquet(self.data_path)
-            if buckets is not None:
-                b = b.filter(F.col(BUCKET_COL).isin(buckets))
+        if super().exists():
             parts.append(
-                b.drop(BUCKET_COL)
+                self._scan(self.data_path, buckets)
                 .withColumn("_op", F.lit("U"))
                 .withColumn("_seq", F.lit(-1).cast("long"))
             )
         if self._has_deltas():
-            d = self.spark.read.option("mergeSchema", "true").parquet(self.delta_path)
-            if buckets is not None:
-                d = d.filter(F.col(BUCKET_COL).isin(buckets))
             parts.append(
-                d.drop(BUCKET_COL).withColumn(
-                    "_seq", F.col("batch_id").cast("long")
-                ).drop("batch_id")
+                self._scan(self.delta_path, buckets)
+                .withColumn("_seq", F.col("batch_id").cast("long"))
+                .drop("batch_id")
             )
-        if not parts:
-            return self.spark.createDataFrame([], TRANSCRIPTS_SCHEMA)
         view = parts[0]
         for p in parts[1:]:
             view = view.unionByName(p, allowMissingColumns=True)
@@ -636,82 +674,29 @@ class MorParquetMergeSink(ParquetMergeSink):
             .drop("_rn", "_op", "_seq")
         )
 
-    def read(self) -> DataFrame:
-        return self._mor_view(None)
-
-    def _read_buckets(self, buckets: list[int]) -> DataFrame:
-        return self._mor_view(buckets)
-
-    # -- MERGE (delta write) -----------------------------------------------
-    def apply_merge(
-        self,
-        batch_df: DataFrame,
-        batch_id: int,
-        audit: str = "full",
-        **merge_opts,
-    ) -> MergeResult | None:
-        if audit not in ("fields", "full", "lineage"):
-            raise ValueError(f"unknown audit mode: {audit}")
-        if batch_id in self._ledger():
-            log.warning(
-                "batch_id=%s already in ledger for %s — skipping replay "
-                "(audit rows for this batch may be absent if the prior "
-                "attempt failed between ledger commit and audit append)",
-                batch_id, self.path,
-            )
-            # Same-object retry after a partial failure between the
-            # ledger commit and the publish rename: the staged delta is
-            # complete (the ledger is written after staging), so roll it
-            # forward here exactly like init-time recovery would.
-            staged = os.path.join(self.path, f"_delta_staging_batch_{batch_id}")
-            if os.path.isdir(staged):
-                self._publish_delta(staged, batch_id)
-            return None
-        self._persist_layout()
-        # Scheduled maintenance for deltas accumulated by PREVIOUS
-        # batches, run BEFORE this batch reads the view: folding here
-        # both bounds the merge fan-in this batch pays and keeps the
-        # returned MergeResult valid — compacting after the return
-        # value was built would delete delta files its lazy plans still
-        # reference (FileNotFound on any post-return evaluation).
+    # -- sink hooks: delta write, published after the ledger ---------------
+    def _maintain(self) -> None:
+        """Scheduled maintenance for deltas accumulated by PREVIOUS
+        batches, run BEFORE this batch reads the view: folding here both
+        bounds the merge fan-in this batch pays and keeps the returned
+        MergeResult valid — compacting after the return value was built
+        would delete delta files its lazy plans still reference
+        (FileNotFound on any post-return evaluation)."""
         if (
             self.auto_compact_deltas is not None
             and len(self._delta_batch_dirs()) >= self.auto_compact_deltas
         ):
             self.compact_data()
-        batch_df, touched = self._prepare_batch(batch_df)
-        if self.exists() or self._has_deltas():
-            base = self._read_buckets(touched)
-        else:
-            base = self._empty_base(batch_df)
-        res = apply_changes(
-            base,
-            batch_df,
-            persist_join=True,
-            field_audit=(audit == "fields"),
-            emit_delta=True,
-            **merge_opts,
-        )
-        # 1. stage the delta (materializes the persisted join; invisible
-        #    to readers until the final rename)
+
+    def _stage(self, res: MergeResult, touched: list[int], batch_id: int) -> None:
+        """Stage the delta; it stays invisible to readers until _publish."""
         staging = os.path.join(self.path, f"_delta_staging_batch_{batch_id}")
-        (
-            res.delta.withColumn(BUCKET_COL, bucket_expr(self.n_buckets))
-            .repartition(max(len(touched), 1), BUCKET_COL)
-            .sortWithinPartitions(BUCKET_COL, *KEY_COLS)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(staging)
-        )
-        # 2. ledger commit, then audits (shared tail — lineage first so a
-        #    replayed batch can never duplicate audit rows), projecting
-        #    from the cache the staging write materialized
-        self._commit_lineage_and_audits(res, batch_id, audit)
-        # 3. publish: atomic rename into the live delta directory
-        self._publish_delta(staging, batch_id)
-        batch_df.unpersist()
-        res.unpersist()
-        return res
+        self._write_bucketed(res.delta, staging, max(len(touched), 1))
+
+    def _publish(self, batch_id: int) -> None:
+        staged = os.path.join(self.path, f"_delta_staging_batch_{batch_id}")
+        if os.path.isdir(staged):
+            self._publish_delta(staged, batch_id)
 
     def _publish_delta(self, staging: str, batch_id: int) -> None:
         live = os.path.join(self.delta_path, f"batch_id={batch_id}")
@@ -745,37 +730,18 @@ class MorParquetMergeSink(ParquetMergeSink):
         batches = self._delta_batch_dirs()  # ascending numeric order
         if not batches:
             return 0
-        staging = self.data_path + "_compacting"
-        (
-            self.read()
-            .withColumn(BUCKET_COL, bucket_expr(self.n_buckets))
-            .repartition(self.n_buckets, BUCKET_COL)
-            .sortWithinPartitions(BUCKET_COL, *KEY_COLS)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(staging)
+        self._swap_dir(
+            self.data_path,
+            lambda staging: self._write_bucketed(self.read(), staging, self.n_buckets),
         )
-        trash = self.data_path + "_old"
-        shutil.rmtree(trash, ignore_errors=True)
-        if os.path.isdir(self.data_path):
-            os.replace(self.data_path, trash)
-        os.replace(staging, self.data_path)
         for b in batches:
             shutil.rmtree(b, ignore_errors=True)
-        shutil.rmtree(trash, ignore_errors=True)
         return len(batches)
 
     # -- crash recovery --------------------------------------------------------
     def _recover_mor(self) -> None:
-        """Roll staged deltas forward (ledgered) or back (un-ledgered),
-        and restore the base if a compact_data swap was interrupted."""
-        # base swap recovery (compact_data crashed mid-swap)
-        trash = self.data_path + "_old"
-        if not os.path.isdir(self.data_path) and os.path.isdir(trash):
-            os.replace(trash, self.data_path)
-        shutil.rmtree(self.data_path + "_compacting", ignore_errors=True)
-        shutil.rmtree(trash, ignore_errors=True)
-        # staged-delta recovery
+        """Roll staged deltas forward (ledgered) or back (un-ledgered).
+        An interrupted compact_data swap is undone by _recover_compaction."""
         if not os.path.isdir(self.path):
             return
         for name in os.listdir(self.path):

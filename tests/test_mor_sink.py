@@ -54,18 +54,41 @@ def test_mor_stream_equals_oracle(spark, tmp_path):
 
 def test_mor_matches_cow_sink(spark, tmp_path):
     """Both sinks applied the same chunked feed → identical final state
-    (incl. deletes, fuzzy-free path)."""
+    (incl. deletes) AND identical side outputs: with the fuzzy gate on,
+    audit='fields' and null-key rows in one chunk, the routed, bad,
+    lineage and field-audit tables match row for row — both sinks commit
+    through the same tail."""
+    import pandas as pd
+
     base_pd = feedgen.gen_transcripts(n_convs=20, seed=5)
     ch_pd = feedgen.gen_changes("delete", n_events=400, n_convs=20, seed=5)
     ch_pd = ch_pd.sort_values("lsn").reset_index(drop=True)
+    chunks = _chunks(ch_pd, 3)
+    null_keys = chunks[1].head(3).assign(conv_id=None)
+    chunks[1] = pd.concat([chunks[1], null_keys], ignore_index=True)
     cow = ParquetMergeSink(spark, str(tmp_path / "cow"), n_buckets=8)
     mor = MorParquetMergeSink(spark, str(tmp_path / "mor"), n_buckets=8)
     cow.init(spark.createDataFrame(base_pd))
     mor.init(spark.createDataFrame(base_pd))
-    for i, chunk in enumerate(_chunks(ch_pd, 3)):
-        cow.apply_merge(spark.createDataFrame(chunk), batch_id=i)
-        mor.apply_merge(spark.createDataFrame(chunk), batch_id=i)
+    for i, chunk in enumerate(chunks):
+        for sink in (cow, mor):
+            sink.apply_merge(
+                spark.createDataFrame(chunk), batch_id=i, audit="fields", fuzzy_gate=True
+            )
     assert _final_text(mor.read()) == _final_text(cow.read())
+
+    def rows(df):
+        return sorted(repr(tuple(r)) for r in df.collect())
+
+    routes = {r.route for r in cow.routed().select("route").distinct().collect()}
+    assert {"unmodified", "fuzzy-updated", "deleted"} <= routes  # gate exercised
+    assert rows(mor.routed()) == rows(cow.routed())
+    bad = [spark.read.parquet(s.bad_path) for s in (cow, mor)]
+    assert bad[0].count() == len(null_keys)
+    assert rows(bad[1]) == rows(bad[0])
+    assert rows(mor.lineage().drop("commit_ts")) == rows(cow.lineage().drop("commit_ts"))
+    assert cow.field_audit().count() > 0
+    assert rows(mor.field_audit()) == rows(cow.field_audit())
 
 
 def test_mor_replay_is_noop(spark, tmp_path):

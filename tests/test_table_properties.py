@@ -100,9 +100,12 @@ def test_cow_same_object_retry_after_audit_failure(spark, tmp_path, monkeypatch)
         return orig(self, path, *a, **kw)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", flaky)
+    spark.catalog.clearCache()
     with pytest.raises(RuntimeError, match="simulated"):
         sink.apply_merge(changes, batch_id=1, audit="full")
     monkeypatch.setattr(DataFrameWriter, "parquet", orig)
+    # the failed attempt released its batch and join caches
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     # ledger committed → same-object retry is a replay no-op
     assert sink.apply_merge(changes, batch_id=1, audit="full") is None
@@ -142,8 +145,11 @@ def test_mor_same_object_retry_publishes_staged_delta(spark, tmp_path, monkeypat
         return orig(self, staging, batch_id)
 
     monkeypatch.setattr(MorParquetMergeSink, "_publish_delta", flaky)
+    spark.catalog.clearCache()
     with pytest.raises(RuntimeError, match="simulated"):
         sink.apply_merge(changes, batch_id=1)
+    # the failed attempt released its batch and join caches
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     # staged dir exists, nothing published yet
     assert os.path.isdir(os.path.join(sink.path, "_delta_staging_batch_1"))
     assert sink._delta_batch_dirs() == []

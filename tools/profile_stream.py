@@ -1,7 +1,7 @@
 """Per-phase wall-time profile of one end-to-end stream run — where a
-micro-batch's time actually goes (prepare / base read / staging write /
-swap / lineage+audit), summed across batches. Used to pick stream-path
-optimization targets; results land in BENCH/BASELINE.md.
+micro-batch's time actually goes (prepare / base read / merge / staging
+write + bucket swap / lineage+audit), summed across batches. Used to
+pick stream-path optimization targets; results land in BENCH/BASELINE.md.
 
 Usage: python tools/profile_stream.py [n_events] [n_batches] [audit]
 """
@@ -19,11 +19,13 @@ TIMES: dict[str, float] = defaultdict(float)
 CALLS: dict[str, int] = defaultdict(int)
 
 
-def _timed(obj, name: str, label: str | None = None):
+def _timed(obj, name: str, label: str | None = None, when=lambda *a: True):
     fn = getattr(obj, name)
     lab = label or name
 
     def wrap(*a, **kw):
+        if not when(*a):
+            return fn(*a, **kw)
         t0 = time.perf_counter()
         try:
             return fn(*a, **kw)
@@ -47,7 +49,9 @@ def main() -> None:
     from marc_data_migration_spark.operators import merge as merge_mod
 
     _timed(sp.ParquetMergeSink, "_prepare_batch")
-    _timed(sp.ParquetMergeSink, "_read_buckets")
+    # a batch's pruned base read; the run's final read() passes None
+    _timed(sp.ParquetMergeSink, "_read_buckets", when=lambda sink, buckets: buckets is not None)
+    _timed(sp.ParquetMergeSink, "_stage")  # staging write + bucket swap
     _timed(sp.ParquetMergeSink, "_commit_lineage_and_audits")
     _timed(sp.ParquetMergeSink, "_ledger")
     _timed(sp.ParquetMergeSink, "apply_merge", "apply_merge_total")
@@ -56,12 +60,6 @@ def main() -> None:
     # patching merge_mod alone never intercepts the sink's calls —
     # rebind the sink module's global to the wrapper too.
     sp.apply_changes = merge_mod.apply_changes
-
-    # staging write: wrap the sink's swap helper if present, otherwise
-    # attribute the remainder (apply_merge_total - tracked parts).
-    for cand in ("_swap_buckets", "_publish_delta"):
-        if hasattr(sp.ParquetMergeSink, cand):
-            _timed(sp.ParquetMergeSink, cand)
 
     out = bench.stream_e2e_run(
         int(os.environ.get("SPARK_GRAFT_CPUS", "32")), n_events, n_batches, "cow"
