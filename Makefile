@@ -5,8 +5,10 @@
 
 .PHONY: test test-sinks oracles oracles-sf01 bench scaling all
 
+# The tier-1 run (ROADMAP.md): one Spark executor thread per CPU.
 test:
-	python -m pytest tests/ -x -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+	python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 # The CoW/MoR sink and stream tests alone, under the tier-1 environment.
 test-sinks:

@@ -7,7 +7,7 @@ optimization rounds can time single queries at any SF, capture
 whole suite. Examples:
 
     python bench_extra.py --queries ivf_trained_topk,rp_ivf_topk \
-        --sf-dir /root/testdata/sf1.0 --passes 2 \
+        --sf-dir /root/testdata/sf0.1 --passes 2 \
         --explain-dir plans/r06 --explain-suffix _before
 
     python bench_extra.py                  # whole headline suite, 1 pass
@@ -32,7 +32,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument(
         "--sf-dir",
-        default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0"),
+        default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
     )
     ap.add_argument("--queries", default=None, help="comma list; default headline")
     ap.add_argument("--passes", type=int, default=1)

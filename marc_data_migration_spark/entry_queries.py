@@ -28,11 +28,7 @@ from .functions.normalize import (
     key_with_precedence,
     normalize_text,
 )
-from .functions.similarity import (
-    jaccard_tokens,
-    token_sort_ratio,
-    token_sort_ratio_presorted,
-)
+from .functions.similarity import jaccard_tokens, token_sort_ratio
 from .operators.dedup import latest_per_key
 from .operators.merge import apply_changes
 
@@ -671,13 +667,7 @@ def q_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(
             F.array(
                 F.struct(
-                    # sa/sb are _tok_sort_col output — already processed
-                    # + token-sorted, so the presorted UDF variant skips
-                    # the Python-side re-process/re-sort (bit-identical
-                    # ratios; see token_sort_ratio_presorted)
-                    token_sort_ratio_presorted(
-                        F.col("s.sa"), F.col("s.sb")
-                    ).alias("ratio"),
+                    token_sort_ratio(F.col("s.sa"), F.col("s.sb")).alias("ratio"),
                     F.levenshtein("s.sa", "s.sb").cast("bigint").alias("lev"),
                     (F.length("s.sa") + F.length("s.sb")).cast("bigint").alias("t"),
                 )
@@ -3946,7 +3936,7 @@ def q_rp_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rv").alias("qv"),
         F.explode(F.slice(cell_rank(F.col("rv"), cents), 1, 4)).alias("pr"),
     ).select("q", "qv", F.col("pr")["i"].alias("cell"))
-    return probe_topk(c, q, 3, "vec_id", dim=16)
+    return probe_topk(c, q, 3, "vec_id")
 
 
 # ---------------------------------------------------------------------

@@ -150,25 +150,3 @@ def gen_changes(
     df["turn_idx"] = df["turn_idx"].astype("int32")
     df["lsn"] = df["lsn"].astype("int64")
     return df
-
-
-def gen_reconcile_src(transcripts: pd.DataFrame, seed: int = 42) -> pd.DataFrame:
-    """Authoritative lookup side (FIXTURES.md §3): per existing turn,
-    a text that is identical (ratio 100), perturbed (50≤ratio<100) or
-    unrelated (ratio<50) — pinning the reference's three-way routing
-    (record_update.py:352-443)."""
-    rng = np.random.default_rng(seed + 7)
-    out = transcripts[["conv_id", "turn_idx", "text", "role", "tool"]].copy()
-    bucket = rng.integers(0, 3, size=len(out))
-    texts = []
-    for i, t in enumerate(out["text"]):
-        if bucket[i] == 0:  # identical
-            texts.append(t)
-        elif bucket[i] == 1:  # word-reorder + punctuation noise
-            ws = t.split()
-            rng.shuffle(ws)
-            texts.append(", ".join(ws) + ".")
-        else:  # unrelated
-            texts.append(_text(rng))
-    out["text"] = texts
-    return out

@@ -81,9 +81,3 @@ def fuzzy_001_flag(col_035: Column, col_001: Column) -> Column:
     the condition that arms the reference's fuzzy-001 title test
     (record_update.py:207-218). INT for driver hash parity."""
     return (col_035.isNull() & col_001.isNotNull()).cast("int")
-
-
-def is_oclc_prefix(col: Column | str) -> Column:
-    """P7: substring membership test (utils.py:70-76)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.lower(c).rlike("ocn|ocm|on")

@@ -93,27 +93,6 @@ def token_sort_ratio(a: pd.Series, b: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(T.IntegerType())
-def token_sort_ratio_presorted(a: pd.Series, b: pd.Series) -> pd.Series:
-    """token_sort_ratio for inputs that are ALREADY token-sorted
-    full_process output truncated at MAX_CMP_CHARS (the _tok_sort_col
-    chain computes exactly that JVM-side). On such strings full_process
-    is the identity (only [0-9a-z ] chars, single-spaced, stripped,
-    ≤ MAX_CMP_CHARS) and the tokens are already in sorted order (ASCII,
-    so Spark's array_sort and Python's sorted agree), so skipping the
-    Python-side re-process/re-sort returns bit-identical ratios while
-    the UDF pays only for the LCS itself (property-pinned equal to
-    token_sort_ratio_py in tests/test_functions.py)."""
-    return pd.Series(
-        [_blocks_ratio(x or "", y or "") for x, y in zip(a, b)], dtype="int32"
-    )
-
-
-@F.pandas_udf(T.IntegerType())
-def fuzz_ratio(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([ratio_py(x, y) for x, y in zip(a, b)], dtype="int32")
-
-
 def jaccard_tokens(a: Column | str, b: Column | str) -> Column:
     """A4: word-set Jaccard similarity, pure built-ins (JVM-side):
     |tokens(a) ∩ tokens(b)| / |tokens(a) ∪ tokens(b)| (utils.py:244-254)."""

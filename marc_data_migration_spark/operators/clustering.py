@@ -199,7 +199,7 @@ def ivf_trained_topk(
         "qv",
         F.explode(F.slice(cell_rank(F.col("qv"), centroids), 1, nprobe)).alias("pr"),
     ).select("q", "qv", F.col("pr")["i"].alias("cell"))
-    return probe_topk(c, q, k, id_col, dim=dim)
+    return probe_topk(c, q, k, id_col)
 
 
 def semantic_neardup_pairs(
@@ -234,7 +234,7 @@ def semantic_neardup_pairs(
     c = corpus.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
     c = c.select(
         id_col, "v", argmin_cell(F.col("v"), centroids).alias("cell")
-    ).withColumn("_n", _norm(F.col("v"), dim))
+    ).withColumn("_n", _norm(F.col("v")))
     a = c.select(
         F.col(id_col).alias("id_a"), F.col("v").alias("va"), "cell",
         F.col("_n").alias("_na"),
@@ -339,7 +339,7 @@ def ivf_index_probe(
         .filter(F.col("cell").isin(probed))
         .select(F.col(id_col), _as_double(F.col(vec_col)).alias("cv"), "cell")
     )
-    return probe_topk(c, q_local, k, id_col, dim=dim)
+    return probe_topk(c, q_local, k, id_col)
 
 
 def pq_fit(

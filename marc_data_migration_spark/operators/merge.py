@@ -70,6 +70,30 @@ def split_bad(changes: DataFrame) -> tuple[DataFrame, DataFrame]:
     return changes.filter(~is_bad), changes.filter(is_bad)
 
 
+def gate_ratio(candidate, incoming_text, existing_text):
+    """The fuzzy gate's score (J5/F3): token_sort_ratio of the normalized
+    incoming vs existing text. Only rows where ``candidate`` holds get a
+    real score (the rest score 0), so callers mask by ``candidate``.
+
+    Catalyst extracts Python UDFs into an unconditional ArrowEvalPython
+    node — a `when(candidate, udf(...))` wrapper does NOT stop the UDF
+    running on every row (verified via executedPlan). So the *inputs*
+    are gated instead: null text for non-candidate rows costs one null
+    per row over Arrow and short-circuits in Python, and the LCS compute
+    only runs on genuine candidates."""
+    return token_sort_ratio(
+        F.when(candidate, normalize_text(F.coalesce(incoming_text, F.lit("")))),
+        F.when(candidate, normalize_text(F.coalesce(existing_text, F.lit("")))),
+    )
+
+
+def passes_gate(ratio, fuzzy_threshold: int, require_perfect_match: bool):
+    """The gate's pass test (reference thresholds 100 / τ,
+    record_update.py:352-443): ``ratio == 100`` under perfect-match,
+    else ``ratio >= fuzzy_threshold``."""
+    return ratio == 100 if require_perfect_match else ratio >= fuzzy_threshold
+
+
 def apply_changes(
     base: DataFrame,
     changes: DataFrame,
@@ -132,25 +156,9 @@ def apply_changes(
     matched_update = fresh & has_t & (F.col("c_op") != "D")
 
     if fuzzy_gate:
-        # Catalyst extracts Python UDFs into an unconditional
-        # ArrowEvalPython node — a `when(matched_update, udf(...))`
-        # wrapper does NOT stop the UDF running on every joined row
-        # (verified via executedPlan). Gate the *inputs* instead: null
-        # text for non-candidate rows costs one null per row over Arrow
-        # and short-circuits in Python, so the LCS compute only runs on
-        # genuine matched-update candidates.
-        ratio = F.when(
-            matched_update,
-            token_sort_ratio(
-                F.when(matched_update, normalize_text(F.coalesce(F.col("c_text"), F.lit("")))),
-                F.when(matched_update, normalize_text(F.coalesce(F.col("t_text"), F.lit("")))),
-            ),
-        )
-        j = j.withColumn("_ratio", ratio)
-        if require_perfect_match:
-            gate_ok = F.col("_ratio") == 100
-        else:
-            gate_ok = F.col("_ratio") >= fuzzy_threshold
+        ratio = gate_ratio(matched_update, F.col("c_text"), F.col("t_text"))
+        j = j.withColumn("_ratio", F.when(matched_update, ratio))
+        gate_ok = passes_gate(F.col("_ratio"), fuzzy_threshold, require_perfect_match)
         gate_ok = ~matched_update | F.coalesce(gate_ok, F.lit(True))
     else:
         j = j.withColumn("_ratio", F.lit(None).cast("int"))

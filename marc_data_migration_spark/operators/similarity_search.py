@@ -70,111 +70,15 @@ def scaled_bits(n_rows: int, target_bucket_size: int = 256,
     return max(min_bits, min(max_bits, math.ceil(math.log2(n_rows / target_bucket_size))))
 
 
-def _dot(a, b, dim: int | None = None, offset: int = 0):
-    """Inner product <a, b>.
-
-    Three forms, all evaluating the IDENTICAL left-to-right float fold
-    ``((0.0 + a0*b0) + a1*b1) + ...`` so results are bit-for-bit equal
-    (IEEE addition order pinned — the oracle-parity invariant):
-
-    - ``b`` a Python list of floats: fully UNROLLED to
-      ``a[i] * lit(b_i)`` terms;
-    - ``dim`` given (column×column): unrolled to ``a[i] * b[i]``;
-    - neither: the ``aggregate(zip_with(...))`` HOF fold.
-
-    EVERY OPERATOR IN THIS MODULE USES THE HOF FORM, on r06 evidence.
-    The unrolled forms looked attractive (HOFs are CodegenFallback)
-    but lost in every real context, for three measured reasons:
-    (1) a 64-term chain inside a join condition or Generate runs as
-    one giant non-JIT-able method — ~6× SLOWER per pair than the
-    interpreted HOF's tight primitive loop (sf1.0 A/B: 94 s vs
-    14.9 s on embedding_neardup); (2) each unrolled stage pays
-    seconds of fixed Catalyst+Janino cost, which dominates small
-    inputs (sf0.1 bench: ivf probes 1 s → 8 s on compile alone);
-    (3) CollapseProject multiplies an unrolled array column into
-    every downstream reference (rp_project at sf0.1: 3 s → 126 s).
-    The actual per-pair win — norms hoisted out of the cosine so each
-    candidate pays 1 dot instead of 3 — is independent of the dot
-    form and is what probe_topk/neardup now do. The unrolled forms
-    stay available for the equivalence tests (test_unrolled_dot.py)
-    and for any future WSCG-Project-only use, with this warning.
-
-    ``offset`` shifts the index window on ``a`` (and on ``b`` when it
-    is a column), replacing per-row ``F.slice`` allocations in the PQ
-    subspace paths: ``_dot(v, cw, offset=j*sub)`` reads
-    ``v[j*sub+i] * lit(cw_i)`` directly.
-
-    The unrolled forms are rendered as ONE ``F.expr`` SQL string when
-    the inputs print as plain column names: building a 64-term chain
-    through py4j Column arithmetic costs ~260 driver round-trips per
-    dot (~5-10 s of query-CONSTRUCT time per ANN probe, measured);
-    the SQL string is one round-trip and parses to the identical
-    expression tree. Falls back to the Column loop for anonymous
-    expressions."""
-    if isinstance(b, (list, tuple)):
-        a_sql = _sql_name(a)
-        if a_sql is not None:
-            return F.expr(
-                "CAST(0.0 AS DOUBLE) + "
-                + " + ".join(
-                    f"({a_sql}[{offset + i}] * {_dlit(x)})"
-                    for i, x in enumerate(b)
-                )
-            )
-        acc = F.lit(0.0)
-        for i, x in enumerate(b):
-            acc = acc + a[offset + i] * F.lit(float(x))
-        return acc
-    if dim is not None:
-        a_sql, b_sql = _sql_name(a), _sql_name(b)
-        if a_sql is not None and b_sql is not None:
-            return F.expr(
-                "CAST(0.0 AS DOUBLE) + "
-                + " + ".join(
-                    f"({a_sql}[{offset + i}] * {b_sql}[{offset + i}])"
-                    for i in range(dim)
-                )
-            )
-        acc = F.lit(0.0)
-        for i in range(dim):
-            acc = acc + a[offset + i] * b[offset + i]
-        return acc
-    if offset:
-        raise ValueError("_dot: offset requires a literal b or explicit dim")
+def _dot(a, b):
+    """Inner product <a, b> of two array columns, as the
+    ``aggregate(zip_with(...))`` fold ``((0.0 + a0*b0) + a1*b1) + ...``:
+    IEEE addition order is pinned, so the DuckDB oracles reproduce it
+    bit for bit. Unrolled ``a[i] * b[i]`` chains were measured slower
+    in every context (non-JIT-able giant methods in joins, per-stage
+    compile cost, CollapseProject blow-up) and removed; OPTIMIZATION_r06.md
+    has the numbers."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
-_NAME_RE = None
-
-
-def _sql_name(col) -> str | None:
-    """The column's SQL identifier when it is a plain (possibly
-    dotted struct-field) reference — e.g. ``cv`` or ``s.sa`` — else
-    None. Uses the JVM column's string form, which for a bare
-    ``F.col(...)`` is just the name; anything with operators or
-    aliases fails the identifier regex and takes the fallback path."""
-    global _NAME_RE
-    if _NAME_RE is None:
-        import re
-
-        _NAME_RE = re.compile(
-            r"[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)*"
-        )
-    try:
-        s = col._jc.toString()
-    except AttributeError:
-        return None
-    return s if _NAME_RE.fullmatch(s) else None
-
-
-def _dlit(x: float) -> str:
-    """Render a float as a Spark SQL DOUBLE literal producing the
-    exact same IEEE double as ``F.lit(float(x))``: repr() is the
-    shortest round-trip decimal, parsed by Java Double.parseDouble;
-    the D suffix (or an existing exponent) keeps the parser from
-    typing a bare decimal literal as DECIMAL."""
-    r = repr(float(x))
-    return r if ("e" in r or "E" in r) else r + "D"
 
 
 def _check_dim(
@@ -229,15 +133,13 @@ def _as_double(col):
     return col.cast("array<double>")
 
 
-def _cosine(a, b, dim: int | None = None):
+def _cosine(a, b):
     """Rounded cosine similarity — the single definition all three
     operators (and their DuckDB oracles) must stay bit-identical to."""
-    return F.round(
-        _dot(a, b, dim) / (F.sqrt(_dot(a, a, dim)) * F.sqrt(_dot(b, b, dim))), 4
-    )
+    return F.round(_dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b))), 4)
 
 
-def _norm(v, dim: int | None = None):
+def _norm(v):
     """sqrt(<v, v>) — the cosine denominator factor. Pair-scoring paths
     materialize this ONCE PER ROW below the join (projects do not
     collapse across a Join, so CollapseProject cannot inline it back
@@ -246,9 +148,6 @@ def _norm(v, dim: int | None = None):
     values as ``_cosine``, so results are bit-identical while each
     candidate pair pays 1 dot instead of 3 (guide §2.3: compute on the
     small side of the fan-out)."""
-    # dim is accepted for call-site documentation but the dot stays the
-    # HOF fold: _norm runs once per ROW (not per pair), where the fixed
-    # codegen cost of an unrolled chain can never pay for itself
     return F.sqrt(_dot(v, v))
 
 
@@ -260,16 +159,15 @@ def _pair_cosine(dot_expr, na, nb):
 
 
 def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
-                vec_col: str = "embedding", id_col: str = "vec_id",
-                dim: int | None = 64) -> DataFrame:
+                vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
     """Exact top-k by cosine: returns (q, vec_id, score) with
     deterministic (score desc, vec_id) tie-break."""
     q = queries.select(
         F.col(id_col).alias("q"), _as_double(F.col(vec_col)).alias("qv")
     )
-    q = q.select("q", "qv", _norm(F.col("qv"), dim).alias("_qn"))
+    q = q.select("q", "qv", _norm(F.col("qv")).alias("_qn"))
     c = corpus.select(F.col(id_col), _as_double(F.col(vec_col)).alias("cv"))
-    c = c.select(id_col, "cv", _norm(F.col("cv"), dim).alias("_cn"))
+    c = c.select(id_col, "cv", _norm(F.col("cv")).alias("_cn"))
     scored = F.broadcast(q).crossJoin(c).filter(F.col("q") != F.col(id_col))
     scored = scored.select(
         "q",
@@ -297,13 +195,13 @@ def lsh_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
         _as_double(F.col(vec_col)).alias("qv"),
         hyperplane_bucket(F.col(vec_col), planes).alias("bucket"),
     )
-    q = q.select("q", "qv", "bucket", _norm(F.col("qv"), dim).alias("_qn"))
+    q = q.select("q", "qv", "bucket", _norm(F.col("qv")).alias("_qn"))
     c = corpus.select(
         F.col(id_col),
         _as_double(F.col(vec_col)).alias("cv"),
         hyperplane_bucket(F.col(vec_col), planes).alias("bucket"),
     )
-    c = c.select(id_col, "cv", "bucket", _norm(F.col("cv"), dim).alias("_cn"))
+    c = c.select(id_col, "cv", "bucket", _norm(F.col("cv")).alias("_cn"))
     scored = F.broadcast(q).join(c, "bucket").filter(F.col("q") != F.col(id_col))
     scored = scored.select(
         "q",
@@ -338,7 +236,6 @@ def probe_topk(
     query_cells: DataFrame,
     k: int,
     id_col: str,
-    dim: int | None = None,
 ) -> DataFrame:
     """Shared IVF probe tail (random-direction AND k-means-trained
     families — clustering.ivf_trained_topk): bucket equi-join on
@@ -349,8 +246,8 @@ def probe_topk(
     norms are materialized below the join (projects do not collapse
     across a Join), so each candidate pays ONE dot instead of three —
     bit-identical scores, ~3× on the probe stage at sf1.0."""
-    corpus_cells = corpus_cells.withColumn("_cn", _norm(F.col("cv"), dim))
-    query_cells = query_cells.withColumn("_qn", _norm(F.col("qv"), dim))
+    corpus_cells = corpus_cells.withColumn("_cn", _norm(F.col("cv")))
+    query_cells = query_cells.withColumn("_qn", _norm(F.col("qv")))
     scored = (
         F.broadcast(query_cells)
         .join(corpus_cells, "cell")
@@ -421,7 +318,7 @@ def ivf_ann_topk(
             )["i"]
         ).alias("cell"),
     )
-    return probe_topk(c, q, k, id_col, dim=dim)
+    return probe_topk(c, q, k, id_col)
 
 
 def embedding_neardup_pairs(
@@ -475,7 +372,7 @@ def embedding_neardup_pairs(
             F.col(id_col),
             _as_double(F.col(vec_col)).alias("v"),
             hyperplane_bucket(F.col(vec_col), all_planes).alias("bucket"),
-        ).withColumn("_n", _norm(F.col("v"), dim))
+        ).withColumn("_n", _norm(F.col("v")))
         a = bucketed.select(
             F.col(id_col).alias("id_a"), F.col("v").alias("va"), "bucket",
             F.col("_n").alias("_na"),
@@ -485,7 +382,7 @@ def embedding_neardup_pairs(
             F.col("_n").alias("_nb"),
         )
         j = a.join(b, "bucket").filter(F.col("id_a") < F.col("id_b"))
-        # Pair dot stays the HOF aggregate (dim=None), NOT the unrolled
+        # Pair dot stays the HOF aggregate, NOT an unrolled
         # chain: the threshold filter is pushed into the SortMergeJoin
         # condition, and in that (non-whole-stage-codegen) context the
         # interpreted HOF — one eval() with a tight primitive loop —
@@ -531,7 +428,7 @@ def embedding_neardup_pairs(
     )
     e = corpus.select(
         F.col(id_col), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("_n", _norm(F.col("v"), dim))
+    ).withColumn("_n", _norm(F.col("v")))
     va = e.select(
         F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("_n").alias("_na")
     )
@@ -606,10 +503,10 @@ def lsh_multitable_ann_topk(
     )
     qv = queries.select(
         F.col(id_col).alias("q"), _as_double(F.col(vec_col)).alias("q_v")
-    ).withColumn("_qn", _norm(F.col("q_v"), dim))
+    ).withColumn("_qn", _norm(F.col("q_v")))
     cv = corpus.select(
         F.col(id_col).alias("cand"), _as_double(F.col(vec_col)).alias("cand_v")
-    ).withColumn("_cn", _norm(F.col("cand_v"), dim))
+    ).withColumn("_cn", _norm(F.col("cand_v")))
     scored = (
         cand_ids.join(F.broadcast(qv), "q")
         .join(cv, "cand")

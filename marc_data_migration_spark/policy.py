@@ -32,7 +32,9 @@ from typing import Protocol
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .operators.routing import ONLINE_TOOLS
+# Analogue of STREAMING VIDEO / EBOOK / ONLINE PERIODICAL markers in
+# 900$a (pnca_policy.py:87-93): tool values that mark an online turn.
+ONLINE_TOOLS = ("browser", "search")
 
 
 class TransformPolicy(Protocol):

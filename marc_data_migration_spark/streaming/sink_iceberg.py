@@ -105,10 +105,8 @@ def prepare_source(
     Returns ``(source, bad)`` — quarantined rows (null key / unknown
     op) are the caller's to persist, same contract as ParquetMergeSink.
     Runs on plain Spark (unit-testable without an Iceberg runtime)."""
-    from ..functions.normalize import normalize_text
-    from ..functions.similarity import token_sort_ratio
     from ..operators.dedup import latest_per_key
-    from ..operators.merge import split_bad
+    from ..operators.merge import gate_ratio, passes_gate, split_bad
 
     good, bad = split_bad(batch_df)
     latest = latest_per_key(good, method=dedup_method)
@@ -124,13 +122,8 @@ def prepare_source(
     )
     j = latest.join(t, KEY_COLS, "left_outer")
     candidate = F.col("_t_hit").isNotNull() & (F.col("op") != "D")
-    # input-gated UDF: see operators/merge.py — a `when` around the UDF
-    # call alone would still evaluate it on every row
-    ratio = token_sort_ratio(
-        F.when(candidate, normalize_text(F.coalesce(F.col("text"), F.lit("")))),
-        F.when(candidate, normalize_text(F.coalesce(F.col("_t_text"), F.lit("")))),
-    )
-    ok = ratio == 100 if require_perfect_match else ratio >= fuzzy_threshold
+    ratio = gate_ratio(candidate, F.col("text"), F.col("_t_text"))
+    ok = passes_gate(ratio, fuzzy_threshold, require_perfect_match)
     return (
         j.withColumn("gate_ok", F.when(candidate, ok).otherwise(F.lit(True))).drop(
             "_t_text", "_t_hit"

@@ -521,3 +521,76 @@ def test_rp_ivf_planted_copy_recovered(spark):
     for qid, row in firsts.iterrows():
         assert row["vec_id"] == -qid - 1, (qid, row["vec_id"])
         assert row["score"] == 1.0
+
+
+@pytest.fixture(scope="module")
+def vec_df(spark):
+    # deterministic 'random' doubles incl. negatives and magnitudes
+    # spread over several orders — summation order matters for these
+    from pyspark.sql import functions as F
+
+    dim = 64
+    # id+1: id=0 would make va the zero vector and the cosine test a
+    # division by zero (ANSI mode) — the operators assume non-zero
+    # vectors, as does the real corpus
+    return spark.range(200).select(
+        F.col("id").alias("vec_id"),
+        F.array(
+            *[
+                (
+                    F.sin((F.col("id") + 1) * (i + 1) * 0.7) * (10.0 ** ((i % 7) - 3))
+                ).cast("double")
+                for i in range(dim)
+            ]
+        ).alias("va"),
+        F.array(
+            *[
+                (
+                    F.cos((F.col("id") + 1) * (i + 2) * 1.3) * (10.0 ** ((i % 5) - 2))
+                ).cast("double")
+                for i in range(dim)
+            ]
+        ).alias("vb"),
+    )
+
+
+def test_pair_cosine_matches_inline_cosine(spark, vec_df):
+    """Norm hoisting: scoring from a pair dot and two precomputed
+    per-row norms equals the single-expression ``_cosine`` reference
+    bit for bit (same values through the same multiply/divide/round)."""
+    from pyspark.sql import functions as F
+
+    from marc_data_migration_spark.operators.similarity_search import (
+        _cosine,
+        _dot,
+        _norm,
+        _pair_cosine,
+    )
+
+    out = vec_df.select(
+        _pair_cosine(
+            _dot(F.col("va"), F.col("vb")), _norm(F.col("va")), _norm(F.col("vb"))
+        ).alias("hoisted"),
+        _cosine(F.col("va"), F.col("vb")).alias("ref"),
+    ).collect()
+    assert len(out) == 200
+    for r in out:
+        assert r.hoisted == r.ref
+
+
+def test_as_double_cast_matches_transform(spark):
+    from pyspark.sql import functions as F
+
+    from marc_data_migration_spark.operators.similarity_search import _as_double
+
+    df = spark.range(50).select(
+        F.array(
+            *[(F.col("id") * (i + 1) / 7.0).cast("float") for i in range(8)]
+        ).alias("f")
+    )
+    out = df.select(
+        _as_double(F.col("f")).alias("cast_arr"),
+        F.transform(F.col("f"), lambda x: x.cast("double")).alias("hof_arr"),
+    ).collect()
+    for r in out:
+        assert r.cast_arr == r.hof_arr

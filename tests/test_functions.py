@@ -76,40 +76,6 @@ def test_similarity_udf_matches_python(spark):
     assert got == want
 
 
-def test_token_sort_ratio_presorted_matches_full_udf(spark):
-    """On token-sorted full_process output (what _tok_sort_col emits),
-    the presorted UDF variant must be bit-identical to the full one —
-    full_process is the identity there and the tokens are already in
-    sorted (ASCII) order."""
-    import random
-
-    from marc_data_migration_spark.functions.similarity import (
-        MAX_CMP_CHARS,
-        full_process,
-        token_sort_ratio_presorted,
-    )
-
-    rng = random.Random(13)
-    raw = [
-        " ".join(
-            rng.choice(["Quick", "brown-fox!", "a1", "ZZ9", "the,", "lazy.dog", ""])
-            for _ in range(rng.randrange(0, 60))
-        )
-        for _ in range(200)
-    ] + [None, "", "   ", "!!!"]
-
-    def tok_sort(s):
-        if s is None:
-            return None
-        return " ".join(sorted(full_process(s)[:MAX_CMP_CHARS].split()))
-
-    pairs = [(tok_sort(a), tok_sort(b)) for a, b in zip(raw, reversed(raw))]
-    df = spark.createDataFrame(pairs, "a string, b string")
-    fast = [r.r for r in df.select(token_sort_ratio_presorted("a", "b").alias("r")).collect()]
-    full = [r.r for r in df.select(token_sort_ratio("a", "b").alias("r")).collect()]
-    assert fast == full
-
-
 def test_normalize_text(spark):
     df = spark.createDataFrame([("The Quick, Brown-Fox: (jumps)!  over the dog",)], "t string")
     out = df.select(normalize_text("t").alias("n")).collect()[0].n
