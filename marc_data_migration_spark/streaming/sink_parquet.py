@@ -37,9 +37,11 @@ stages only the changed rows (a delta) and renames them into
 At 100 TB with n_buckets sized so a bucket ≈ a few GB, a copy-on-write
 batch that touches 1% of conversations rewrites ~1% of the table — the
 same I/O shape as an Iceberg copy-on-write MERGE with bucket
-partitioning. Schema evolution is additive: new columns appear on
-rewritten buckets; ``mergeSchema=true`` on read presents old buckets
-with nulls.
+partitioning. Schema evolution is additive: the table schema is stored
+in ``_table_properties.json`` next to the layout, a batch that brings
+new columns appends them there before its rows become visible, and
+every base and delta scan reads with the stored schema, so older files
+present the new columns as nulls.
 """
 
 from __future__ import annotations
@@ -51,10 +53,11 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.merge import MergeResult, apply_changes
 from ..plans.lineage import batch_lineage
-from ..schemas import KEY_COLS, TRANSCRIPTS_SCHEMA
+from ..schemas import KEY_COLS, LINEAGE_SCHEMA, TRANSCRIPTS_SCHEMA
 
 BUCKET_COL = "bucket"
 PROPS_FILE = "_table_properties.json"
@@ -68,11 +71,11 @@ def bucket_expr(n_buckets: int):
 
 
 def load_table_properties(path: str) -> dict | None:
-    """Persisted table-layout properties ({sink_mode, n_buckets}), or
-    None for a path that has never been written. Layout is a property of
-    the TABLE, not of the invocation — per-run CLI flags must not be
-    able to silently re-bucket the base or read a merge-on-read table
-    through the copy-on-write view (stale reads)."""
+    """Persisted table properties ({sink_mode, n_buckets, schema}), or
+    None for a path that has never been written. Layout and schema are
+    properties of the TABLE, not of the invocation — per-run CLI flags
+    must not be able to silently re-bucket the base or read a
+    merge-on-read table through the copy-on-write view (stale reads)."""
     p = os.path.join(path, PROPS_FILE)
     if not os.path.isfile(p):
         return None
@@ -86,21 +89,15 @@ def open_sink(
     sink_mode: str | None = None,
     n_buckets: int | None = None,
 ) -> "ParquetMergeSink":
-    """Open the sink for ``path`` using its persisted table properties.
-    Explicit arguments are validated against the persisted layout (a
-    mismatch raises — re-bucketing is a deliberate maintenance rewrite,
-    not a flag); for a brand-new table they set it (defaults cow/32)."""
-    props = load_table_properties(path)
-    if props is not None:
-        mode = props["sink_mode"]
-        if sink_mode is not None and sink_mode != mode:
-            raise ValueError(
-                f"table {path} was initialized with sink_mode={mode!r}; "
-                f"got --sink {sink_mode!r}. Reading a '{mode}' table through "
-                f"the '{sink_mode}' view would return stale/incorrect state."
-            )
-        sink_mode = mode  # n_buckets validated against props by __init__
-    cls = MorParquetMergeSink if (sink_mode or "cow") == "mor" else ParquetMergeSink
+    """Open the sink for ``path``: the class follows ``sink_mode``, else
+    the persisted table properties, else copy-on-write. The sink's
+    ``__init__`` validates explicit arguments against the persisted
+    properties (a mismatch raises — re-bucketing is a deliberate
+    maintenance rewrite, not a flag); for a brand-new table they set
+    them (defaults cow/32)."""
+    if sink_mode is None:
+        sink_mode = (load_table_properties(path) or {}).get("sink_mode", "cow")
+    cls = MorParquetMergeSink if sink_mode == "mor" else ParquetMergeSink
     return cls(spark, path, n_buckets=n_buckets)
 
 
@@ -115,82 +112,36 @@ class ParquetMergeSink:
         self.routed_path = os.path.join(path, "routed")
         self.bad_path = os.path.join(path, "bad")
         self.field_audit_path = os.path.join(path, "field_audit")
-        self.n_buckets = self._resolve_layout(n_buckets)
+        self.n_buckets, self.schema = self._resolve_layout(n_buckets)
         self._applied_ids: set[int] | None = None  # lazy ledger cache
         self._recover_compaction()
         self._recover_staging()
 
-    def _resolve_layout(self, n_buckets: int | None) -> int:
-        """Validate this sink against the table's persisted layout.
-        n_buckets is a TABLE property: the bucket directory layout and
-        the bucket filter in _read_buckets must agree, or base rows are
-        silently missed and the LSN idempotence guard is bypassed."""
+    def _resolve_layout(
+        self, n_buckets: int | None
+    ) -> tuple[int, T.StructType | None]:
+        """Validate this sink against the table's persisted properties and
+        return (n_buckets, schema); the schema is None for a path that is
+        not a table yet. n_buckets is a TABLE property: the bucket
+        directory layout and the bucket filter in _read_buckets must
+        agree, or base rows are silently missed and the LSN idempotence
+        guard is bypassed."""
         props = load_table_properties(self.path)
-        if props is None:
-            # A table that predates the props file: defaulting to 32
-            # over data actually bucketed differently would make
-            # _read_buckets miss base rows and silently bypass the LSN
-            # idempotence guard. The bucket=N directory set alone can't
-            # recover the layout either — a sparse table whose top
-            # buckets happen to be empty makes max+1 UNDER-count, and
-            # _persist_layout would then lock the wrong value in. But
-            # the bucket value is a pure function of conv_id
-            # (bucket_expr), so the write-time layout is VERIFIABLE
-            # from the data itself: one aggregate scan counts, per
-            # candidate count, the rows whose stored bucket disagrees
-            # with bucket_expr(candidate). Only the true layout scores
-            # zero on a non-trivial table.
-            observed = self._observed_max_bucket()
-            if observed is None:
-                return 32 if n_buckets is None else n_buckets
-            if n_buckets is not None and observed >= n_buckets:
+        if props is None or "schema" not in props:
+            if any(os.path.isdir(os.path.join(self.path, d)) for d in ("data", "delta")):
                 raise ValueError(
-                    f"table {self.path} has bucket directories up to "
-                    f"bucket={observed} but was opened with "
-                    f"n_buckets={n_buckets}; rows above the flag's "
-                    "range would be invisible to the merge."
+                    f"table {self.path} holds data but its {PROPS_FILE} is "
+                    "missing or has no schema; the table's schema and layout "
+                    "(sink_mode, n_buckets) cannot be read from anywhere else."
                 )
-            cands: list[int] = []
-            for n in ([n_buckets] if n_buckets is not None else []) + [
-                observed + 1,
-                32,
-            ]:
-                if n > observed and n not in cands:
-                    cands.append(n)
-            consistent = self._consistent_bucket_counts(cands)
-            if n_buckets is not None:
-                if n_buckets not in consistent:
-                    raise ValueError(
-                        f"table {self.path} has no {PROPS_FILE} and its rows "
-                        f"do not match n_buckets={n_buckets} "
-                        "(bucket != bucket_expr(conv_id) for some rows); "
-                        "the flag contradicts the write-time layout."
-                    )
-                return n_buckets
-            if len(consistent) == 1:
-                log.warning(
-                    "table %s has no %s; n_buckets=%d verified against the "
-                    "data (stored bucket == bucket_expr(conv_id) for every "
-                    "row; candidates tested: %s)",
-                    self.path, PROPS_FILE, consistent[0], cands,
-                )
-                return consistent[0]
-            if not consistent:
-                raise ValueError(
-                    f"table {self.path} has no {PROPS_FILE} and no candidate "
-                    f"bucket count in {cands} matches its rows; open with an "
-                    "explicit n_buckets matching the write-time layout."
-                )
-            raise ValueError(
-                f"table {self.path} has no {PROPS_FILE} and multiple bucket "
-                f"counts {consistent} are consistent with its (small) data; "
-                "open with an explicit n_buckets to disambiguate."
-            )
+            return (32 if n_buckets is None else n_buckets), None
         if props["sink_mode"] != self.SINK_MODE:
             raise ValueError(
                 f"table {self.path} has sink_mode={props['sink_mode']!r} but was "
-                f"opened as {type(self).__name__} ({self.SINK_MODE!r}); use "
-                f"open_sink() or the matching sink class."
+                f"opened as {self.SINK_MODE!r}. Reading a {props['sink_mode']!r} "
+                f"table through the {self.SINK_MODE!r} view would return "
+                "stale/incorrect state; open it with its own mode (open_sink() "
+                "detects it)."
             )
         if n_buckets is not None and n_buckets != props["n_buckets"]:
             raise ValueError(
@@ -198,43 +149,35 @@ class ParquetMergeSink:
                 f"got n_buckets={n_buckets}. Changing bucket count requires a "
                 f"full rewrite (init on a fresh path), not a flag."
             )
-        return props["n_buckets"]
+        return props["n_buckets"], T.StructType.fromJson(props["schema"])
 
-    def _observed_max_bucket(self) -> int | None:
-        """Highest bucket=N directory under data/, or None for a table
-        with no data yet."""
-        if not os.path.isdir(self.data_path):
-            return None
-        seen = [
-            int(name.split("=", 1)[1])
-            for name in os.listdir(self.data_path)
-            if name.startswith(f"{BUCKET_COL}=")
-        ]
-        return max(seen) if seen else None
-
-    def _consistent_bucket_counts(self, candidates: list[int]) -> list[int]:
-        """Candidates whose bucket_expr reproduces the STORED bucket of
-        every base row — one aggregate scan for all candidates (only
-        runs on the rare open of a legacy props-less table)."""
-        df = self.spark.read.parquet(self.data_path)
-        aggs = [
-            F.sum(
-                (F.col(BUCKET_COL) != bucket_expr(n)).cast("long")
-            ).alias(f"_m{i}")
-            for i, n in enumerate(candidates)
-        ]
-        row = df.agg(*aggs).first()
-        return [n for i, n in enumerate(candidates) if not row[f"_m{i}"]]
-
-    def _persist_layout(self) -> None:
-        """Record {sink_mode, n_buckets} at table create (idempotent)."""
-        if load_table_properties(self.path) is not None:
-            return
+    def _write_props(self, schema: T.StructType) -> None:
+        """Persist {sink_mode, n_buckets, schema} atomically (tmp file +
+        rename) and adopt ``schema`` as the table schema."""
         os.makedirs(self.path, exist_ok=True)
         tmp = os.path.join(self.path, PROPS_FILE + ".tmp")
+        props = {
+            "sink_mode": self.SINK_MODE,
+            "n_buckets": self.n_buckets,
+            "schema": schema.jsonValue(),
+        }
         with open(tmp, "w") as fh:
-            json.dump({"sink_mode": self.SINK_MODE, "n_buckets": self.n_buckets}, fh)
+            json.dump(props, fh)
         os.replace(tmp, os.path.join(self.path, PROPS_FILE))
+        self.schema = schema
+
+    def _widen_schema(self, schema: T.StructType) -> None:
+        """Additive evolution: append the fields of ``schema`` the table
+        does not store yet, in arrival order; stored fields keep their
+        order and type. apply_merge calls this before ``_stage``, so a
+        new column is stored before any row that has it can become
+        visible; files written earlier read it as null. Writes only for
+        a new table or a grown field set."""
+        stored = self.schema.fields if self.schema is not None else []
+        known = {f.name for f in stored}
+        new = [f for f in schema.fields if f.name not in known]
+        if self.schema is None or new:
+            self._write_props(T.StructType(stored + new))
 
     # -- target state ---------------------------------------------------
     def exists(self) -> bool:
@@ -243,7 +186,7 @@ class ParquetMergeSink:
         )
 
     def init(self, base: DataFrame) -> None:
-        self._persist_layout()
+        self._write_props(base.schema)
         self._write_bucketed(base, self.data_path, self.n_buckets)
 
     def _write_bucketed(self, df: DataFrame, path: str, n_parts: int) -> None:
@@ -265,17 +208,21 @@ class ParquetMergeSink:
         )
 
     def read(self) -> DataFrame:
-        if not self.exists():  # fully-deleted table
-            return self.spark.createDataFrame([], TRANSCRIPTS_SCHEMA)
+        if not self.exists():  # fully-deleted (or never-written) table
+            schema = TRANSCRIPTS_SCHEMA if self.schema is None else self.schema
+            return self.spark.createDataFrame([], schema)
         return self._read_buckets(None)
 
     def _read_buckets(self, buckets: list[int] | None) -> DataFrame:
         """Current state of ``buckets`` (None = all) of an existing table."""
-        return self._scan(self.data_path, buckets)
+        return self._scan(self.data_path, buckets, self.schema)
 
-    def _scan(self, path: str, buckets: list[int] | None) -> DataFrame:
-        """Rows of the bucketed directory ``path``, pruned to ``buckets``."""
-        df = self.spark.read.option("mergeSchema", "true").parquet(path)
+    def _scan(
+        self, path: str, buckets: list[int] | None, schema: T.StructType
+    ) -> DataFrame:
+        """Rows of the bucketed directory ``path`` read with ``schema``
+        (Spark appends the partition columns), pruned to ``buckets``."""
+        df = self.spark.read.schema(schema).parquet(path)
         if buckets is not None:
             df = df.filter(F.col(BUCKET_COL).isin(buckets))
         return df.drop(BUCKET_COL)
@@ -291,7 +238,7 @@ class ParquetMergeSink:
                 self._applied_ids = set()
             else:
                 rows = (
-                    self.spark.read.parquet(self.lineage_path)
+                    self.lineage()
                     .select("batch_id")
                     .distinct()
                     .collect()
@@ -341,7 +288,6 @@ class ParquetMergeSink:
             # exactly like init-time recovery would.
             self._publish(batch_id)
             return None
-        self._persist_layout()  # streams onto an un-init'd path create the table
         self._maintain()
         batch_df, touched = self._prepare_batch(batch_df)
         res = None
@@ -357,6 +303,8 @@ class ParquetMergeSink:
                 field_audit=(audit == "fields"),
                 **merge_opts,
             )
+            # a stream onto an un-init'd path creates the table here
+            self._widen_schema(res.final.schema)
             self._stage(res, touched, batch_id)
             self._commit_lineage_and_audits(res, batch_id, audit)
             self._publish(batch_id)
@@ -479,9 +427,7 @@ class ParquetMergeSink:
         return empty.select(*KEY_COLS, *[c for c in empty.columns if c not in KEY_COLS])
 
     def lineage(self) -> DataFrame:
-        # mergeSchema: lakes written before rows_quarantined existed mix
-        # lineage schemas within one directory
-        return self.spark.read.option("mergeSchema", "true").parquet(self.lineage_path)
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.lineage_path)
 
     def routed(self) -> DataFrame:
         return self.spark.read.parquet(self.routed_path)
@@ -509,9 +455,10 @@ class ParquetMergeSink:
             before[name] = len(files)
             if len(files) <= target_files:
                 continue
-            # mergeSchema: the table may mix files written before a
-            # lineage-schema addition — sampling one old footer would
-            # otherwise silently drop the newer columns
+            # mergeSchema: ``bad`` stores raw feed rows (split_bad keeps
+            # every feed column), so only its files from evolved batches
+            # carry tool_meta — sampling one old footer would silently
+            # drop that column and its values
             compacted = self.spark.read.option("mergeSchema", "true").parquet(path)
             self._swap_dir(
                 path, compacted.coalesce(target_files).write.mode("overwrite").parquet
@@ -652,19 +599,22 @@ class MorParquetMergeSink(ParquetMergeSink):
         parts = []
         if super().exists():
             parts.append(
-                self._scan(self.data_path, buckets)
+                self._scan(self.data_path, buckets, self.schema)
                 .withColumn("_op", F.lit("U"))
                 .withColumn("_seq", F.lit(-1).cast("long"))
             )
         if self._has_deltas():
+            delta_schema = T.StructType(
+                [*self.schema.fields, T.StructField("_op", T.StringType())]
+            )
             parts.append(
-                self._scan(self.delta_path, buckets)
+                self._scan(self.delta_path, buckets, delta_schema)
                 .withColumn("_seq", F.col("batch_id").cast("long"))
                 .drop("batch_id")
             )
         view = parts[0]
         for p in parts[1:]:
-            view = view.unionByName(p, allowMissingColumns=True)
+            view = view.unionByName(p)
         w = Window.partitionBy(*KEY_COLS).orderBy(
             F.col("_seq").desc(), F.col("lsn").desc()
         )

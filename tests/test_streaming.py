@@ -275,6 +275,41 @@ def test_compact_audit_preserves_content(spark, tmp_path):
     assert fresh.apply_merge(spark.createDataFrame(chunks[0]), batch_id=0) is None
 
 
+def test_compact_audit_keeps_evolved_bad_columns(spark, tmp_path):
+    """``bad`` stores raw feed rows, so only its files from evolved
+    batches carry tool_meta: compacting the mixed files must keep the
+    column and every non-null value."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    base_pd = feedgen.gen_transcripts(n_convs=20, seed=31)
+    ch_pd = feedgen.gen_changes("evolve", n_events=400, n_convs=20, seed=31)
+    ch_pd = ch_pd.sort_values("lsn").reset_index(drop=True)
+    half = len(ch_pd) // 2
+    ch_pd.loc[: half - 1, "tool_meta"] = None
+    ch_pd.loc[::25, "conv_id"] = None  # null-key rows in both halves
+    v1 = ch_pd.iloc[:half].drop(columns=["tool_meta"])
+    v2 = ch_pd.iloc[half:].reset_index(drop=True)
+    want_meta = sorted(v2.loc[v2.conv_id.isna(), "tool_meta"].dropna())
+    assert want_meta and v1.conv_id.isna().any()
+
+    sink = ParquetMergeSink(spark, str(tmp_path / "target"), n_buckets=8)
+    sink.init(spark.createDataFrame(base_pd))
+    feed, ckpt = str(tmp_path / "feed"), str(tmp_path / "ckpt")
+    stage_feed_chunks(_chunks(v1, 2), feed)
+    run_stream(spark, feed, sink, ckpt)
+    stage_feed_chunks(_chunks(v2, 2), feed, start_at=2)
+    run_stream(spark, feed, sink, ckpt, evolved=True)
+
+    assert sink.compact_audit(target_files=1)["bad"] > 1
+    assert len([f for f in os.listdir(sink.bad_path) if f.endswith(".parquet")]) == 1
+    bad = spark.read.parquet(sink.bad_path)
+    assert "tool_meta" in bad.columns
+    got_meta = [r.tool_meta for r in bad.filter(F.col("tool_meta").isNotNull()).collect()]
+    assert sorted(got_meta) == want_meta
+
+
 def test_parse_wal_json_roundtrip(spark):
     """The Kafka-transport JSON parse recovers every CHANGES_SCHEMA
     field (and the evolved column) exactly; malformed payloads become

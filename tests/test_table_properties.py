@@ -1,12 +1,13 @@
 """Table-layout properties + partial-failure retry semantics.
 
-Sink mode (cow/mor) and bucket count are properties of the TABLE, not
-of the invocation: they are persisted at init in
+Sink mode (cow/mor), bucket count and schema are properties of the
+TABLE, not of the invocation: they are persisted at init in
 ``_table_properties.json`` and validated on every open. Reading a
 merge-on-read table through the copy-on-write view silently ignores
 every delta file; opening with a different bucket count makes
 ``_read_buckets`` miss base rows and bypasses the LSN idempotence
-guard — both must raise, never proceed.
+guard — both must raise, never proceed. A path that holds data but no
+props file cannot be opened at all.
 
 Also covers the in-memory ledger-cache reconciliation: the cache is
 updated at the ledger (lineage) append, not at the end of apply_merge,
@@ -18,18 +19,21 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
 from marc_data_migration_spark import feedgen, oracle
-from marc_data_migration_spark.schemas import KEY_COLS
+from marc_data_migration_spark.schemas import CHANGES_SCHEMA, KEY_COLS
 from marc_data_migration_spark.streaming.sink_parquet import (
     MorParquetMergeSink,
     ParquetMergeSink,
     load_table_properties,
     open_sink,
 )
+from marc_data_migration_spark.streaming.stream import run_stream, stage_feed_chunks
 
 
 def _init_sink(spark, tmp_path, cls=ParquetMergeSink, n_buckets=8, seed=7):
@@ -47,7 +51,8 @@ def _final_text(df):
 def test_init_persists_layout_and_open_sink_autodetects(spark, tmp_path):
     _, sink = _init_sink(spark, tmp_path, cls=MorParquetMergeSink, n_buckets=8)
     props = load_table_properties(sink.path)
-    assert props == {"sink_mode": "mor", "n_buckets": 8}
+    assert (props["sink_mode"], props["n_buckets"]) == ("mor", 8)
+    assert [f["name"] for f in props["schema"]["fields"]] == sink.read().columns
     # no flags at all: open_sink must come back as the MoR view with the
     # persisted bucket count (a cow view here would hide every delta)
     reopened = open_sink(spark, sink.path)
@@ -79,7 +84,9 @@ def test_uninitialized_stream_persists_layout(spark, tmp_path):
     sink = MorParquetMergeSink(spark, str(tmp_path / "fresh"), n_buckets=4)
     ch_pd = feedgen.gen_changes("upsert", n_events=100, n_convs=10, seed=1)
     sink.apply_merge(spark.createDataFrame(ch_pd), batch_id=0)
-    assert load_table_properties(sink.path) == {"sink_mode": "mor", "n_buckets": 4}
+    props = load_table_properties(sink.path)
+    assert (props["sink_mode"], props["n_buckets"]) == ("mor", 4)
+    assert [f["name"] for f in props["schema"]["fields"]] == sink.read().columns
 
 
 def test_cow_same_object_retry_after_audit_failure(spark, tmp_path, monkeypatch):
@@ -166,31 +173,89 @@ def test_mor_same_object_retry_publishes_staged_delta(spark, tmp_path, monkeypat
     )
 
 
-def test_legacy_table_bucket_count_verified_from_data(spark, tmp_path):
-    """A table that predates the props file: the bucket count is
-    VERIFIED against the data (stored bucket == bucket_expr(conv_id)
-    per candidate), not guessed from the directory names — a sparse
-    table whose top buckets happen to be empty would make max+1
-    under-count and permanently lock the wrong layout in."""
-    # dense case: 4 buckets, all materialized → unique verified answer 4
+def test_missing_props_raises(spark, tmp_path):
+    """The props file is the only source of schema and layout: a path
+    that holds data without it cannot be opened, through either door."""
     _, sink = _init_sink(spark, tmp_path, cls=ParquetMergeSink, n_buckets=4)
     os.remove(os.path.join(sink.path, "_table_properties.json"))
-    reopened = ParquetMergeSink(spark, sink.path)
-    assert reopened.n_buckets == 4
+    with pytest.raises(ValueError, match="_table_properties.json"):
+        ParquetMergeSink(spark, sink.path)
+    with pytest.raises(ValueError, match="_table_properties.json"):
+        open_sink(spark, sink.path)
 
-    # sparse case: 32 buckets but only 20 convs → top buckets likely
-    # empty; the verified inference must still answer 32, never max+1
-    base_pd = feedgen.gen_transcripts(n_convs=20, seed=11)
-    sparse = ParquetMergeSink(spark, str(tmp_path / "sparse"), n_buckets=32)
-    sparse.init(spark.createDataFrame(base_pd))
-    observed = sparse._observed_max_bucket()
-    os.remove(os.path.join(sparse.path, "_table_properties.json"))
-    reopened = ParquetMergeSink(spark, str(tmp_path / "sparse"))
-    assert reopened.n_buckets == 32
-    assert observed is not None  # sanity: there was data to verify
 
-    # a contradicted explicit flag raises instead of proceeding
-    # (props still absent: opening never re-persists them — only a
-    # merge/init does, via _persist_layout)
-    with pytest.raises(ValueError, match="contradicts|bucket"):
-        ParquetMergeSink(spark, str(tmp_path / "sparse"), n_buckets=64)
+def test_read_of_fully_deleted_table_keeps_stored_schema(spark, tmp_path):
+    """Deleting every row leaves no data file to read a schema from; the
+    empty read must still carry the evolved column the table stores."""
+    _, sink = _init_sink(spark, tmp_path, cls=ParquetMergeSink, seed=5)
+    evolve = feedgen.gen_changes("evolve", n_events=100, n_convs=20, seed=5)
+    sink.apply_merge(spark.createDataFrame(evolve), batch_id=0)
+    assert "tool_meta" in sink.read().columns
+    keys = sink.read().select(*KEY_COLS).collect()
+    lsn0 = int(evolve.lsn.max()) + 1
+    deletes = [
+        ("D", lsn0 + i, None, k.conv_id, k.turn_idx, None, None, None, None)
+        for i, k in enumerate(keys)
+    ]
+    sink.apply_merge(spark.createDataFrame(deletes, CHANGES_SCHEMA), batch_id=1)
+    assert not sink.exists()
+    got = sink.read()
+    assert got.count() == 0
+    assert "tool_meta" in got.columns
+
+
+@pytest.mark.parametrize("cls", [ParquetMergeSink, MorParquetMergeSink])
+def test_crash_between_schema_widening_and_publish(spark, tmp_path, monkeypatch, cls):
+    """The first v2 batch widens the stored schema, then dies in _stage:
+    the props already list tool_meta while no row has it. A new sink
+    object over the same table, re-running the stream on the same
+    checkpoint, must converge to the oracle replay and store tool_meta
+    once."""
+    base_pd = feedgen.gen_transcripts(n_convs=20, seed=17)
+    ch_pd = feedgen.gen_changes("evolve", n_events=400, n_convs=20, seed=17)
+    ch_pd = ch_pd.sort_values("lsn").reset_index(drop=True)
+    half = len(ch_pd) // 2
+    ch_pd.loc[: half - 1, "tool_meta"] = None
+    v1 = ch_pd.iloc[:half].drop(columns=["tool_meta"])
+    v2 = ch_pd.iloc[half:].reset_index(drop=True)
+    chunks = [g.reset_index(drop=True) for g in np.array_split(v1, 2)] + [
+        g.reset_index(drop=True) for g in np.array_split(v2, 2)
+    ]
+
+    sink = cls(spark, str(tmp_path / "target"), n_buckets=8)
+    sink.init(spark.createDataFrame(base_pd))
+    feed, ckpt = str(tmp_path / "feed"), str(tmp_path / "ckpt")
+    stage_feed_chunks(chunks[:2], feed)
+    run_stream(spark, feed, sink, ckpt)
+
+    real_stage = cls._stage
+    crashed = []
+
+    def crashing_stage(self, res, touched, batch_id):
+        if not crashed and "tool_meta" in res.final.columns:
+            stored = load_table_properties(self.path)["schema"]["fields"]
+            crashed.append([f["name"] for f in stored])
+            raise RuntimeError("injected crash after schema widening")
+        return real_stage(self, res, touched, batch_id)
+
+    monkeypatch.setattr(cls, "_stage", crashing_stage)
+    stage_feed_chunks(chunks[2:], feed, start_at=2)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        run_stream(spark, feed, sink, ckpt, evolved=True)
+    assert crashed and "tool_meta" in crashed[0]
+
+    # process restart: a new sink object over the widened props
+    reopened = cls(spark, sink.path, n_buckets=8)
+    run_stream(spark, feed, reopened, ckpt, evolved=True)
+
+    want = base_pd
+    for chunk in chunks:
+        want = oracle.replay(want, chunk)
+    want = want.sort_values(KEY_COLS).reset_index(drop=True)
+    got = reopened.read().orderBy(*KEY_COLS).toPandas()
+    assert list(zip(got.conv_id, got.turn_idx, got.text.fillna("<N>"), got.lsn)) == list(
+        zip(want.conv_id, want.turn_idx, want.text.fillna("<N>"), want.lsn)
+    )
+    assert list(got.tool_meta.fillna("<N>")) == list(want.tool_meta.fillna("<N>"))
+    stored = [f["name"] for f in load_table_properties(sink.path)["schema"]["fields"]]
+    assert stored.count("tool_meta") == 1
