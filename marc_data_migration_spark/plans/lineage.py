@@ -14,11 +14,17 @@ from pyspark.sql import functions as F
 
 
 def batch_lineage(
-    routed: DataFrame, batch_id: int, n_partitions: int = 8, n_bad: int = 0
+    routed: DataFrame,
+    batch_id: int,
+    n_partitions: int = 8,
+    bad: DataFrame | None = None,
 ) -> DataFrame:
     """Aggregate a batch's routed outcomes into lineage rows, one per
-    key-hash partition (per-partition applied LSN ranges — north_rule).
-    A single shuffle: groupBy(partition_id) with conditional aggs."""
+    key-hash partition (per-partition applied LSN ranges — north_rule),
+    plus one summary row counting ``bad`` (the quarantined changes; None
+    counts 0). One plan: groupBy(partition_id) with conditional aggs,
+    unioned with a global count over ``bad``, so a single action yields
+    the whole ledger record."""
     by_part = routed.withColumn(
         "partition_id", F.pmod(F.xxhash64("conv_id"), F.lit(n_partitions)).cast("int")
     )
@@ -55,16 +61,12 @@ def batch_lineage(
     # quarantine count and guarantees a ledger entry even for a batch
     # whose every row was quarantined (routed empty -> no per-partition
     # rows -> without this the replay guard would re-append bad rows).
-    # range + lits, NOT createDataFrame([row]): createDataFrame over
-    # Python rows parallelizes into defaultParallelism pickled
-    # partitions, and the commit's single-file write then paid one
-    # Python-runner evaluation per partition — ~4.6 s per batch for
-    # this one literal row (decomposed A/B in BENCH/BASELINE.md r05).
-    # numPartitions=1 is explicit: a bare range(1) still has
-    # defaultParallelism (empty) partitions, which would schedule ~32
-    # no-op tasks into the commit write.
-    spark = routed.sparkSession
-    summary = spark.range(0, 1, 1, 1).select(
+    # A global aggregate always yields exactly one row, and it stays in
+    # the JVM: never createDataFrame over Python rows, whose pickled
+    # partitions cost ~4.6 s per batch through the Python runner for one
+    # literal row (decomposed A/B in BENCH/BASELINE.md r05).
+    counted = bad if bad is not None else routed.limit(0)
+    summary = counted.agg(F.count(F.lit(1)).alias("rows_quarantined")).select(
         F.lit(int(batch_id)).cast("long").alias("batch_id"),
         F.lit(-1).cast("int").alias("partition_id"),
         F.lit(None).cast("long").alias("lsn_min"),
@@ -74,7 +76,7 @@ def batch_lineage(
         F.lit(0).cast("long").alias("rows_updated"),
         F.lit(0).cast("long").alias("rows_deleted"),
         F.lit(0).cast("long").alias("conflict_count"),
-        F.lit(int(n_bad)).cast("long").alias("rows_quarantined"),
+        "rows_quarantined",
         F.current_timestamp().alias("commit_ts"),
     )
     return per_part.unionByName(summary)

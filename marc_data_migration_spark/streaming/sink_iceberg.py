@@ -194,5 +194,5 @@ class IcebergMergeSink:
                 F.lit(0).alias("conflict"),
             ),
             batch_id,
-            n_bad=bad.count(),
+            bad=bad,
         ).write.mode("append").saveAsTable(lineage_tbl)

@@ -23,16 +23,27 @@ Scale design: the target table is hash-bucketed on conv_id into
    slice;
 5. ``_stage`` writes the sink's rows for the batch, bucketed, to a
    per-batch staging directory;
-6. ``_commit_lineage_and_audits`` appends the lineage rows — THE ledger
-   commit — and then the routed, bad and field-audit rows;
-7. ``_publish`` makes the staged rows visible.
+6. ``_commit_lineage_and_audits`` stages the routed, bad and field-audit
+   rows in ``_audit_staging_batch_<id>`` while it collects the batch's
+   lineage rows (one Spark action), then writes them on the driver as
+   ``lineage/batch-<id>.parquet`` — tmp file + rename, THE ledger commit;
+7. ``_publish`` renames the staged rows into their tables.
+
+A crash before the ledger rename replays the batch; a crash after it
+is rolled forward by ``_publish`` (same-object retry) or by init-time
+recovery, so the data and audit tables see each batch exactly once.
+(A copy-on-write crash between its bucket swap and the ledger replays
+the swapped buckets' changes as ``stale``: their LSNs are already
+applied, so the audit rows record that route.)
 
 The sinks differ only in what step 5 writes and when readers see it.
 Copy-on-write stages the new version of every touched bucket and swaps
 those bucket directories into ``data/`` inside ``_stage``, BEFORE the
-ledger commit; its ``_publish`` has nothing left to do. Merge-on-read
+ledger commit; its ``_publish`` moves only the audits. Merge-on-read
 stages only the changed rows (a delta) and renames them into
-``delta/`` in ``_publish``, AFTER the ledger commit.
+``delta/`` in ``_publish``, after the audits, AFTER the ledger commit.
+The ledger file is written by the driver, so the driver must reach the
+table's filesystem — the bucket swaps already require that.
 
 At 100 TB with n_buckets sized so a bucket ≈ a few GB, a copy-on-write
 batch that touches 1% of conversations rewrites ~1% of the table — the
@@ -47,13 +58,17 @@ present the new columns as nulls.
 from __future__ import annotations
 
 import json
-import logging
 import os
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..operators.merge import MergeResult, apply_changes
 from ..plans.lineage import batch_lineage
@@ -62,8 +77,6 @@ from ..schemas import KEY_COLS, LINEAGE_SCHEMA, TRANSCRIPTS_SCHEMA
 BUCKET_COL = "bucket"
 PROPS_FILE = "_table_properties.json"
 AUDIT_TABLES = ("lineage", "routed", "bad", "field_audit")
-
-log = logging.getLogger(__name__)
 
 
 def bucket_expr(n_buckets: int):
@@ -266,22 +279,15 @@ class ParquetMergeSink:
         (reference fields-audit log, record_update.py:626-641) — the
         most detailed and most expensive mode; "lineage" writes only the
         aggregated lineage ledger (always on — it is the exactly-once
-        guard and the north_rule metrics table). The full audit costs
-        ~25% of batch wall time (BENCH/BASELINE.md component profile);
-        at maximum-throughput tailing it is the first thing to shed."""
+        guard and the north_rule metrics table). The whole commit tail,
+        audit writes staged alongside the ledger collect, measured about
+        a fifth of apply_merge on cdcbench's workloads (4 CPUs: 0.17–0.21
+        s of 0.78–0.99 s with "full", 0.23–0.34 s of 1.48–1.96 s with
+        "fields"); "lineage" cut the tail by 0.05 s and 0.15 s. At
+        maximum-throughput tailing the audit is the first thing to shed."""
         if audit not in ("fields", "full", "lineage"):
             raise ValueError(f"unknown audit mode: {audit}")
         if batch_id in self._ledger():
-            # Visible marker for the documented commit-order trade: if
-            # the previous attempt died between the ledger commit and
-            # the audit appends, this skip is where that batch's audit
-            # rows are permanently lost — operators grep for it.
-            log.warning(
-                "batch_id=%s already in ledger for %s — skipping replay "
-                "(audit rows for this batch may be absent if the prior "
-                "attempt failed between ledger commit and audit append)",
-                batch_id, self.path,
-            )
             # A same-object retry after a failure between the ledger
             # commit and the publish: the staged rows are complete (they
             # are staged before the ledger), so roll them forward here
@@ -351,8 +357,21 @@ class ParquetMergeSink:
         shutil.rmtree(trash_dir, ignore_errors=True)
 
     def _publish(self, batch_id: int) -> None:
-        """Make a ledgered batch's staged rows visible; copy-on-write
-        already swapped them in during ``_stage``."""
+        """Make a ledgered batch's staged audit rows visible: move each
+        staged file into its table directory, then drop the staging
+        directory. Spark part-file names are unique per write, so a
+        publish cut short resumes where it stopped. Copy-on-write data
+        was already swapped in during ``_stage``."""
+        staging = self._audit_staging(batch_id)
+        if not os.path.isdir(staging):
+            return
+        for table in sorted(os.listdir(staging)):
+            src, dst = os.path.join(staging, table), os.path.join(self.path, table)
+            os.makedirs(dst, exist_ok=True)
+            for name in sorted(os.listdir(src)):
+                if name.endswith(".parquet"):
+                    os.replace(os.path.join(src, name), os.path.join(dst, name))
+        shutil.rmtree(staging, ignore_errors=True)
 
     def _prepare_batch(self, batch_df: DataFrame) -> tuple[DataFrame, list[int]]:
         """Shared pre-merge setup: key-repartition a thin micro-batch
@@ -372,54 +391,58 @@ class ParquetMergeSink:
         return batch_df, touched
 
     def _commit_lineage_and_audits(self, res: MergeResult, batch_id: int, audit: str) -> None:
-        """Shared commit tail for both sinks. The lineage append IS the
-        ledger commit (exactly-once guard), so it precedes the audit
-        appends: a crash between them loses that batch's audit rows (the
-        batch will NOT replay), but a replayed batch can never append
-        audit rows twice — duplication silently corrupts every
-        per-change count downstream, loss is visible in the ledger.
-        Appends coalesce to few files: they project from the join cache
-        the staging write already materialized, and a long-lived stream
+        """Shared commit tail for both sinks: stage the audit outputs while
+        the ledger record is collected, then commit the batch by writing
+        its ledger file. Each audit write runs in its own thread (one
+        Spark job each, projecting from the join cache the staging write
+        already materialized), so the commit waits for the slowest write,
+        not their sum. A failure here precedes the ledger: the batch
+        replays and re-stages. The staged audits become visible only in
+        ``_publish``, after the ledger, so every audit row lands exactly
+        once. The writes coalesce to few files: a long-lived stream
         otherwise accretes shuffle-partition-count tiny files per batch
         (measured 4.5× on the routed append)."""
-        n_bad = res.bad.count()
-        lineage = batch_lineage(
-            res.routed, batch_id, n_partitions=self.n_buckets, n_bad=n_bad
-        )
-        # repartition(1), NOT coalesce(1) — measured 7.2 s vs 0.9 s per
-        # 500k-event batch for this ~33-row write. Decomposed (BENCH/
-        # BASELINE.md r05): the dominant cost was the summary row's
-        # createDataFrame Python partitions evaluated sequentially in
-        # the coalesced task (~4.6 s; since fixed at the source —
-        # batch_lineage builds the summary JVM-side via range(1)), plus
-        # coalesce propagating the 1-partition constraint below the
-        # final agg's exchange so the partial agg scanned the cached
-        # join in one task (~1.7 s). repartition keeps both parallel
-        # while still committing one lineage file per batch.
-        lineage.repartition(1).write.mode("append").parquet(self.lineage_path)
-        # The lineage append IS the commit — reconcile the in-memory
-        # ledger cache NOW, not at the end of apply_merge: if an audit
-        # append below raises and the stream retries the batch on this
-        # same sink object, a stale cache would replay the whole tail
-        # and append lineage + audit rows a second time.
+        staging = self._audit_staging(batch_id)
+        shutil.rmtree(staging, ignore_errors=True)  # left by a failed attempt
+
+        def stage(name: str, df: DataFrame) -> None:
+            df.coalesce(8).withColumn("batch_id", F.lit(batch_id)).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(staging, name))
+
+        with ThreadPoolExecutor(max_workers=3) as pool:
+
+            def submit(name: str, df: DataFrame):
+                # wrapped here, per output: each wrapper copies this
+                # thread's local properties (the caller's job group) at
+                # wrap time, into a copy of its own
+                return pool.submit(inheritable_thread_target(self.spark)(stage), name, df)
+
+            pending = []
+            if audit in ("full", "fields"):
+                pending.append(submit("routed", res.routed))
+            if audit == "fields" and res.field_diffs is not None:
+                pending.append(submit("field_audit", res.field_diffs))
+            # one action: the per-partition aggregate and the bad count
+            ledger = batch_lineage(
+                res.routed, batch_id, n_partitions=self.n_buckets, bad=res.bad
+            ).toArrow()
+            if audit != "lineage" and pc.sum(ledger["rows_quarantined"]).as_py():
+                pending.append(submit("bad", res.bad))
+        for f in pending:
+            f.result()
+        # THE commit: one driver-written file, made visible by one rename
+        os.makedirs(self.lineage_path, exist_ok=True)
+        tmp = os.path.join(self.lineage_path, f".batch-{batch_id}.parquet.tmp")
+        pq.write_table(ledger.cast(to_arrow_schema(LINEAGE_SCHEMA)), tmp)
+        os.replace(tmp, os.path.join(self.lineage_path, f"batch-{batch_id}.parquet"))
+        # reconcile the in-memory ledger cache NOW: if the publish raises
+        # and the stream retries the batch on this same sink object, the
+        # retry must take the replay branch, which finishes the publish
         self._ledger().add(batch_id)
-        if audit in ("full", "fields"):
-            (
-                res.routed.coalesce(8)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("append")
-                .parquet(self.routed_path)
-            )
-            if n_bad:
-                res.bad.coalesce(8).withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(self.bad_path)
-        if audit == "fields" and res.field_diffs is not None:
-            # projects from the persisted join — no merge re-execution
-            (
-                res.field_diffs.coalesce(8)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("append")
-                .parquet(self.field_audit_path)
-            )
+
+    def _audit_staging(self, batch_id: int) -> str:
+        return os.path.join(self.path, f"_audit_staging_batch_{batch_id}")
 
     def _empty_base(self, batch_df: DataFrame) -> DataFrame:
         payload = [c for c in batch_df.columns if c not in ("op", "lsn", "commit_ts")]
@@ -494,14 +517,21 @@ class ParquetMergeSink:
             shutil.rmtree(trash, ignore_errors=True)
 
     def _recover_staging(self) -> None:
-        """Crash recovery for apply_merge's bucket swap. A kill mid-swap
-        leaves some buckets moved aside into ``_trash_batch_*`` with (a)
-        their replacement already in place — keep it, the un-ledgered
-        replay converges via the LSN guard — or (b) no replacement —
-        restore the original so the replay sees the pre-merge base
-        (otherwise its non-batch rows would be permanently lost).
-        Incomplete ``_staging_batch_*`` writes are discarded; the replay
-        rewrites them."""
+        """Crash recovery for apply_merge's bucket swap and audit publish.
+        A kill mid-swap leaves some buckets moved aside into
+        ``_trash_batch_*`` with (a) their replacement already in place —
+        keep it, the un-ledgered replay converges via the LSN guard — or
+        (b) no replacement — restore the original so the replay sees the
+        pre-merge base (otherwise its non-batch rows would be permanently
+        lost). Incomplete ``_staging_batch_*`` writes are discarded; the
+        replay rewrites them. Staged audits of a ledgered batch are
+        published (rolled forward), those of an un-ledgered one deleted
+        (the replay re-stages them), and an unrenamed ledger tmp file is
+        removed."""
+        if os.path.isdir(self.lineage_path):
+            for name in os.listdir(self.lineage_path):
+                if name.startswith(".") and name.endswith(".tmp"):
+                    os.remove(os.path.join(self.lineage_path, name))
         for name in os.listdir(self.path) if os.path.isdir(self.path) else []:
             full = os.path.join(self.path, name)
             if name.startswith("_trash_batch_") and os.path.isdir(full):
@@ -515,6 +545,13 @@ class ParquetMergeSink:
                 shutil.rmtree(full, ignore_errors=True)
             elif name.startswith("_staging_batch_") and os.path.isdir(full):
                 shutil.rmtree(full, ignore_errors=True)
+            elif name.startswith("_audit_staging_batch_") and os.path.isdir(full):
+                bid = int(name.rsplit("_", 1)[1])
+                if bid in self._ledger():
+                    # the base publish: a subclass recovers its own staging
+                    ParquetMergeSink._publish(self, bid)
+                else:
+                    shutil.rmtree(full, ignore_errors=True)
 
 
 class MorParquetMergeSink(ParquetMergeSink):
@@ -534,15 +571,15 @@ class MorParquetMergeSink(ParquetMergeSink):
 
     Commit protocol per batch — the shared ``apply_merge`` skeleton
     with this sink's hooks: ``_stage`` writes the delta to
-    ``_delta_staging_batch_<id>`` → lineage append (THE ledger commit)
-    → audits → ``_publish`` renames it into delta/, AFTER the ledger.
-    A crash before the ledger replays the batch (staged dir is
-    invisible and gets rewritten, no audit rows written yet → no
-    duplicates); a crash after the ledger is rolled FORWARD by
-    init-time recovery, or by ``_publish`` on a same-object retry (the
-    staged delta is complete by construction) — audit rows of that
-    batch may be lost but never doubled, the same contract as the
-    copy-on-write sink.
+    ``_delta_staging_batch_<id>`` → audits staged ∥ lineage collected →
+    ledger file renamed into lineage/ (THE commit) → ``_publish`` renames
+    the staged audits into their tables and the delta into delta/,
+    AFTER the ledger. A crash before the ledger replays the batch (the
+    staged dirs are invisible and get rewritten); a crash after it is
+    rolled FORWARD by init-time recovery, or by ``_publish`` on a
+    same-object retry (everything staged is complete by construction).
+    Data, delta and audit rows therefore land exactly once, the same
+    contract as the copy-on-write sink.
     """
 
     SINK_MODE = "mor"
@@ -644,6 +681,8 @@ class MorParquetMergeSink(ParquetMergeSink):
         self._write_bucketed(res.delta, staging, max(len(touched), 1))
 
     def _publish(self, batch_id: int) -> None:
+        """Publish the staged audits, then the staged delta."""
+        super()._publish(batch_id)
         staged = os.path.join(self.path, f"_delta_staging_batch_{batch_id}")
         if os.path.isdir(staged):
             self._publish_delta(staged, batch_id)

@@ -125,8 +125,8 @@ def test_quarantine_count_in_lineage(spark, tmp_path):
 
 
 def test_lineage_plan_is_jvm_side(spark):
-    """The batch_lineage summary row must stay a JVM LocalRelation
-    (range(1) + lits), never a createDataFrame over Python rows: the
+    """The batch_lineage summary row must stay JVM-side (a global count
+    over ``bad`` + lits), never a createDataFrame over Python rows: the
     latter parallelizes into defaultParallelism pickled partitions and
     a single-partition commit evaluates them through the Python runner
     sequentially (~4.6 s per batch for one literal row — the r05
@@ -144,10 +144,11 @@ def test_lineage_plan_is_jvm_side(spark):
         F.lit("updated").alias("route"),
         F.lit(0).alias("conflict"),
     )
-    lin = batch_lineage(routed, 7, n_partitions=8, n_bad=3)
+    bad = spark.range(3).select(F.lit(None).cast("string").alias("conv_id"))
+    lin = batch_lineage(routed, 7, n_partitions=8, bad=bad)
     plan = lin._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" not in plan
-    # and the row itself is right: one -1 summary row carrying n_bad
+    # and the row itself is right: one -1 summary row counting bad
     summary = [r for r in lin.collect() if r["partition_id"] == -1]
     assert len(summary) == 1 and summary[0]["rows_quarantined"] == 3
 

@@ -338,24 +338,44 @@ def test_mor_schema_evolution_and_compaction(spark, tmp_path):
     assert state(sink.read()) == want_state
 
 
+def _audits(sink):
+    """Routed, bad and field-audit row counts, and the lineage rows
+    without commit_ts: what a crash must neither lose nor double."""
+
+    def n(path):
+        return sink.spark.read.parquet(path).count() if os.path.isdir(path) else 0
+
+    lineage = sorted(tuple(r) for r in sink.lineage().drop("commit_ts").collect())
+    return n(sink.routed_path), n(sink.bad_path), n(sink.field_audit_path), lineage
+
+
 def test_mor_crash_point_sweep(spark, tmp_path):
     """Machine-enumerated crash windows for the MoR paths: fail the Nth
-    os.replace of (a) the delta stage→ledger→publish sequence and (b)
-    the compact_data base swap, for every N; after reopen (recovery)
-    plus replay/re-compaction the view must equal the uninterrupted
-    run. Covers both recovery directions — an un-ledgered staged delta
-    rolls back and replays, a ledgered one rolls forward."""
+    os.replace of (a) the delta stage→ledger→audit and delta publish
+    sequence and (b) the compact_data base swap, for every N; after
+    reopen (recovery) plus replay/re-compaction the view and the audit
+    tables must equal the uninterrupted run. Covers both recovery
+    directions — un-ledgered staged outputs roll back and replay,
+    ledgered ones roll forward."""
+    import pandas as pd
+
     base_pd = feedgen.gen_transcripts(n_convs=12, seed=33)
     ch_pd = feedgen.gen_changes("upsert", n_events=120, n_convs=12, seed=33)
+    ch_pd = pd.concat([ch_pd, ch_pd.head(2).assign(conv_id=None)], ignore_index=True)
 
     def fresh(name):
         sink = MorParquetMergeSink(spark, str(tmp_path / name), n_buckets=4)
         sink.init(spark.createDataFrame(base_pd))
         return sink
 
+    def apply(sink):
+        return sink.apply_merge(spark.createDataFrame(ch_pd), batch_id=0, audit="fields")
+
     clean = fresh("clean")
-    assert clean.apply_merge(spark.createDataFrame(ch_pd), batch_id=0) is not None
+    assert apply(clean) is not None
     want = _final_text(clean.read())
+    want_audits = _audits(clean)
+    assert want_audits[1] == 2 and want_audits[2] > 0  # every audit table written
     real_replace = os.replace
 
     def count_during(fn):
@@ -373,11 +393,9 @@ def test_mor_crash_point_sweep(spark, tmp_path):
         return n[0]
 
     probe = fresh("probe")
-    n_apply = count_during(
-        lambda: probe.apply_merge(spark.createDataFrame(ch_pd), batch_id=0)
-    )
+    n_apply = count_during(lambda: apply(probe))
     n_compact = count_during(lambda: probe.compact_data())
-    assert n_apply >= 1 and n_compact >= 2
+    assert n_apply >= 3 and n_compact >= 2  # ledger, audit and delta publish
 
     def failing_at(fail_at, calls):
         def failing(*a, **k):
@@ -394,7 +412,7 @@ def test_mor_crash_point_sweep(spark, tmp_path):
         os.replace = failing_at(fail_at, calls)
         try:
             try:
-                sink.apply_merge(spark.createDataFrame(ch_pd), batch_id=0)
+                apply(sink)
                 crashed = False
             except OSError:
                 crashed = True
@@ -402,8 +420,10 @@ def test_mor_crash_point_sweep(spark, tmp_path):
             os.replace = real_replace
         assert crashed, f"apply replace #{fail_at} was never reached"
         reopened = MorParquetMergeSink(spark, sink.path, n_buckets=4)
-        reopened.apply_merge(spark.createDataFrame(ch_pd), batch_id=0)  # None if rolled forward
+        ledgered = 0 in reopened.applied_batch_ids()
+        assert (apply(reopened) is None) == ledgered, f"apply replace #{fail_at}"
         assert _final_text(reopened.read()) == want, f"apply diverged at #{fail_at}"
+        assert _audits(reopened) == want_audits, f"audits differ at #{fail_at}"
 
     for fail_at in range(1, n_compact + 1):
         sink = fresh(f"crash_compact{fail_at}")

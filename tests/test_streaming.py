@@ -437,42 +437,66 @@ def test_json_feed_permissive_corrupt_quarantine(spark, tmp_path):
     assert _final_text(sink.read()) == got
 
 
-def test_crash_point_sweep_commit_swap(spark, tmp_path):
-    """Machine-enumerated crash windows: fail the Nth os.replace of the
-    staged-swap commit for EVERY N, reopen the sink (crash recovery),
-    replay the same batch, and require convergence to the uninterrupted
-    run's final state — the exactly-once invariant without hand-picked
-    windows (every replace precedes the ledger append, so a crashed
-    batch must always replay to the identical table)."""
+def _audits(sink):
+    """Routed, bad and field-audit row counts, and the lineage rows
+    without commit_ts: what a crash must neither lose nor double."""
     import os
+
+    def n(path):
+        return sink.spark.read.parquet(path).count() if os.path.isdir(path) else 0
+
+    lineage = sorted(tuple(r) for r in sink.lineage().drop("commit_ts").collect())
+    return n(sink.routed_path), n(sink.bad_path), n(sink.field_audit_path), lineage
+
+
+def test_crash_point_sweep_commit_swap(spark, tmp_path):
+    """Machine-enumerated crash windows: fail the Nth os.replace of
+    apply_merge (bucket swap, ledger rename, audit publish) for EVERY N,
+    reopen the sink (crash recovery), replay the same batch, and require
+    convergence to the uninterrupted run's final state and audit tables
+    — the exactly-once invariant without hand-picked windows. A crash
+    before the ledger rename replays the batch; one after it is rolled
+    forward, so the replay returns None exactly when the reopened
+    ledger holds the batch."""
+    import os
+
+    import pandas as pd
 
     base_pd = feedgen.gen_transcripts(n_convs=12, seed=21)
     ch_pd = feedgen.gen_changes("upsert", n_events=120, n_convs=12, seed=21)
+    ch_pd = pd.concat([ch_pd, ch_pd.head(2).assign(conv_id=None)], ignore_index=True)
 
     def fresh(name):
         sink = ParquetMergeSink(spark, str(tmp_path / name), n_buckets=4)
         sink.init(spark.createDataFrame(base_pd))
         return sink
 
+    def apply(sink):
+        return sink.apply_merge(spark.createDataFrame(ch_pd), batch_id=0, audit="fields")
+
     clean = fresh("clean")
-    assert clean.apply_merge(spark.createDataFrame(ch_pd), batch_id=0) is not None
+    assert apply(clean) is not None
     want = _final_text(clean.read())
+    want_audits = _audits(clean)
+    assert want_audits[1] == 2 and want_audits[2] > 0  # every audit table written
 
     real_replace = os.replace
-    counted = [0]
+    renames = []
 
     def counting(*a, **k):
-        counted[0] += 1
+        renames.append(str(a[0]))
         return real_replace(*a, **k)
 
     probe = fresh("probe")  # init OUTSIDE the count: it renames too
     os.replace = counting
     try:
-        probe.apply_merge(spark.createDataFrame(ch_pd), batch_id=0)
+        apply(probe)
     finally:
         os.replace = real_replace
-    n_replaces = counted[0]
-    assert n_replaces >= 2  # the sweep must cover a real window list
+    n_replaces = len(renames)
+    # the bucket swap's renames, then the ledger rename, then the publish
+    ledger_at = 1 + [os.path.basename(r) for r in renames].index(".batch-0.parquet.tmp")
+    assert 2 < ledger_at < n_replaces
 
     for fail_at in range(1, n_replaces + 1):
         calls = [0]
@@ -487,7 +511,7 @@ def test_crash_point_sweep_commit_swap(spark, tmp_path):
         os.replace = failing
         try:
             try:
-                sink.apply_merge(spark.createDataFrame(ch_pd), batch_id=0)
+                apply(sink)
                 crashed = False
             except OSError:
                 crashed = True
@@ -495,14 +519,52 @@ def test_crash_point_sweep_commit_swap(spark, tmp_path):
             os.replace = real_replace
         assert crashed, f"replace #{fail_at} was never reached"
         # process restart: recovery runs in __init__, then the stream
-        # replays the uncommitted batch
+        # replays the batch
         reopened = ParquetMergeSink(spark, sink.path, n_buckets=4)
         assert not any(
-            n.startswith(("_staging_batch_", "_trash_batch_"))
+            n.startswith(("_staging_batch_", "_trash_batch_", "_audit_staging_batch_"))
             for n in os.listdir(reopened.path)
         )
-        assert reopened.apply_merge(spark.createDataFrame(ch_pd), batch_id=0) is not None
+        ledgered = 0 in reopened.applied_batch_ids()
+        assert ledgered == (fail_at > ledger_at), f"replace #{fail_at}"
+        assert (apply(reopened) is None) == ledgered, f"replace #{fail_at}"
         assert _final_text(reopened.read()) == want, f"diverged at replace #{fail_at}"
+        got = _audits(reopened)
+        assert got[:2] == want_audits[:2], f"routed/bad rows differ at replace #{fail_at}"
+        if ledgered:
+            assert got == want_audits, f"audits differ at replace #{fail_at}"
+        else:
+            # the swap precedes the ledger: the replay routes the changes
+            # of buckets already swapped in as `stale` (their LSNs are
+            # applied: no field diffs, no applied counts), so only the
+            # lineage rows' keys, LSN ranges and quarantine count match —
+            # still one ledger record, nothing doubled
+            keys = lambda rows: [(*r[:4], r[-1]) for r in rows]
+            assert keys(got[3]) == keys(want_audits[3]), f"replace #{fail_at}"
+
+
+def test_audit_staging_jobs_count_in_callers_job_group(spark, tmp_path):
+    """The audit outputs are staged from pool threads; their Spark jobs
+    must still run in the caller's job group, or a per-batch job count
+    (and a job-group cancel) silently misses them. On equal inputs the
+    `full` audit stages the routed rows that `lineage` does not, so its
+    group must hold more jobs."""
+    base_pd = feedgen.gen_transcripts(n_convs=12, seed=37)
+    ch_pd = feedgen.gen_changes("upsert", n_events=120, n_convs=12, seed=37)
+    sc = spark.sparkContext
+    jobs = {}
+    for audit in ("full", "lineage"):
+        sink = ParquetMergeSink(spark, str(tmp_path / audit), n_buckets=4)
+        sink.init(spark.createDataFrame(base_pd))
+        batch = spark.createDataFrame(ch_pd)
+        group = f"audit-{audit}"
+        sc.setJobGroup(group, group)
+        try:
+            sink.apply_merge(batch, batch_id=0, audit=audit)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[audit] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs["full"] > jobs["lineage"] > 0, jobs
 
 
 def test_crash_point_sweep_audit_compaction(spark, tmp_path):

@@ -10,9 +10,9 @@ guard — both must raise, never proceed. A path that holds data but no
 props file cannot be opened at all.
 
 Also covers the in-memory ledger-cache reconciliation: the cache is
-updated at the ledger (lineage) append, not at the end of apply_merge,
-so a same-object retry after a partial failure can never append
-lineage/audit rows twice.
+updated at the ledger commit (the lineage file's rename), not at the
+end of apply_merge, so a same-object retry after a partial failure can
+never append lineage/audit rows twice.
 """
 
 from __future__ import annotations
@@ -90,42 +90,65 @@ def test_uninitialized_stream_persists_layout(spark, tmp_path):
 
 
 def test_cow_same_object_retry_after_audit_failure(spark, tmp_path, monkeypatch):
-    """Partial failure AFTER the lineage (ledger) append: the in-memory
-    cache already holds the batch_id, so a same-object retry is a no-op
-    — lineage and audit rows are appended at most once (the stale-cache
-    bug would replay the whole commit tail and double both)."""
+    """Partial failures around the ledger commit, each retried on the SAME
+    sink object: (a) a staged-audit write fails BEFORE the ledger — the
+    retry re-applies the batch; (b) the audit publish fails AFTER the
+    ledger — the in-memory ledger already holds the batch, so the retry
+    is a replay no-op that rolls the staged rows forward. Either way the
+    batch ends with one ledger entry and one copy of its routed rows."""
     base_pd, sink = _init_sink(spark, tmp_path, cls=ParquetMergeSink, seed=11)
     ch_pd = feedgen.gen_changes("upsert", n_events=200, n_convs=20, seed=11)
-    changes = spark.createDataFrame(ch_pd)
+    ch_pd = ch_pd.sort_values("lsn").reset_index(drop=True)
+    chunks = [g.reset_index(drop=True) for g in np.array_split(ch_pd, 2)]
 
-    routed_path = sink.routed_path
-    orig = DataFrameWriter.parquet
+    def routed_once(batch_id, chunk):
+        rows = sink.routed().filter(F.col("batch_id") == batch_id)
+        assert rows.count() == len(chunk.drop_duplicates(KEY_COLS))
+        assert rows.groupBy(*KEY_COLS).count().filter(F.col("count") > 1).count() == 0
+        lineage = sink.lineage().filter(F.col("batch_id") == batch_id)
+        # one ledger file: per (batch, partition) rows are unique
+        assert lineage.count() == lineage.select("partition_id").distinct().count() > 0
 
-    def flaky(self, path, *a, **kw):
-        if os.path.normpath(path) == os.path.normpath(routed_path):
-            raise RuntimeError("simulated audit-append failure")
-        return orig(self, path, *a, **kw)
+    # (a) the staged routed write fails: nothing is ledgered
+    staged_routed = os.path.join(sink.path, "_audit_staging_batch_1", "routed")
+    orig_parquet = DataFrameWriter.parquet
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", flaky)
+    def failing_write(self, path, *a, **kw):
+        if os.path.normpath(path) == os.path.normpath(staged_routed):
+            raise RuntimeError("simulated audit-staging failure")
+        return orig_parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_write)
     spark.catalog.clearCache()
     with pytest.raises(RuntimeError, match="simulated"):
-        sink.apply_merge(changes, batch_id=1, audit="full")
-    monkeypatch.setattr(DataFrameWriter, "parquet", orig)
+        sink.apply_merge(spark.createDataFrame(chunks[0]), batch_id=1, audit="full")
+    monkeypatch.setattr(DataFrameWriter, "parquet", orig_parquet)
     # the failed attempt released its batch and join caches
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert 1 not in sink.applied_batch_ids()
+    assert sink.apply_merge(spark.createDataFrame(chunks[0]), batch_id=1, audit="full") is not None
+    routed_once(1, chunks[0])
 
-    # ledger committed → same-object retry is a replay no-op
-    assert sink.apply_merge(changes, batch_id=1, audit="full") is None
-    lineage = sink.lineage()
-    assert lineage.select("batch_id").distinct().count() == 1
-    # one lineage append only: per (batch, partition) rows are unique
-    assert (
-        lineage.groupBy("batch_id", "partition_id")
-        .count()
-        .filter(F.col("count") > 1)
-        .count()
-        == 0
-    )
+    # (b) the first audit publish rename fails: the batch is ledgered
+    orig_replace = os.replace
+    failed = []
+
+    def failing_replace(src, dst, *a, **kw):
+        if "_audit_staging_batch_2" in str(src) and not failed:
+            failed.append(src)
+            raise OSError("simulated audit-publish failure")
+        return orig_replace(src, dst, *a, **kw)
+
+    monkeypatch.setattr(os, "replace", failing_replace)
+    with pytest.raises(OSError, match="simulated"):
+        sink.apply_merge(spark.createDataFrame(chunks[1]), batch_id=2, audit="full")
+    monkeypatch.setattr(os, "replace", orig_replace)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert 2 in sink.applied_batch_ids()
+    assert sink.apply_merge(spark.createDataFrame(chunks[1]), batch_id=2, audit="full") is None
+    assert not os.path.isdir(os.path.join(sink.path, "_audit_staging_batch_2"))
+    routed_once(2, chunks[1])
+
     # data committed before the ledger: final state equals the oracle
     want = oracle.replay(base_pd, ch_pd)
     assert _final_text(sink.read()) == list(
