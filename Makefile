@@ -15,7 +15,7 @@ test-sinks:
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
 	python -m pytest tests/test_streaming.py tests/test_mor_sink.py \
 	tests/test_table_properties.py tests/test_merge_oracle.py \
-	tests/test_fuzzy_gate.py -q -p no:cacheprovider
+	tests/test_fuzzy_gate.py tests/test_sinks_sql.py -q -p no:cacheprovider
 
 oracles:
 	python tools/check_oracles.py

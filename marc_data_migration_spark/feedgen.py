@@ -10,6 +10,8 @@ variants exercising each engine behavior (FIXTURES.md §2).
 
 from __future__ import annotations
 
+import zlib
+
 import numpy as np
 import pandas as pd
 
@@ -69,7 +71,9 @@ def gen_changes(
     - skew: 2 hot conv_ids carry ~50% of events (Zipf-ish)
     - evolve: second half adds additive column tool_meta
     """
-    rng = np.random.default_rng(seed + hash(variant) % 1_000_003)
+    # crc32, not hash(): str hashes are salted per process, so the same
+    # seed would give a different feed in every run
+    rng = np.random.default_rng(seed + zlib.crc32(variant.encode()) % 1_000_003)
     rows = []
     lsn = 0
 

@@ -161,16 +161,12 @@ class IcebergMergeSink:
         from ..plans.lineage import batch_lineage
 
         lineage_tbl = f"{self.table}_lineage"
-        try:
-            hit = (
-                self.spark.table(lineage_tbl)
-                .filter(F.col("batch_id") == batch_id)
-                .take(1)
-            )
-            if hit:
-                return  # checkpoint replay — already applied
-        except Exception:
-            pass  # first batch: ledger table not created yet
+        # the first batch creates the ledger table; a failing read of an
+        # existing one must raise, not re-apply (and re-append) the batch
+        if self.spark.catalog.tableExists(lineage_tbl) and (
+            self.spark.table(lineage_tbl).filter(F.col("batch_id") == batch_id).take(1)
+        ):
+            return  # checkpoint replay — already applied
         target = self.spark.table(self.table).select(*KEY_COLS, "text")
         source, bad = prepare_source(batch_df, target, **gate_opts)
         payload_cols = [

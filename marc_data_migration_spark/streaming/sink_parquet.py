@@ -21,29 +21,26 @@ Scale design: the target table is hash-bucketed on conv_id into
    read);
 4. ``apply_changes`` full-outer MERGE-applies the batch against that
    slice;
-5. ``_stage`` writes the sink's rows for the batch, bucketed, to a
-   per-batch staging directory;
+5. ``_stage`` writes the sink's rows for the batch, bucketed, to
+   ``_staging_batch_<id>/``;
 6. ``_commit_lineage_and_audits`` stages the routed, bad and field-audit
-   rows in ``_audit_staging_batch_<id>`` while it collects the batch's
-   lineage rows (one Spark action), then writes them on the driver as
+   rows in the same directory while it collects the batch's lineage
+   rows (one Spark action), then writes them on the driver as
    ``lineage/batch-<id>.parquet`` — tmp file + rename, THE ledger commit;
-7. ``_publish`` renames the staged rows into their tables.
+7. ``_publish`` moves everything staged into place.
 
-A crash before the ledger rename replays the batch; a crash after it
-is rolled forward by ``_publish`` (same-object retry) or by init-time
-recovery, so the data and audit tables see each batch exactly once.
-(A copy-on-write crash between its bucket swap and the ledger replays
-the swapped buckets' changes as ``stale``: their LSNs are already
-applied, so the audit rows record that route.)
+A crash before the ledger rename replays the batch on an untouched
+table; a crash after it is rolled forward by ``_publish`` (same-object
+retry) or by init-time recovery, so the data and audit tables see each
+batch exactly once.
 
-The sinks differ only in what step 5 writes and when readers see it.
-Copy-on-write stages the new version of every touched bucket and swaps
-those bucket directories into ``data/`` inside ``_stage``, BEFORE the
-ledger commit; its ``_publish`` moves only the audits. Merge-on-read
-stages only the changed rows (a delta) and renames them into
-``delta/`` in ``_publish``, after the audits, AFTER the ledger commit.
-The ledger file is written by the driver, so the driver must reach the
-table's filesystem — the bucket swaps already require that.
+The sinks differ only in what step 5 stages and step 7 publishes.
+Copy-on-write stages the new version of every touched bucket in
+``data/`` and swaps those bucket directories into the table; merge-on-
+read stages only the changed rows (a delta) in ``delta/`` and renames
+it into the table's ``delta/``. The ledger file is written by the
+driver, so the driver must reach the table's filesystem — the publish
+renames already require that.
 
 At 100 TB with n_buckets sized so a bucket ≈ a few GB, a copy-on-write
 batch that touches 1% of conversations rewrites ~1% of the table — the
@@ -294,6 +291,8 @@ class ParquetMergeSink:
             # exactly like init-time recovery would.
             self._publish(batch_id)
             return None
+        # left by an attempt that failed before the ledger
+        shutil.rmtree(self._staging(batch_id), ignore_errors=True)
         self._maintain()
         batch_df, touched = self._prepare_batch(batch_df)
         res = None
@@ -327,51 +326,53 @@ class ParquetMergeSink:
         """Table maintenance due before a batch reads the table (none)."""
 
     def _stage(self, res: MergeResult, touched: list[int], batch_id: int) -> None:
-        """Write the new version of the touched buckets to a staging dir,
-        then swap bucket directories into place — before the ledger
-        commit. Writing straight over data_path would race: the merge
-        plan reads the very files the overwrite deletes. (Iceberg's
-        snapshot commit is the atomic version of this swap —
-        sink_iceberg.py.) The staging write also materializes the
-        persisted join, so the commit tail never touches the replaced
-        files."""
-        staging = os.path.join(self.path, f"_staging_batch_{batch_id}")
-        self._write_bucketed(res.final, staging, max(len(touched), 1))
-        # Crash-safe swap: the old bucket is moved aside (atomic rename)
-        # rather than rmtree'd, so no crash window can lose a bucket's
-        # base rows. Recovery in _recover_staging restores any bucket
-        # still in trash with no replacement in place; the trash is
-        # deleted BEFORE the ledger write, so a post-ledger restart can
-        # never resurrect pre-merge data.
-        os.makedirs(self.data_path, exist_ok=True)
-        trash_dir = os.path.join(self.path, f"_trash_batch_{batch_id}")
-        os.makedirs(trash_dir, exist_ok=True)
+        """Write the new version of the touched buckets to the batch's
+        staging ``data/``, plus an empty ``bucket=<k>`` marker for each
+        touched bucket the batch emptied. Writing straight over
+        data_path would race: the merge plan reads the very files the
+        overwrite deletes. The staging write also materializes the
+        persisted join, which the commit tail then projects from."""
+        staged = os.path.join(self._staging(batch_id), "data")
+        self._write_bucketed(res.final, staged, max(len(touched), 1))
         for b in touched:
-            dst = os.path.join(self.data_path, f"{BUCKET_COL}={b}")
-            src = os.path.join(staging, f"{BUCKET_COL}={b}")
-            if os.path.isdir(dst):
-                os.replace(dst, os.path.join(trash_dir, f"{BUCKET_COL}={b}"))
-            if os.path.isdir(src):  # absent = bucket is now empty
-                os.replace(src, dst)
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(trash_dir, ignore_errors=True)
+            os.makedirs(os.path.join(staged, f"{BUCKET_COL}={b}"), exist_ok=True)
 
     def _publish(self, batch_id: int) -> None:
-        """Make a ledgered batch's staged audit rows visible: move each
-        staged file into its table directory, then drop the staging
-        directory. Spark part-file names are unique per write, so a
-        publish cut short resumes where it stopped. Copy-on-write data
-        was already swapped in during ``_stage``."""
-        staging = self._audit_staging(batch_id)
+        """Make a ledgered batch's staged outputs visible: move each
+        staged audit file into its table, then the sink's rows
+        (``_publish_rows``), then drop the staging directory. Each step
+        moves something out of staging and is safe to run again on what
+        is left, so a publish cut short resumes — on a same-object retry
+        or in init-time recovery — where it stopped: it only ever rolls
+        forward."""
+        staging = self._staging(batch_id)
         if not os.path.isdir(staging):
             return
-        for table in sorted(os.listdir(staging)):
+        for table in AUDIT_TABLES[1:]:
             src, dst = os.path.join(staging, table), os.path.join(self.path, table)
+            if not os.path.isdir(src):
+                continue
             os.makedirs(dst, exist_ok=True)
             for name in sorted(os.listdir(src)):
                 if name.endswith(".parquet"):
                     os.replace(os.path.join(src, name), os.path.join(dst, name))
+        self._publish_rows(staging, batch_id)
         shutil.rmtree(staging, ignore_errors=True)
+
+    def _publish_rows(self, staging: str, batch_id: int) -> None:
+        """Swap each staged bucket into data/: drop the live bucket, then
+        rename the staged one in (an empty marker: the bucket stays
+        gone). Iceberg's snapshot commit is the atomic version of this
+        swap — sink_iceberg.py."""
+        staged = os.path.join(staging, "data")
+        for name in sorted(os.listdir(staged)) if os.path.isdir(staged) else []:
+            if not name.startswith(f"{BUCKET_COL}="):
+                continue
+            src, dst = os.path.join(staged, name), os.path.join(self.data_path, name)
+            shutil.rmtree(dst, ignore_errors=True)
+            if os.listdir(src):
+                os.makedirs(self.data_path, exist_ok=True)
+                os.replace(src, dst)
 
     def _prepare_batch(self, batch_df: DataFrame) -> tuple[DataFrame, list[int]]:
         """Shared pre-merge setup: key-repartition a thin micro-batch
@@ -402,8 +403,7 @@ class ParquetMergeSink:
         once. The writes coalesce to few files: a long-lived stream
         otherwise accretes shuffle-partition-count tiny files per batch
         (measured 4.5× on the routed append)."""
-        staging = self._audit_staging(batch_id)
-        shutil.rmtree(staging, ignore_errors=True)  # left by a failed attempt
+        staging = self._staging(batch_id)
 
         def stage(name: str, df: DataFrame) -> None:
             df.coalesce(8).withColumn("batch_id", F.lit(batch_id)).write.mode(
@@ -441,8 +441,8 @@ class ParquetMergeSink:
         # retry must take the replay branch, which finishes the publish
         self._ledger().add(batch_id)
 
-    def _audit_staging(self, batch_id: int) -> str:
-        return os.path.join(self.path, f"_audit_staging_batch_{batch_id}")
+    def _staging(self, batch_id: int) -> str:
+        return os.path.join(self.path, f"_staging_batch_{batch_id}")
 
     def _empty_base(self, batch_df: DataFrame) -> DataFrame:
         payload = [c for c in batch_df.columns if c not in ("op", "lsn", "commit_ts")]
@@ -517,41 +517,23 @@ class ParquetMergeSink:
             shutil.rmtree(trash, ignore_errors=True)
 
     def _recover_staging(self) -> None:
-        """Crash recovery for apply_merge's bucket swap and audit publish.
-        A kill mid-swap leaves some buckets moved aside into
-        ``_trash_batch_*`` with (a) their replacement already in place —
-        keep it, the un-ledgered replay converges via the LSN guard — or
-        (b) no replacement — restore the original so the replay sees the
-        pre-merge base (otherwise its non-batch rows would be permanently
-        lost). Incomplete ``_staging_batch_*`` writes are discarded; the
-        replay rewrites them. Staged audits of a ledgered batch are
-        published (rolled forward), those of an un-ledgered one deleted
-        (the replay re-stages them), and an unrenamed ledger tmp file is
-        removed."""
+        """Crash recovery for apply_merge, one roll-forward rule for both
+        sinks: a ``_staging_batch_<id>`` of a ledgered batch is complete
+        (everything is staged before the ledger), so it is published; one
+        of an un-ledgered batch is deleted, and the stream's replay
+        stages it again over a table it never touched. An unrenamed
+        ledger tmp file is removed."""
         if os.path.isdir(self.lineage_path):
             for name in os.listdir(self.lineage_path):
                 if name.startswith(".") and name.endswith(".tmp"):
                     os.remove(os.path.join(self.lineage_path, name))
         for name in os.listdir(self.path) if os.path.isdir(self.path) else []:
-            full = os.path.join(self.path, name)
-            if name.startswith("_trash_batch_") and os.path.isdir(full):
-                os.makedirs(self.data_path, exist_ok=True)
-                for entry in os.listdir(full):
-                    if not entry.startswith(f"{BUCKET_COL}="):
-                        continue
-                    dst = os.path.join(self.data_path, entry)
-                    if not os.path.isdir(dst):
-                        os.replace(os.path.join(full, entry), dst)
-                shutil.rmtree(full, ignore_errors=True)
-            elif name.startswith("_staging_batch_") and os.path.isdir(full):
-                shutil.rmtree(full, ignore_errors=True)
-            elif name.startswith("_audit_staging_batch_") and os.path.isdir(full):
+            if name.startswith("_staging_batch_"):
                 bid = int(name.rsplit("_", 1)[1])
                 if bid in self._ledger():
-                    # the base publish: a subclass recovers its own staging
-                    ParquetMergeSink._publish(self, bid)
+                    self._publish(bid)
                 else:
-                    shutil.rmtree(full, ignore_errors=True)
+                    shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
 
 
 class MorParquetMergeSink(ParquetMergeSink):
@@ -569,17 +551,13 @@ class MorParquetMergeSink(ParquetMergeSink):
     ``compact_data()`` folds deltas back into the bucketed base
     (rewrite_data_files analogue).
 
-    Commit protocol per batch — the shared ``apply_merge`` skeleton
-    with this sink's hooks: ``_stage`` writes the delta to
-    ``_delta_staging_batch_<id>`` → audits staged ∥ lineage collected →
-    ledger file renamed into lineage/ (THE commit) → ``_publish`` renames
-    the staged audits into their tables and the delta into delta/,
-    AFTER the ledger. A crash before the ledger replays the batch (the
-    staged dirs are invisible and get rewritten); a crash after it is
-    rolled FORWARD by init-time recovery, or by ``_publish`` on a
-    same-object retry (everything staged is complete by construction).
-    Data, delta and audit rows therefore land exactly once, the same
-    contract as the copy-on-write sink.
+    Commit protocol per batch — the shared ``apply_merge`` skeleton:
+    ``_stage`` writes the delta to ``_staging_batch_<id>/delta`` → audits
+    staged ∥ lineage collected → ledger file renamed into lineage/ (THE
+    commit) → ``_publish`` renames the staged audits into their tables
+    and the delta into delta/. Only the staged rows differ from the
+    copy-on-write sink; staging, ledger, publish and recovery are the
+    same code.
     """
 
     SINK_MODE = "mor"
@@ -600,12 +578,11 @@ class MorParquetMergeSink(ParquetMergeSink):
         leaves compaction to an explicit compact_data() call. An
         operational knob, not a table-layout property — safe to vary
         per run. Must be >= 1."""
-        super().__init__(spark, path, n_buckets)
         if auto_compact_deltas is not None and auto_compact_deltas < 1:
             raise ValueError("auto_compact_deltas must be >= 1")
         self.auto_compact_deltas = auto_compact_deltas
-        self.delta_path = os.path.join(path, "delta")
-        self._recover_mor()
+        self.delta_path = os.path.join(path, "delta")  # recovery publishes deltas
+        super().__init__(spark, path, n_buckets)
 
     # -- merge-on-read view ------------------------------------------------
     def _delta_batch_dirs(self) -> list[str]:
@@ -677,29 +654,18 @@ class MorParquetMergeSink(ParquetMergeSink):
 
     def _stage(self, res: MergeResult, touched: list[int], batch_id: int) -> None:
         """Stage the delta; it stays invisible to readers until _publish."""
-        staging = os.path.join(self.path, f"_delta_staging_batch_{batch_id}")
-        self._write_bucketed(res.delta, staging, max(len(touched), 1))
+        staged = os.path.join(self._staging(batch_id), "delta")
+        self._write_bucketed(res.delta, staged, max(len(touched), 1))
 
-    def _publish(self, batch_id: int) -> None:
-        """Publish the staged audits, then the staged delta."""
-        super()._publish(batch_id)
-        staged = os.path.join(self.path, f"_delta_staging_batch_{batch_id}")
-        if os.path.isdir(staged):
-            self._publish_delta(staged, batch_id)
+    def _publish_rows(self, staging: str, batch_id: int) -> None:
+        self._publish_delta(os.path.join(staging, "delta"), batch_id)
 
-    def _publish_delta(self, staging: str, batch_id: int) -> None:
-        live = os.path.join(self.delta_path, f"batch_id={batch_id}")
-        has_files = any(
-            f.endswith(".parquet") for _, _, fs in os.walk(staging) for f in fs
-        )
-        if not has_files:  # all-stale/all-bad batch: nothing to publish
-            shutil.rmtree(staging, ignore_errors=True)
-            return
-        os.makedirs(self.delta_path, exist_ok=True)
-        if os.path.isdir(live):  # duplicate publish (recovery overlap)
-            shutil.rmtree(staging, ignore_errors=True)
-        else:
-            os.replace(staging, live)
+    def _publish_delta(self, staged: str, batch_id: int) -> None:
+        """Rename the staged delta into delta/ unless it holds no rows
+        (an all-stale or all-bad batch publishes nothing)."""
+        if any(f.endswith(".parquet") for _, _, fs in os.walk(staged) for f in fs):
+            os.makedirs(self.delta_path, exist_ok=True)
+            os.replace(staged, os.path.join(self.delta_path, f"batch_id={batch_id}"))
 
     # -- compaction ----------------------------------------------------------
     def compact_data(self) -> int:
@@ -726,25 +692,3 @@ class MorParquetMergeSink(ParquetMergeSink):
         for b in batches:
             shutil.rmtree(b, ignore_errors=True)
         return len(batches)
-
-    # -- crash recovery --------------------------------------------------------
-    def _recover_mor(self) -> None:
-        """Roll staged deltas forward (ledgered) or back (un-ledgered).
-        An interrupted compact_data swap is undone by _recover_compaction."""
-        if not os.path.isdir(self.path):
-            return
-        for name in os.listdir(self.path):
-            if not name.startswith("_delta_staging_batch_"):
-                continue
-            full = os.path.join(self.path, name)
-            try:
-                bid = int(name.rsplit("_", 1)[1])
-            except ValueError:
-                shutil.rmtree(full, ignore_errors=True)
-                continue
-            if bid in self._ledger():
-                # ledgered ⇒ the staged write completed; publish it
-                self._publish_delta(full, bid)
-            else:
-                # un-ledgered ⇒ the batch will replay and re-stage
-                shutil.rmtree(full, ignore_errors=True)

@@ -30,13 +30,20 @@ from pyspark.sql import functions as F
 from ..schemas import CHANGES_SCHEMA, CHANGES_SCHEMA_V2
 from .sink_parquet import ParquetMergeSink
 
+# The file source orders files by modification time only, and chunks
+# written within one clock tick (milliseconds) tie and come back in
+# directory-listing order. Chunk i gets mtime FEED_MTIME_BASE + i
+# seconds, so the stream reads the chunks in index order.
+FEED_MTIME_BASE = 1_700_000_000
+
 
 def stage_feed_chunks(
     chunks: list[pd.DataFrame], feed_dir: str, start_at: int = 0,
     fmt: str = "parquet",
 ) -> list[str]:
     """Write pandas change-feed chunks as individual files — the staged
-    WAL the file-source stream tails. ``fmt="json"`` writes line-JSON
+    WAL the file-source stream tails, read in chunk-index order (also
+    across calls, via ``start_at``). ``fmt="json"`` writes line-JSON
     (the Debezium-style text WAL the permissive parse path reads)."""
     os.makedirs(feed_dir, exist_ok=True)
     paths = []
@@ -51,6 +58,7 @@ def stage_feed_chunks(
         else:
             p = os.path.join(feed_dir, f"chunk-{i:06d}.parquet")
             pdf.to_parquet(p, index=False)
+        os.utime(p, (FEED_MTIME_BASE + i, FEED_MTIME_BASE + i))
         paths.append(p)
     return paths
 

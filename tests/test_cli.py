@@ -22,6 +22,32 @@ def test_feedgen_stages_chunks(tmp_path, capsys):
     assert len(files) == 3 and all(f.endswith(".parquet") for f in files)
 
 
+def test_gen_changes_independent_of_hash_seed():
+    """The same seed gives the same feed in every process: two
+    interpreters with different str-hash salts must agree."""
+    import subprocess
+    import sys
+
+    code = (
+        "from marc_data_migration_spark.feedgen import gen_changes\n"
+        "for v in ('basic', 'upsert', 'delete', 'dup-replay', 'skew', 'evolve'):\n"
+        "    print(gen_changes(v, n_events=200, n_convs=20, seed=11).to_csv())\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    feeds = [
+        subprocess.run(
+            [sys.executable, "-c", code],
+            cwd=root,
+            env={**os.environ, "PYTHONHASHSEED": salt},
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout
+        for salt in ("1", "2")
+    ]
+    assert feeds[0] and feeds[0] == feeds[1]
+
+
 def test_bad_strategy_rejected(tmp_path):
     with pytest.raises(SystemExit):
         main(["apply", "--base", "x", "--changes", "y", "--out", "z", "--strategy", "nope"])

@@ -137,15 +137,16 @@ def test_mor_staged_delta_recovery(spark, tmp_path):
     # simulate the crash window: demote the published delta back to a
     # staged dir (ledger row for batch 0 already written)
     live = sink._delta_batch_dirs()[0]
-    staged = os.path.join(sink.path, "_delta_staging_batch_0")
-    os.replace(live, staged)
+    staged = os.path.join(sink.path, "_staging_batch_0")
+    os.makedirs(staged)
+    os.replace(live, os.path.join(staged, "delta"))
     reopened = MorParquetMergeSink(spark, sink.path, n_buckets=8)
     assert reopened._delta_batch_dirs() != []
     assert not os.path.exists(staged)
     assert _final_text(reopened.read()) == want
     # un-ledgered staged dir (crash before ledger) rolls BACK
-    staged9 = os.path.join(sink.path, "_delta_staging_batch_999")
-    os.makedirs(staged9)
+    staged9 = os.path.join(sink.path, "_staging_batch_999")
+    os.makedirs(os.path.join(staged9, "delta"))
     reopened2 = MorParquetMergeSink(spark, sink.path, n_buckets=8)
     assert not os.path.exists(staged9)
     assert _final_text(reopened2.read()) == want

@@ -284,3 +284,38 @@ def test_merge_executor_honors_clause_order():
     )
     execute_merge_in_duckdb(con, sql)
     assert con.sql("SELECT * FROM tgt ORDER BY k").fetchall() == [(2, 2), (3, 300)]
+
+
+def test_iceberg_ledger_probe(spark, monkeypatch):
+    """The replay guard reads the lineage table only when it exists:
+    a ledgered batch_id is skipped, and a failing read of the ledger
+    propagates instead of re-applying the batch (which would append its
+    quarantine and lineage rows a second time). The sink is built
+    without its constructor, its tables backed by temp views."""
+    import pytest
+    from pyspark.sql import SparkSession
+
+    from marc_data_migration_spark.streaming.sink_iceberg import IcebergMergeSink
+
+    sink = object.__new__(IcebergMergeSink)
+    sink.spark, sink.table, sink.n_buckets = spark, "t", 4
+    batch = spark.createDataFrame(
+        feedgen.gen_changes("upsert", n_events=20, n_convs=4, seed=3)
+    )
+    batch.limit(0).createOrReplaceTempView("t")
+    spark.range(1).selectExpr("0L AS batch_id").createOrReplaceTempView("t_lineage")
+    real_table = SparkSession.table
+
+    def failing_table(self, name):
+        if name == "t_lineage":
+            raise RuntimeError("injected ledger read failure")
+        return real_table(self, name)
+
+    try:
+        assert sink.apply_merge(batch, batch_id=0) is None  # ledgered: skipped
+        monkeypatch.setattr(SparkSession, "table", failing_table)
+        with pytest.raises(RuntimeError, match="injected ledger read failure"):
+            sink.apply_merge(batch, batch_id=1)
+    finally:
+        spark.catalog.dropTempView("t")
+        spark.catalog.dropTempView("t_lineage")

@@ -64,6 +64,21 @@ def test_checkpoint_resume(spark, tmp_path):
     assert got == list(zip(want.conv_id, want.turn_idx, want.text.fillna("<N>"), want.lsn))
 
 
+def test_staged_chunks_order_by_mtime(tmp_path):
+    """The file source orders a feed by modification time alone: staged
+    chunks, including a later call's (start_at), must carry strictly
+    increasing mtimes in index order, even when written in one tick."""
+    import os
+
+    import pandas as pd
+
+    feed = str(tmp_path / "feed")
+    chunks = [pd.DataFrame({"lsn": [i]}) for i in range(4)]
+    paths = stage_feed_chunks(chunks, feed) + stage_feed_chunks(chunks, feed, start_at=4)
+    mtimes = [os.stat(p).st_mtime_ns // 1_000_000 for p in paths]  # Hadoop's resolution
+    assert mtimes == sorted(set(mtimes)) and len(mtimes) == 8
+
+
 def test_replayed_batch_is_noop(spark, tmp_path):
     base_pd, ch_pd, sink = _setup(spark, tmp_path, n_events=200, seed=5)
     batch = spark.createDataFrame(ch_pd)
@@ -76,49 +91,88 @@ def test_replayed_batch_is_noop(spark, tmp_path):
     assert _final_text(sink.read()) == state1
 
 
-def test_staging_crash_recovery(spark, tmp_path):
-    """A crash mid-bucket-swap must never lose a bucket's base rows.
-    Simulate the worst window of the old code path: a bucket's current
-    directory is gone (moved aside into _trash_batch_*), its staging
-    replacement never landed, and the staging dir is still on disk.
-    Re-opening the sink (= process restart) must restore the bucket and
-    discard the partial staging write; since the batch never reached the
-    ledger, the stream replays it and converges."""
+def test_staging_crash_recovery(spark, tmp_path, monkeypatch):
+    """Reopening the sink (= process restart) applies one rule to every
+    ``_staging_batch_<id>``: publish it when the ledger holds <id>, else
+    delete it. Three crash states: (a) an un-ledgered staging dir is
+    dropped and the base is intact; (b) a ledgered batch whose live
+    bucket was already dropped before its staged copy landed rolls
+    forward from staging; (c) a ledgered batch that emptied a bucket
+    left only an empty marker for it, and the bucket ends up gone."""
     import os
-    import shutil
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from marc_data_migration_spark.schemas import CHANGES_SCHEMA
+    from marc_data_migration_spark.streaming.sink_parquet import bucket_expr
 
     base_pd, ch_pd, sink = _setup(spark, tmp_path, n_events=200, seed=13)
     before = _final_text(sink.read())
     path = sink.path
+    buckets = sorted(n for n in os.listdir(sink.data_path) if n.startswith("bucket="))
+    real_replace = os.replace
 
-    # simulate: batch 7 crashed after moving one bucket aside, before swap
-    bname = sorted(
-        n for n in os.listdir(sink.data_path) if n.startswith("bucket=")
-    )[0]
-    trash = os.path.join(path, "_trash_batch_7")
-    os.makedirs(trash)
-    os.replace(os.path.join(sink.data_path, bname), os.path.join(trash, bname))
+    def crash_on_first(marker):
+        """os.replace that fails once, on the first source under ``marker``."""
+        failed = []
+
+        def failing(src, dst, *a, **k):
+            if not failed and marker in str(src):
+                failed.append(str(src))
+                raise OSError(f"injected crash renaming {src}")
+            return real_replace(src, dst, *a, **k)
+
+        monkeypatch.setattr(os, "replace", failing)
+        return failed
+
+    # (a) batch 7 died before its ledger: an empty marker for a live
+    # bucket and a staged audit table; publishing it would drop the bucket
     staging = os.path.join(path, "_staging_batch_7")
-    os.makedirs(os.path.join(staging, bname))
-
+    os.makedirs(os.path.join(staging, "data", buckets[0]))
+    os.makedirs(os.path.join(staging, "routed"))
     reopened = ParquetMergeSink(spark, path, n_buckets=8)
-    assert not os.path.exists(trash)
     assert not os.path.exists(staging)
-    assert _final_text(reopened.read()) == before  # bucket restored intact
+    assert _final_text(reopened.read()) == before  # base intact
 
-    # the other crash window: replacement landed, old copy still in trash
-    # — recovery must keep the NEW data (replay converges via LSN guard)
-    res = reopened.apply_merge(spark.createDataFrame(ch_pd), batch_id=0)
-    assert res is not None
-    after = _final_text(reopened.read())
-    trash2 = os.path.join(path, "_trash_batch_8")
-    os.makedirs(trash2)
-    shutil.copytree(
-        os.path.join(reopened.data_path, bname), os.path.join(trash2, bname)
-    )
-    reopened2 = ParquetMergeSink(spark, path, n_buckets=8)
-    assert not os.path.exists(trash2)
-    assert _final_text(reopened2.read()) == after  # new data kept
+    # (b) batch 0 is ledgered; its first bucket swap dropped the live
+    # bucket, then died before the staged copy was renamed in
+    failed = crash_on_first(os.path.join("_staging_batch_0", "data"))
+    with pytest.raises(OSError, match="injected"):
+        reopened.apply_merge(spark.createDataFrame(ch_pd), batch_id=0)
+    monkeypatch.setattr(os, "replace", real_replace)
+    dropped = os.path.basename(failed[0])
+    assert dropped in buckets
+    assert not os.path.exists(os.path.join(path, "data", dropped))
+    rolled = ParquetMergeSink(spark, path, n_buckets=8)
+    assert 0 in rolled.applied_batch_ids()
+    assert not os.path.exists(os.path.join(path, "_staging_batch_0"))
+    want = oracle.replay(base_pd, ch_pd)
+    after = _final_text(rolled.read())
+    assert after == list(zip(want.conv_id, want.turn_idx, want.text.fillna("<N>"), want.lsn))
+    assert rolled.apply_merge(spark.createDataFrame(ch_pd), batch_id=0) is None
+
+    # (c) batch 1 deletes every row of one bucket; it is ledgered and
+    # dies at its first publish rename, with the marker still staged
+    live = rolled.read().withColumn("b", bucket_expr(8))
+    k = live.first().b
+    keys = live.filter(F.col("b") == k).select("conv_id", "turn_idx").collect()
+    lsn0 = int(ch_pd.lsn.max()) + 1
+    deletes = [
+        ("D", lsn0 + i, None, r.conv_id, r.turn_idx, None, None, None, None)
+        for i, r in enumerate(keys)
+    ]
+    crash_on_first("_staging_batch_1")
+    with pytest.raises(OSError, match="injected"):
+        rolled.apply_merge(spark.createDataFrame(deletes, CHANGES_SCHEMA), batch_id=1)
+    monkeypatch.setattr(os, "replace", real_replace)
+    assert os.path.isdir(os.path.join(path, "_staging_batch_1", "data", f"bucket={k}"))
+    assert os.path.isdir(os.path.join(path, "data", f"bucket={k}"))
+    final = ParquetMergeSink(spark, path, n_buckets=8)
+    assert not os.path.exists(os.path.join(path, "_staging_batch_1"))
+    assert not os.path.exists(os.path.join(path, "data", f"bucket={k}"))
+    gone = {(r.conv_id, r.turn_idx) for r in keys}
+    assert _final_text(final.read()) == [r for r in after if r[:2] not in gone]
 
 
 def test_delete_empties_bucket(spark, tmp_path):
@@ -451,13 +505,13 @@ def _audits(sink):
 
 def test_crash_point_sweep_commit_swap(spark, tmp_path):
     """Machine-enumerated crash windows: fail the Nth os.replace of
-    apply_merge (bucket swap, ledger rename, audit publish) for EVERY N,
+    apply_merge (ledger rename, audit publish, bucket swap) for EVERY N,
     reopen the sink (crash recovery), replay the same batch, and require
     convergence to the uninterrupted run's final state and audit tables
     — the exactly-once invariant without hand-picked windows. A crash
-    before the ledger rename replays the batch; one after it is rolled
-    forward, so the replay returns None exactly when the reopened
-    ledger holds the batch."""
+    before the ledger rename replays the batch on an untouched table;
+    one after it is rolled forward, so the replay returns None exactly
+    when the reopened ledger holds the batch."""
     import os
 
     import pandas as pd
@@ -494,9 +548,13 @@ def test_crash_point_sweep_commit_swap(spark, tmp_path):
     finally:
         os.replace = real_replace
     n_replaces = len(renames)
-    # the bucket swap's renames, then the ledger rename, then the publish
+    # the ledger rename first, then the publish of everything staged:
+    # audit files and bucket directories
     ledger_at = 1 + [os.path.basename(r) for r in renames].index(".batch-0.parquet.tmp")
-    assert 2 < ledger_at < n_replaces
+    published = renames[ledger_at:]
+    assert ledger_at == 1 and n_replaces > 2
+    assert all(os.sep + "_staging_batch_0" + os.sep in r for r in published), renames
+    assert any(os.sep + "bucket=" in r for r in published)
 
     for fail_at in range(1, n_replaces + 1):
         calls = [0]
@@ -521,26 +579,12 @@ def test_crash_point_sweep_commit_swap(spark, tmp_path):
         # process restart: recovery runs in __init__, then the stream
         # replays the batch
         reopened = ParquetMergeSink(spark, sink.path, n_buckets=4)
-        assert not any(
-            n.startswith(("_staging_batch_", "_trash_batch_", "_audit_staging_batch_"))
-            for n in os.listdir(reopened.path)
-        )
+        assert not any(n.startswith("_staging_batch_") for n in os.listdir(reopened.path))
         ledgered = 0 in reopened.applied_batch_ids()
         assert ledgered == (fail_at > ledger_at), f"replace #{fail_at}"
         assert (apply(reopened) is None) == ledgered, f"replace #{fail_at}"
         assert _final_text(reopened.read()) == want, f"diverged at replace #{fail_at}"
-        got = _audits(reopened)
-        assert got[:2] == want_audits[:2], f"routed/bad rows differ at replace #{fail_at}"
-        if ledgered:
-            assert got == want_audits, f"audits differ at replace #{fail_at}"
-        else:
-            # the swap precedes the ledger: the replay routes the changes
-            # of buckets already swapped in as `stale` (their LSNs are
-            # applied: no field diffs, no applied counts), so only the
-            # lineage rows' keys, LSN ranges and quarantine count match —
-            # still one ledger record, nothing doubled
-            keys = lambda rows: [(*r[:4], r[-1]) for r in rows]
-            assert keys(got[3]) == keys(want_audits[3]), f"replace #{fail_at}"
+        assert _audits(reopened) == want_audits, f"audits differ at replace #{fail_at}"
 
 
 def test_audit_staging_jobs_count_in_callers_job_group(spark, tmp_path):

@@ -110,7 +110,7 @@ def test_cow_same_object_retry_after_audit_failure(spark, tmp_path, monkeypatch)
         assert lineage.count() == lineage.select("partition_id").distinct().count() > 0
 
     # (a) the staged routed write fails: nothing is ledgered
-    staged_routed = os.path.join(sink.path, "_audit_staging_batch_1", "routed")
+    staged_routed = os.path.join(sink.path, "_staging_batch_1", "routed")
     orig_parquet = DataFrameWriter.parquet
 
     def failing_write(self, path, *a, **kw):
@@ -134,7 +134,7 @@ def test_cow_same_object_retry_after_audit_failure(spark, tmp_path, monkeypatch)
     failed = []
 
     def failing_replace(src, dst, *a, **kw):
-        if "_audit_staging_batch_2" in str(src) and not failed:
+        if os.path.join("_staging_batch_2", "routed") in str(src) and not failed:
             failed.append(src)
             raise OSError("simulated audit-publish failure")
         return orig_replace(src, dst, *a, **kw)
@@ -146,10 +146,10 @@ def test_cow_same_object_retry_after_audit_failure(spark, tmp_path, monkeypatch)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert 2 in sink.applied_batch_ids()
     assert sink.apply_merge(spark.createDataFrame(chunks[1]), batch_id=2, audit="full") is None
-    assert not os.path.isdir(os.path.join(sink.path, "_audit_staging_batch_2"))
+    assert not os.path.isdir(os.path.join(sink.path, "_staging_batch_2"))
     routed_once(2, chunks[1])
 
-    # data committed before the ledger: final state equals the oracle
+    # the retry also swapped in the buckets: final state equals the oracle
     want = oracle.replay(base_pd, ch_pd)
     assert _final_text(sink.read()) == list(
         zip(want.conv_id, want.turn_idx, want.text.fillna("<N>"), want.lsn)
@@ -181,12 +181,12 @@ def test_mor_same_object_retry_publishes_staged_delta(spark, tmp_path, monkeypat
     # the failed attempt released its batch and join caches
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     # staged dir exists, nothing published yet
-    assert os.path.isdir(os.path.join(sink.path, "_delta_staging_batch_1"))
+    assert os.path.isdir(os.path.join(sink.path, "_staging_batch_1", "delta"))
     assert sink._delta_batch_dirs() == []
 
     # retry on the SAME object: replay no-op that publishes the delta
     assert sink.apply_merge(changes, batch_id=1) is None
-    assert not os.path.isdir(os.path.join(sink.path, "_delta_staging_batch_1"))
+    assert not os.path.isdir(os.path.join(sink.path, "_staging_batch_1"))
     assert len(sink._delta_batch_dirs()) == 1
     assert sink.lineage().select("batch_id").distinct().count() == 1
 

@@ -1,8 +1,8 @@
 """Per-phase wall-time profile of one end-to-end stream run — where a
 micro-batch's time actually goes (prepare / base read / merge / staging
-write + bucket swap / audit staging + ledger commit / audit publish),
-summed across batches. Used to pick stream-path optimization targets;
-results land in BENCH/BASELINE.md.
+write / audit staging + ledger commit / publish of the staged audits and
+buckets or delta), summed across batches. Used to pick stream-path
+optimization targets; results land in BENCH/BASELINE.md.
 
 Usage: python tools/profile_stream.py [n_events] [n_batches] [audit]
 """
@@ -52,9 +52,9 @@ def main() -> None:
     _timed(sp.ParquetMergeSink, "_prepare_batch")
     # a batch's pruned base read; the run's final read() passes None
     _timed(sp.ParquetMergeSink, "_read_buckets", when=lambda sink, buckets: buckets is not None)
-    _timed(sp.ParquetMergeSink, "_stage")  # staging write + bucket swap
+    _timed(sp.ParquetMergeSink, "_stage", "staging write")
     _timed(sp.ParquetMergeSink, "_commit_lineage_and_audits")  # audits staged + ledger file
-    _timed(sp.ParquetMergeSink, "_publish")  # staged audits renamed in
+    _timed(sp.ParquetMergeSink, "_publish", "publish: audits + buckets/delta")
     _timed(sp.ParquetMergeSink, "_ledger")
     _timed(sp.ParquetMergeSink, "apply_merge", "apply_merge_total")
     _timed(merge_mod, "apply_changes")
