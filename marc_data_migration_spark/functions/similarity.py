@@ -7,13 +7,13 @@ sandbox dependency, so we pin our own implementation:
 
 - ``full_process``: lowercase, non-alphanumeric → space, trim
   (fuzzywuzzy.utils.full_process semantics).
-- ``ratio``: int(round(100 * 2*LCS / (len_a + len_b))) — the InDel
-  (substitution-cost-2 Levenshtein) ratio, exactly what
+- ``_blocks_ratio``: int(round(100 * 2*LCS / (len_a + len_b))) — the
+  InDel (substitution-cost-2 Levenshtein) ratio, exactly what
   python-Levenshtein's ``ratio`` computes for fuzzywuzzy. LCS length
   is computed with the Crochemore/Hyyrö bit-parallel algorithm over
   Python big-ints: O(len_a · len_b / 64) word ops at C speed,
   verified against the O(nm) DP (tests).
-- ``token_sort_ratio``: ratio() over the space-joined sorted token
+- ``token_sort_ratio``: that ratio over the space-joined sorted token
   lists of the processed strings.
 
 Exposed to Spark as Arrow-vectorized pandas UDFs (batched transfer,
@@ -72,12 +72,6 @@ def _blocks_ratio(a: str, b: str) -> int:
     if not a or not b:
         return 0
     return int(round(200.0 * lcs_len(a, b) / (len(a) + len(b))))
-
-
-def ratio_py(a: str | None, b: str | None) -> int:
-    return _blocks_ratio(
-        full_process(a)[:MAX_CMP_CHARS], full_process(b)[:MAX_CMP_CHARS]
-    )
 
 
 def token_sort_ratio_py(a: str | None, b: str | None) -> int:

@@ -364,16 +364,19 @@ def simhash_banded_pairs(df: DataFrame, text_col: str = "text", id_col: str = "d
     width = n_bits // n_bands
     mask = (1 << width) - 1
     sig = simhash(df, text_col, id_col, n_bits, shingle_k=shingle_k)
-    # persist(): both sides of the self-join below read this frame, and
-    # without the cache Catalyst plans the ENTIRE signature pipeline
-    # (shingle → hash → two agg exchanges) twice — once per join side
-    # (plan-verified). The cache stays lazy (no job here) and both
-    # sides share one InMemoryRelation.
-    banded = sig.select(
-        id_col,
-        "simhash",
-        F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
-    ).withColumn("bv", F.expr(f"shiftright(simhash, band * {width}) & {mask}")).persist()
+    # localCheckpoint(eager=False): both sides of the self-join below
+    # read this frame, and without materialization Catalyst plans the
+    # ENTIRE signature pipeline (shingle → hash → two agg exchanges)
+    # twice — once per join side (plan-verified). Lazy: computed inside
+    # the first action, re-derived per construction (no CacheManager
+    # entry outlives the call).
+    banded = lazy_local_checkpoint(
+        sig.select(
+            id_col,
+            "simhash",
+            F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
+        ).withColumn("bv", F.expr(f"shiftright(simhash, band * {width}) & {mask}"))
+    )
     a = banded.select(
         F.col(id_col).alias("a"), F.col("simhash").alias("sig_a"), "band", "bv"
     )

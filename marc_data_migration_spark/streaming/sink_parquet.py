@@ -13,9 +13,9 @@ Scale design: the target table is hash-bucketed on conv_id into
    after ``_publish`` finishes any publish the failed attempt left
    undone (the LSN guard in the MERGE makes even a forced re-apply
    converge);
-2. ``_prepare_batch`` key-repartitions and persists the batch and
-   collects the set of buckets its keys touch (at most n_buckets values
-   to the driver);
+2. ``_touched_buckets`` collects the set of buckets the batch's keys
+   touch (at most n_buckets values to the driver); the merge's join
+   cache (step 4) is the only thing a batch materializes;
 3. ``_read_buckets`` reads ONLY those buckets (partition pruning — the
    scan filter is on the partition column, so untouched data is never
    read);
@@ -294,7 +294,7 @@ class ParquetMergeSink:
         # left by an attempt that failed before the ledger
         shutil.rmtree(self._staging(batch_id), ignore_errors=True)
         self._maintain()
-        batch_df, touched = self._prepare_batch(batch_df)
+        touched = self._touched_buckets(batch_df)
         res = None
         try:
             base = self._read_buckets(touched) if self.exists() else self._empty_base(batch_df)
@@ -315,8 +315,7 @@ class ParquetMergeSink:
             self._publish(batch_id)
         finally:
             # also on failure: a retry of a ledgered batch returns early
-            # above and would leave both caches in executor memory
-            batch_df.unpersist()
+            # above and would leave the join cache in executor memory
             if res is not None:
                 res.unpersist()
         return res
@@ -374,22 +373,15 @@ class ParquetMergeSink:
                 os.makedirs(self.data_path, exist_ok=True)
                 os.replace(src, dst)
 
-    def _prepare_batch(self, batch_df: DataFrame) -> tuple[DataFrame, list[int]]:
-        """Shared pre-merge setup: key-repartition a thin micro-batch
-        (parallelism now; the dedup groupBy + lookup join downstream
-        reuse this exact hash-partitioning), persist it, and collect
-        the touched bucket ids (bounded by n_buckets)."""
-        n_part = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        if batch_df.rdd.getNumPartitions() < n_part:
-            batch_df = batch_df.repartition(n_part, *KEY_COLS)
-        batch_df = batch_df.persist()
-        touched = [
-            r.b
-            for r in batch_df.select(
-                bucket_expr(self.n_buckets).alias("b")
-            ).distinct().collect()
-        ]
-        return batch_df, touched
+    def _touched_buckets(self, batch_df: DataFrame) -> list[int]:
+        """The bucket ids the batch's keys touch (≤ n_buckets), collected
+        over the batch as it arrives: the sink neither caches nor re-keys
+        it, so the dedup's exchange is the batch's one key shuffle. The
+        source is scanned by this collect, by the merge (once, into the
+        join cache) and by the quarantine count, plus the staged ``bad``
+        write in batches with quarantined rows."""
+        b = bucket_expr(self.n_buckets).alias("b")
+        return [r.b for r in batch_df.select(b).distinct().collect()]
 
     def _commit_lineage_and_audits(self, res: MergeResult, batch_id: int, audit: str) -> None:
         """Shared commit tail for both sinks: stage the audit outputs while

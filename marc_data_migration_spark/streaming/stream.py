@@ -2,9 +2,10 @@
 sequential file tail (record_update.py:182-254) becomes:
 
     readStream (file source over staged WAL chunks; Kafka/CDC source
-    in production — same downstream code)
-      → foreachBatch: salted repartition → max-LSN dedup → fuzzy gate
-        → MERGE into the sink → lineage append
+    in production — same downstream code; every JSON source decodes
+    through parse_wal_json)
+      → foreachBatch: optional salted repartition → max-LSN dedup →
+        fuzzy gate → MERGE into the sink → lineage append
       → checkpoint advances only after the sink commit returns, and the
         sink's batch_id ledger + LSN guard make replayed batches no-ops
         → end-to-end exactly-once.
@@ -14,9 +15,13 @@ should arrive hash-distributed by conv_id (Kafka key = conv_id) so the
 dedup shuffle is the only wide exchange per batch; shuffle partitions
 ≈ 2-3× executor cores; `maxFilesPerTrigger`/`maxOffsetsPerTrigger`
 bounds batch size so a touched-bucket rewrite stays within executor
-memory. Hot conversations are broken by the salted two-phase dedup
-(operators/dedup.py) before the merge join; AQE handles residual join
-skew.
+memory. The sink neither re-keys nor caches the batch: the dedup's
+exchange is the batch's one key shuffle, and the merge join reuses it
+(a one-partition batch dedups in place and the join shuffles it once).
+A ``salt_buckets`` batch therefore reaches the dedup's partial
+(map-side) aggregation still spread by (conv_id, salt), so a hot
+conversation's rows are pre-reduced on several tasks before its one
+final group; AQE handles residual join skew.
 """
 
 from __future__ import annotations
@@ -26,6 +31,7 @@ import os
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..schemas import CHANGES_SCHEMA, CHANGES_SCHEMA_V2
 from .sink_parquet import ParquetMergeSink
@@ -87,25 +93,13 @@ def run_stream(
     replays idempotent (a skipped batch is skipped whole).
 
     ``feed_format``: "parquet" (typed staged WAL) or "json" (a
-    Debezium-style line-JSON WAL). The JSON path is the reference's
-    permissive parse + bad-record side channel (read_marc.py:7-9,
-    record_update.py:243-252) on a real text format: PERMISSIVE mode
-    captures each malformed line in a ``_corrupt`` column; such rows
-    parse with null keys, so the existing split_bad quarantine routes
-    them to the sink's replay-guarded bad table — the raw line is
-    preserved by stuffing it into the (otherwise all-null) row's
-    ``text`` field before the transport column is dropped, so no new
-    schema or side channel is needed and exactly-once is untouched."""
-    schema = CHANGES_SCHEMA_V2 if evolved else CHANGES_SCHEMA
+    Debezium-style line-JSON WAL). The JSON feed is read as text lines
+    and decoded by :func:`parse_wal_json`, the Kafka path's decoder, so
+    a malformed line is quarantined with its raw text exactly as a
+    malformed Kafka payload is (reference permissive parse + bad-record
+    side channel, read_marc.py:7-9, record_update.py:243-252)."""
 
     def apply_batch(batch_df, batch_id: int):
-        if "_corrupt" in batch_df.columns:
-            # corrupt line ⇒ all schema fields null + raw text in
-            # _corrupt. Partial type-failures keep their parsed fields
-            # (and are quarantined via whichever key is null).
-            batch_df = batch_df.withColumn(
-                "text", F.coalesce(F.col("text"), F.col("_corrupt"))
-            ).drop("_corrupt")
         if transform is not None:
             batch_df = transform(batch_df)
         if salt_buckets:
@@ -118,19 +112,13 @@ def run_stream(
 
     reader = spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
     if feed_format == "json":
-        from pyspark.sql import types as T
-
-        with_corrupt = T.StructType(
-            schema.fields + [T.StructField("_corrupt", T.StringType(), True)]
-        )
-        stream = (
-            reader.schema(with_corrupt)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "_corrupt")
-            .json(feed_dir)
-        )
+        # a blank line is no record, but the text source yields it
+        lines = reader.text(feed_dir).filter(F.trim("value") != "")
+        stream = parse_wal_json(lines, evolved=evolved)
     elif feed_format == "parquet":
-        stream = reader.schema(schema).parquet(feed_dir)
+        stream = reader.schema(
+            CHANGES_SCHEMA_V2 if evolved else CHANGES_SCHEMA
+        ).parquet(feed_dir)
     else:
         raise ValueError(f"unknown feed_format: {feed_format}")
     q = (
@@ -144,18 +132,27 @@ def run_stream(
 
 
 def parse_wal_json(raw: DataFrame, evolved: bool = False) -> DataFrame:
-    """Decode a WAL record from a (key, value, offset-ish) transport
-    frame — the schema-typed parse used by :func:`kafka_changes_stream`
-    and unit-testable on any batch DataFrame with (value: binary/str)
-    columns. The JSON payload carries the logical fields including
-    ``lsn`` (transport offsets are partition-scoped and non-comparable
-    across partitions, so the WAL's own LSN is authoritative —
-    reference: file order, record_update.py:182-254)."""
+    """Decode WAL records from a JSON ``value`` column (binary or
+    string) — the one decoder of the Kafka tail and the line-JSON file
+    feed. The payload's own ``lsn`` is authoritative (transport offsets
+    are partition-scoped — reference: file order, record_update.py:
+    182-254). PERMISSIVE: a malformed payload keeps the fields that
+    parsed, the rest null, and its raw text lands in a null ``text``,
+    so split_bad quarantines it with the raw payload preserved."""
     schema = CHANGES_SCHEMA_V2 if evolved else CHANGES_SCHEMA
-    parsed = raw.select(
-        F.from_json(F.col("value").cast("string"), schema).alias("c")
+    with_corrupt = T.StructType(
+        schema.fields + [T.StructField("_corrupt", T.StringType(), True)]
     )
-    return parsed.select("c.*")
+    parsed = raw.select(
+        F.from_json(
+            F.col("value").cast("string"),
+            with_corrupt,
+            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
+        ).alias("c")
+    ).select("c.*")
+    return parsed.withColumn(
+        "text", F.coalesce(F.col("text"), F.col("_corrupt"))
+    ).drop("_corrupt")
 
 
 def kafka_changes_stream(

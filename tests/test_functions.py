@@ -16,7 +16,6 @@ from marc_data_migration_spark.functions.normalize import (
 )
 from marc_data_migration_spark.functions.similarity import (
     jaccard_tokens,
-    ratio_py,
     token_sort_ratio,
     token_sort_ratio_py,
 )
@@ -44,15 +43,6 @@ def test_lcs_bitparallel_equals_dp():
         assert lcs_len(a, b) == lcs_dp(a, b), (a, b)
 
 
-def test_ratio_py_pinned_values():
-    assert ratio_py("hello world", "hello world") == 100
-    assert ratio_py("", "") == 0
-    assert ratio_py("abc", "xyz") == 0
-    assert ratio_py("new york mets", "new YORK mets") == 100  # case-folded
-    # Ratcliff/Obershelp on 'abcd' vs 'abce': 3 matching of 8 → 75
-    assert ratio_py("abcd", "abce") == 75
-
-
 def test_token_sort_ratio_pinned_values():
     # word order is irrelevant after token sort
     assert token_sort_ratio_py("fox jumps over", "over jumps fox") == 100
@@ -60,6 +50,12 @@ def test_token_sort_ratio_pinned_values():
     # punctuation stripped by full_process
     assert token_sort_ratio_py("a, b. c!", "c b a") == 100
     assert token_sort_ratio_py("completely different", "unrelated words") < 50
+    assert token_sort_ratio_py("hello world", "hello world") == 100
+    assert token_sort_ratio_py("", "") == 0
+    assert token_sort_ratio_py("abc", "xyz") == 0
+    assert token_sort_ratio_py("new york mets", "new YORK mets") == 100  # case-folded
+    # Ratcliff/Obershelp on 'abcd' vs 'abce': 3 matching of 8 → 75
+    assert token_sort_ratio_py("abcd", "abce") == 75
 
 
 def test_similarity_udf_matches_python(spark):

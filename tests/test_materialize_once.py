@@ -21,6 +21,7 @@ from marc_data_migration_spark.operators.text_dedup import (
     minhash_signatures,
     ngram_jaccard_pairs,
     shared_passage_pairs,
+    simhash_banded_pairs,
 )
 
 
@@ -95,6 +96,16 @@ def test_fuzzy_decontaminate_hit_pairs_materialized(spark):
     assert _rows(flagged) == _rows(
         fuzzy_decontaminate(_docs(spark), bench2, threshold=0.1)
     )
+
+
+def test_simhash_banded_pairs_leaves_no_cache(spark):
+    """The banded signature index both join sides read is checkpointed
+    per construction, not cached: once the pairs are collected no
+    CacheManager entry is left for a later construction to reuse."""
+    spark.catalog.clearCache()
+    pairs = _rows(simhash_banded_pairs(_docs(spark)))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert pairs == _rows(simhash_banded_pairs(_docs(spark)))
 
 
 def test_checkpoint_construction_runs_no_jobs(spark):

@@ -366,8 +366,9 @@ def test_compact_audit_keeps_evolved_bad_columns(spark, tmp_path):
 
 def test_parse_wal_json_roundtrip(spark):
     """The Kafka-transport JSON parse recovers every CHANGES_SCHEMA
-    field (and the evolved column) exactly; malformed payloads become
-    all-null rows that split_bad quarantines downstream."""
+    field (and the evolved column) exactly; a malformed payload becomes
+    a null-key row that split_bad quarantines downstream, with the raw
+    payload kept in ``text``."""
     import json as _json
 
     from marc_data_migration_spark.operators.merge import split_bad
@@ -397,6 +398,7 @@ def test_parse_wal_json_roundtrip(spark):
         "U", 7, "conv-9", 3, "assistant", "hello", "search", "m1"
     )
     assert str(r.commit_ts) == "2026-02-01 00:00:05"
+    assert [b.text for b in bad.collect()] == ["{not json"]
 
 
 def test_stream_salted_with_policy_transform(spark, tmp_path):

@@ -196,6 +196,33 @@ def test_mor_same_object_retry_publishes_staged_delta(spark, tmp_path, monkeypat
     )
 
 
+@pytest.mark.parametrize("cls", [ParquetMergeSink, MorParquetMergeSink])
+def test_apply_merge_caches_only_the_join(spark, tmp_path, monkeypatch, cls):
+    """A batch materializes one frame, the merge's join cache: the sink
+    neither caches nor re-keys the batch itself, and releases the join
+    cache when the batch commits."""
+    base_pd, sink = _init_sink(spark, tmp_path, cls=cls, seed=17)
+    ch_pd = feedgen.gen_changes("upsert", n_events=200, n_convs=20, seed=17)
+    changes = spark.createDataFrame(ch_pd)
+    frame_cls = type(changes)
+    orig_persist = frame_cls.persist
+    persisted = []
+
+    def counting_persist(self, *a, **kw):
+        persisted.append(self)
+        return orig_persist(self, *a, **kw)
+
+    monkeypatch.setattr(frame_cls, "persist", counting_persist)
+    spark.catalog.clearCache()
+    res = sink.apply_merge(changes, batch_id=1)
+    assert persisted == [res.cached]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    want = oracle.replay(base_pd, ch_pd)
+    assert _final_text(sink.read()) == list(
+        zip(want.conv_id, want.turn_idx, want.text.fillna("<N>"), want.lsn)
+    )
+
+
 def test_missing_props_raises(spark, tmp_path):
     """The props file is the only source of schema and layout: a path
     that holds data without it cannot be opened, through either door."""

@@ -1,8 +1,9 @@
 """Per-phase wall-time profile of one end-to-end stream run — where a
-micro-batch's time actually goes (prepare / base read / merge / staging
-write / audit staging + ledger commit / publish of the staged audits and
-buckets or delta), summed across batches. Used to pick stream-path
-optimization targets; results land in BENCH/BASELINE.md.
+micro-batch's time actually goes (touched-bucket collect / base read /
+merge / staging write / audit staging + ledger commit / publish of the
+staged audits and buckets or delta), summed across batches. Used to
+pick stream-path optimization targets; results land in
+BENCH/BASELINE.md.
 
 Usage: python tools/profile_stream.py [n_events] [n_batches] [audit]
 """
@@ -49,7 +50,7 @@ def main() -> None:
     from marc_data_migration_spark.streaming import sink_parquet as sp
     from marc_data_migration_spark.operators import merge as merge_mod
 
-    _timed(sp.ParquetMergeSink, "_prepare_batch")
+    _timed(sp.ParquetMergeSink, "_touched_buckets", "touched-bucket collect")
     # a batch's pruned base read; the run's final read() passes None
     _timed(sp.ParquetMergeSink, "_read_buckets", when=lambda sink, buckets: buckets is not None)
     _timed(sp.ParquetMergeSink, "_stage", "staging write")
