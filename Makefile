@@ -3,7 +3,7 @@
 # defects (AQE plan flips, corpus-scaled bucket widths, HLL error
 # bounds) that only appear at the larger factor.
 
-.PHONY: test test-sinks oracles oracles-sf01 bench scaling all
+.PHONY: test test-sinks profile-stream oracles oracles-sf01 bench scaling all
 
 # The tier-1 run (ROADMAP.md): one Spark executor thread per CPU.
 test:
@@ -16,6 +16,12 @@ test-sinks:
 	python -m pytest tests/test_streaming.py tests/test_mor_sink.py \
 	tests/test_table_properties.py tests/test_merge_oracle.py \
 	tests/test_fuzzy_gate.py tests/test_sinks_sql.py -q -p no:cacheprovider
+
+# Seconds per apply_merge phase (`phase_sec`) of a small stream run, under
+# the tier-1 environment; STREAM_SINK=cow|mor and STREAM_AUDIT pass through.
+profile-stream:
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+	STREAM_EVENTS=20000 STREAM_BATCHES=2 python bench.py --stream
 
 oracles:
 	python tools/check_oracles.py

@@ -451,7 +451,8 @@ def stream_e2e_run(
     stage a synthetic WAL as parquet chunks, then time readStream →
     foreachBatch → dedup/merge → MERGE commit + lineage append,
     checkpoint included. ``sink_mode`` — 'cow' rewrites touched buckets
-    per batch; 'mor' writes per-batch delta files (merge-on-read)."""
+    per batch; 'mor' writes per-batch delta files (merge-on-read).
+    ``phase_sec`` is the sink's ``phase_s``, summed over the batches."""
     import shutil
     import tempfile
 
@@ -520,6 +521,7 @@ def stream_e2e_run(
             "events_per_sec": round(n_events / dt),
             "final_rows": n_final,
             "read_sec": round(read_sec, 2),
+            "phase_sec": {k: round(v, 2) for k, v in sink.phase_s.items()},
         }
         if sink_mode == "mor":
             out["published_deltas"] = len(sink._delta_batch_dirs())

@@ -177,7 +177,7 @@ class IcebergMergeSink:
         view = f"_changes_batch_{batch_id}"
         source.createOrReplaceTempView(view)
         self.spark.sql(merge_sql(self.table, view, payload_cols, strategy=strategy))
-        if audit == "full" and bad.take(1):
+        if audit != "lineage" and bad.take(1):
             bad.withColumn("batch_id", F.lit(batch_id)).write.mode("append").saveAsTable(
                 f"{self.table}_quarantine"
             )

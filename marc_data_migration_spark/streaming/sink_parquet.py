@@ -7,27 +7,30 @@ Scale design: the target table is hash-bucketed on conv_id into
 ``bucket=<k>`` directory partitions. The copy-on-write
 (:class:`ParquetMergeSink`) and merge-on-read
 (:class:`MorParquetMergeSink`) sinks commit a batch through one
-``apply_merge`` skeleton:
+``apply_merge`` skeleton of seven phases; each adds its seconds to the
+sink's ``phase_s`` and describes its Spark jobs as ``<phase> batch <id>``:
 
-1. a batch_id that already has lineage rows is a replay: it is skipped
-   after ``_publish`` finishes any publish the failed attempt left
-   undone (the LSN guard in the MERGE makes even a forced re-apply
-   converge);
-2. ``_touched_buckets`` collects the set of buckets the batch's keys
-   touch (at most n_buckets values to the driver); the merge's join
-   cache (step 4) is the only thing a batch materializes;
-3. ``_read_buckets`` reads ONLY those buckets (partition pruning — the
-   scan filter is on the partition column, so untouched data is never
-   read);
-4. ``apply_changes`` full-outer MERGE-applies the batch against that
-   slice;
-5. ``_stage`` writes the sink's rows for the batch, bucketed, to
-   ``_staging_batch_<id>/``;
-6. ``_commit_lineage_and_audits`` stages the routed, bad and field-audit
-   rows in the same directory while it collects the batch's lineage
-   rows (one Spark action), then writes them on the driver as
-   ``lineage/batch-<id>.parquet`` — tmp file + rename, THE ledger commit;
-7. ``_publish`` moves everything staged into place.
+1. ``ledger`` — a batch_id that already has lineage rows is a replay:
+   it is skipped after ``_publish`` finishes any publish the failed
+   attempt left undone (the LSN guard in the MERGE makes even a forced
+   re-apply converge);
+2. ``maintain`` — the staging a failed attempt left is dropped and
+   ``_maintain`` runs the table maintenance due before the batch reads;
+3. ``touched`` — ``_touched_buckets`` collects the set of buckets the
+   batch's keys touch (at most n_buckets values to the driver); the
+   merge's join cache (step 4) is the only thing a batch materializes;
+4. ``plan`` — ``_read_buckets`` reads ONLY those buckets (partition
+   pruning — the scan filter is on the partition column, so untouched
+   data is never read), ``apply_changes`` builds the full-outer MERGE
+   of the batch against that slice, and the table schema is widened;
+5. ``stage`` — ``_stage`` writes the sink's rows for the batch,
+   bucketed, to ``_staging_batch_<id>/``;
+6. ``commit`` — ``_commit_lineage_and_audits`` stages the routed, bad
+   and field-audit rows in the same directory while it collects the
+   batch's lineage rows (one Spark action), then writes them on the
+   driver as ``lineage/batch-<id>.parquet`` — tmp file + rename, THE
+   ledger commit;
+7. ``publish`` — ``_publish`` moves everything staged into place.
 
 A crash before the ledger rename replays the batch on an untouched
 table; a crash after it is rolled forward by ``_publish`` (same-object
@@ -57,7 +60,10 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
+from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -67,7 +73,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..operators.merge import MergeResult, apply_changes
+from ..operators.merge import MergeResult, apply_changes, split_bad
 from ..plans.lineage import batch_lineage
 from ..schemas import KEY_COLS, LINEAGE_SCHEMA, TRANSCRIPTS_SCHEMA
 
@@ -124,6 +130,7 @@ class ParquetMergeSink:
         self.field_audit_path = os.path.join(path, "field_audit")
         self.n_buckets, self.schema = self._resolve_layout(n_buckets)
         self._applied_ids: set[int] | None = None  # lazy ledger cache
+        self.phase_s: Counter[str] = Counter()  # seconds per apply_merge phase
         self._recover_compaction()
         self._recover_staging()
 
@@ -276,49 +283,71 @@ class ParquetMergeSink:
         (reference fields-audit log, record_update.py:626-641) — the
         most detailed and most expensive mode; "lineage" writes only the
         aggregated lineage ledger (always on — it is the exactly-once
-        guard and the north_rule metrics table). The whole commit tail,
-        audit writes staged alongside the ledger collect, measured about
-        a fifth of apply_merge on cdcbench's workloads (4 CPUs: 0.17–0.21
-        s of 0.78–0.99 s with "full", 0.23–0.34 s of 1.48–1.96 s with
-        "fields"); "lineage" cut the tail by 0.05 s and 0.15 s. At
-        maximum-throughput tailing the audit is the first thing to shed."""
+        guard and the north_rule metrics table). The ``commit`` entry of
+        ``phase_s`` is what an audit mode costs; at maximum-throughput
+        tailing the audit is the first thing to shed."""
         if audit not in ("fields", "full", "lineage"):
             raise ValueError(f"unknown audit mode: {audit}")
-        if batch_id in self._ledger():
+        with self._phase("ledger", batch_id):
+            replay = batch_id in self._ledger()
+        if replay:
             # A same-object retry after a failure between the ledger
             # commit and the publish: the staged rows are complete (they
             # are staged before the ledger), so roll them forward here
             # exactly like init-time recovery would.
-            self._publish(batch_id)
+            with self._phase("publish", batch_id):
+                self._publish(batch_id)
             return None
-        # left by an attempt that failed before the ledger
-        shutil.rmtree(self._staging(batch_id), ignore_errors=True)
-        self._maintain()
-        touched = self._touched_buckets(batch_df)
+        with self._phase("maintain", batch_id):
+            # left by an attempt that failed before the ledger
+            shutil.rmtree(self._staging(batch_id), ignore_errors=True)
+            self._maintain()
+        with self._phase("touched", batch_id):
+            touched = self._touched_buckets(batch_df)
         res = None
         try:
-            base = self._read_buckets(touched) if self.exists() else self._empty_base(batch_df)
-            # persist_join: the dedup+join+gate plan is evaluated exactly
-            # once (by the staging write); routed/lineage/bad then project
-            # from the cache instead of re-running the merge.
-            res = apply_changes(
-                base,
-                batch_df,
-                persist_join=True,
-                field_audit=(audit == "fields"),
-                **merge_opts,
-            )
-            # a stream onto an un-init'd path creates the table here
-            self._widen_schema(res.final.schema)
-            self._stage(res, touched, batch_id)
-            self._commit_lineage_and_audits(res, batch_id, audit)
-            self._publish(batch_id)
+            with self._phase("plan", batch_id):
+                base = self._read_buckets(touched) if self.exists() else self._empty_base(batch_df)
+                # persist_join: the dedup+join+gate plan is evaluated
+                # exactly once (by the staging write); routed/lineage/bad
+                # then project from the cache instead of re-running it.
+                res = apply_changes(
+                    base,
+                    batch_df,
+                    persist_join=True,
+                    field_audit=(audit == "fields"),
+                    **merge_opts,
+                )
+                # a stream onto an un-init'd path creates the table here
+                self._widen_schema(res.final.schema)
+            with self._phase("stage", batch_id):
+                self._stage(res, touched, batch_id)
+            with self._phase("commit", batch_id):
+                self._commit_lineage_and_audits(res, batch_id, audit)
+            with self._phase("publish", batch_id):
+                self._publish(batch_id)
         finally:
             # also on failure: a retry of a ledgered batch returns early
             # above and would leave the join cache in executor memory
             if res is not None:
                 res.unpersist()
         return res
+
+    @contextmanager
+    def _phase(self, name: str, batch_id: int):
+        """Run one step of apply_merge as phase ``name``: add its seconds
+        to ``phase_s`` and label its Spark jobs ``<name> batch <id>``
+        (pool threads inherit the label), then restore the caller's job
+        description."""
+        sc = self.spark.sparkContext
+        caller = sc.getLocalProperty("spark.job.description")
+        sc.setLocalProperty("spark.job.description", f"{name} batch {batch_id}")
+        t0 = time.perf_counter()
+        try:
+            yield
+        finally:
+            self.phase_s[name] += time.perf_counter() - t0
+            sc.setLocalProperty("spark.job.description", caller)
 
     # -- sink hooks: what a batch writes, and when readers see it -------
     def _maintain(self) -> None:
@@ -374,14 +403,16 @@ class ParquetMergeSink:
                 os.replace(src, dst)
 
     def _touched_buckets(self, batch_df: DataFrame) -> list[int]:
-        """The bucket ids the batch's keys touch (≤ n_buckets), collected
-        over the batch as it arrives: the sink neither caches nor re-keys
-        it, so the dedup's exchange is the batch's one key shuffle. The
-        source is scanned by this collect, by the merge (once, into the
-        join cache) and by the quarantine count, plus the staged ``bad``
-        write in batches with quarantined rows."""
+        """The bucket ids the batch's well-formed keys touch (≤ n_buckets),
+        collected over the batch as it arrives: the sink neither caches
+        nor re-keys it, so the dedup's exchange is the batch's one key
+        shuffle. Quarantined rows touch no bucket (xxhash64 of a null
+        conv_id is 42, a real bucket). The source is scanned by this
+        collect, by the merge (once, into the join cache) and by the
+        quarantine count, plus the staged ``bad`` write in batches with
+        quarantined rows."""
         b = bucket_expr(self.n_buckets).alias("b")
-        return [r.b for r in batch_df.select(b).distinct().collect()]
+        return [r.b for r in split_bad(batch_df)[0].select(b).distinct().collect()]
 
     def _commit_lineage_and_audits(self, res: MergeResult, batch_id: int, audit: str) -> None:
         """Shared commit tail for both sinks: stage the audit outputs while
@@ -406,7 +437,7 @@ class ParquetMergeSink:
 
             def submit(name: str, df: DataFrame):
                 # wrapped here, per output: each wrapper copies this
-                # thread's local properties (the caller's job group) at
+                # thread's local properties (job group, phase label) at
                 # wrap time, into a copy of its own
                 return pool.submit(inheritable_thread_target(self.spark)(stage), name, df)
 

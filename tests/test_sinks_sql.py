@@ -319,3 +319,40 @@ def test_iceberg_ledger_probe(spark, monkeypatch):
     finally:
         spark.catalog.dropTempView("t")
         spark.catalog.dropTempView("t_lineage")
+
+
+def test_iceberg_fields_audit_keeps_quarantine(spark, monkeypatch):
+    """Every audit mode but "lineage" keeps the quarantined rows, as the
+    parquet sinks do: under audit="fields" a batch with null-key rows
+    appends them to ``<table>_quarantine``. The sink is built without
+    its constructor, its table backed by a temp view; the MERGE is
+    skipped and each table write recorded with its row count."""
+    from pyspark.sql import SparkSession
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from marc_data_migration_spark.streaming.sink_iceberg import IcebergMergeSink
+
+    sink = object.__new__(IcebergMergeSink)
+    sink.spark, sink.table, sink.n_buckets = spark, "t", 4
+    ch_pd = feedgen.gen_changes("upsert", n_events=20, n_convs=4, seed=3)
+    ch_pd.loc[:1, "conv_id"] = None
+    batch = spark.createDataFrame(ch_pd)
+    batch.limit(0).createOrReplaceTempView("t")
+    real_sql = SparkSession.sql
+    written = {}
+
+    def sql(self, query, *a, **kw):
+        if query.lstrip().startswith("MERGE"):
+            return None
+        return real_sql(self, query, *a, **kw)
+
+    def save_as_table(self, name, *a, **kw):
+        written[name] = self._df.count()
+
+    monkeypatch.setattr(SparkSession, "sql", sql)
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", save_as_table)
+    try:
+        sink.apply_merge(batch, batch_id=0, audit="fields")
+    finally:
+        spark.catalog.dropTempView("t")
+    assert written["t_quarantine"] == 2, written

@@ -6,10 +6,15 @@ uninterrupted run; replayed batches are no-ops (exactly-once).
 from __future__ import annotations
 
 import numpy as np
+import pytest
+from pyspark.sql import functions as F
 
 from marc_data_migration_spark import feedgen, oracle
 from marc_data_migration_spark.schemas import KEY_COLS
-from marc_data_migration_spark.streaming.sink_parquet import ParquetMergeSink
+from marc_data_migration_spark.streaming.sink_parquet import (
+    MorParquetMergeSink,
+    ParquetMergeSink,
+)
 from marc_data_migration_spark.streaming.stream import run_stream, stage_feed_chunks
 
 
@@ -611,6 +616,86 @@ def test_audit_staging_jobs_count_in_callers_job_group(spark, tmp_path):
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs[audit] = len(sc.statusTracker().getJobIdsForGroup(group))
     assert jobs["full"] > jobs["lineage"] > 0, jobs
+
+
+PHASES = {"ledger", "maintain", "touched", "plan", "stage", "commit", "publish"}
+
+
+@pytest.mark.parametrize("cls", [ParquetMergeSink, MorParquetMergeSink])
+def test_apply_merge_times_and_labels_its_phases(spark, tmp_path, cls):
+    """apply_merge reports on itself: its phase seconds add up to the
+    call's wall time, every Spark job of the batch carries its phase as
+    the job description (the pool-thread audit writes too), the
+    caller's description is restored, and a replay stages and commits
+    nothing."""
+    import re
+    import time
+
+    import pandas as pd
+
+    base_pd = feedgen.gen_transcripts(n_convs=20, seed=41)
+    ch_pd = feedgen.gen_changes("upsert", n_events=200, n_convs=20, seed=41)
+    ch_pd = pd.concat([ch_pd, ch_pd.head(2).assign(conv_id=None)], ignore_index=True)
+    sink = cls(spark, str(tmp_path / "t"), n_buckets=8)
+    sink.init(spark.createDataFrame(base_pd))
+    batch = spark.createDataFrame(ch_pd)
+    sc = spark.sparkContext
+    group = f"phases-{cls.__name__}"
+    sc.setJobGroup(group, group)  # also sets the caller's job description
+    try:
+        t0 = time.perf_counter()
+        sink.apply_merge(batch, batch_id=0, audit="fields")
+        wall = time.perf_counter() - t0
+        assert sc.getLocalProperty("spark.job.description") == group
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(sink.phase_s) == PHASES
+    assert 0.95 * wall <= sum(sink.phase_s.values()) <= wall
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    ids = sc.statusTracker().getJobIdsForGroup(group)
+    descs = [store.job(i).description() for i in ids]
+    labels = [d.get() if d.isDefined() else None for d in descs]
+    assert labels and all(
+        re.fullmatch(rf"({'|'.join(PHASES)}) batch 0", str(x)) for x in labels
+    ), labels
+    # no job of the batch ran outside the group: the audit writes in the
+    # pool threads inherit the group and the phase label
+    assert not [i for i in sc.statusTracker().getJobIdsForGroup() if i > min(ids)]
+    before = dict(sink.phase_s)
+    assert sink.apply_merge(batch, batch_id=0) is None
+    assert (sink.phase_s["stage"], sink.phase_s["commit"]) == (
+        before["stage"],
+        before["commit"],
+    )
+
+
+def test_quarantined_rows_touch_no_bucket(spark, tmp_path):
+    """A batch whose only row is quarantined rewrites no bucket: the
+    data-file set is unchanged and the ledger counts the row. The
+    bucket hash of a null key is a real bucket, so a touched-bucket
+    collect over the raw batch would rewrite it."""
+    import os
+
+    _, ch_pd, sink = _setup(spark, tmp_path, n_events=50, seed=43)
+
+    def data_files():
+        return sorted(
+            os.path.join(d, f)
+            for d, _, fs in os.walk(sink.data_path)
+            for f in fs
+            if f.endswith(".parquet")
+        )
+
+    before = data_files()
+    bad = spark.createDataFrame(ch_pd.head(1)).withColumn(
+        "turn_idx", F.lit(None).cast("int")
+    )
+    sink.apply_merge(bad, batch_id=0)
+    assert data_files() == before
+    ledger = sink.lineage().filter("batch_id = 0")
+    assert ledger.agg(F.sum("rows_quarantined")).first()[0] == 1
 
 
 def test_crash_point_sweep_audit_compaction(spark, tmp_path):
