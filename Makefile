@@ -15,7 +15,8 @@ test-sinks:
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
 	python -m pytest tests/test_streaming.py tests/test_mor_sink.py \
 	tests/test_table_properties.py tests/test_merge_oracle.py \
-	tests/test_fuzzy_gate.py tests/test_sinks_sql.py -q -p no:cacheprovider
+	tests/test_fuzzy_gate.py tests/test_sinks_sql.py \
+	tests/test_property.py::test_random_feed_matches_oracle -q -p no:cacheprovider
 
 # Seconds per apply_merge phase (`phase_sec`) of a small stream run, under
 # the tier-1 environment; STREAM_SINK=cow|mor and STREAM_AUDIT pass through.

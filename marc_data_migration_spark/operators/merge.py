@@ -52,22 +52,33 @@ class MergeResult:
             self.cached.unpersist()
 
 
-def split_bad(changes: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Quarantine malformed changes (null key / unknown op) — the
-    reference's bad-record side channel (record_update.py:243-252).
-
-    ``op IS NULL`` must be an explicit disjunct: ``~isin(...)`` is NULL
-    (not True) for a null op, and a NULL predicate fails BOTH ``filter(p)``
-    and ``filter(~p)`` — without it, null-op rows would silently vanish
-    from good AND bad instead of being quarantined."""
-    is_bad = (
+def is_bad():
+    """The quarantine predicate: a null key or LSN, or an op outside
+    I/U/D. It must never be NULL: a NULL predicate fails BOTH
+    ``filter(p)`` and ``filter(~p)``, and ``~isin(...)`` is NULL for a
+    null op, hence the explicit ``op IS NULL`` disjunct. So
+    ``when(~is_bad(), x)`` is NULL exactly on the bad rows."""
+    return (
         F.col("conv_id").isNull()
         | F.col("turn_idx").isNull()
         | F.col("lsn").isNull()
         | F.col("op").isNull()
         | ~F.col("op").isin("I", "U", "D")
     )
-    return changes.filter(~is_bad), changes.filter(is_bad)
+
+
+def split_bad(changes: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(good, bad): the reference's bad-record split (record_update.py:243-252)."""
+    return changes.filter(~is_bad()), changes.filter(is_bad())
+
+
+def salted(changes: DataFrame, salt_buckets: int) -> DataFrame:
+    """Spread a hot key's changes over ``salt_buckets`` tasks by (conv_id,
+    salt) for the dedup's partial aggregation; 0 leaves them as they are."""
+    if not salt_buckets:
+        return changes
+    salt = F.pmod(F.xxhash64("lsn"), F.lit(salt_buckets))
+    return changes.repartition(salt_buckets, F.col("conv_id"), salt)
 
 
 def gate_ratio(candidate, incoming_text, existing_text):
@@ -104,6 +115,7 @@ def apply_changes(
     require_perfect_match: bool = False,
     persist_join: bool = False,
     field_audit: bool = False,
+    salt_buckets: int = 0,
 ) -> MergeResult:
     """Apply a change batch to the target table state, returning the
     new state plus routing/quarantine side outputs.
@@ -130,7 +142,7 @@ def apply_changes(
       strings so the audit is engine-portable.
     """
     good, bad = split_bad(changes)
-    latest = latest_per_key(good, method=dedup_method)
+    latest = latest_per_key(salted(good, salt_buckets), method=dedup_method)
 
     t_payload = [c for c in base.columns if c not in KEY_COLS and c != "lsn"]
     c_payload = [c for c in latest.columns if c not in KEY_COLS and c not in CHANGE_META]
@@ -188,7 +200,7 @@ def apply_changes(
         .when(is_insert & ~insert_ok, F.lit("skipped-insert"))
     )
     # With persist_join the expensive dedup+join+gate runs ONCE; final,
-    # routed, lineage, and bad all project from the cache instead of
+    # routed, delta and lineage all project from the cache instead of
     # re-executing the plan (one merge evaluation per micro-batch).
     j = j.withColumn("_route", route).withColumn(
         "_conflict", (matched_update & ~gate_ok).cast("int")

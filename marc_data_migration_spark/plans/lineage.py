@@ -17,14 +17,16 @@ def batch_lineage(
     routed: DataFrame,
     batch_id: int,
     n_partitions: int = 8,
-    bad: DataFrame | None = None,
+    quarantined: int = 0,
 ) -> DataFrame:
     """Aggregate a batch's routed outcomes into lineage rows, one per
     key-hash partition (per-partition applied LSN ranges — north_rule),
-    plus one summary row counting ``bad`` (the quarantined changes; None
-    counts 0). One plan: groupBy(partition_id) with conditional aggs,
-    unioned with a global count over ``bad``, so a single action yields
-    the whole ledger record."""
+    plus one summary row carrying ``quarantined``, the batch's count of
+    quarantined changes, which the caller already holds. One plan:
+    groupBy(partition_id) with conditional aggs, unioned with a literal
+    row, so a single action over ``routed`` yields the whole ledger
+    record."""
+    counts = ("rows_applied", "rows_inserted", "rows_updated", "rows_deleted", "conflict_count")
     by_part = routed.withColumn(
         "partition_id", F.pmod(F.xxhash64("conv_id"), F.lit(n_partitions)).cast("int")
     )
@@ -46,11 +48,7 @@ def batch_lineage(
             "partition_id",
             "lsn_min",
             "lsn_max",
-            F.col("rows_applied").cast("long"),
-            F.col("rows_inserted").cast("long"),
-            F.col("rows_updated").cast("long"),
-            F.col("rows_deleted").cast("long"),
-            F.col("conflict_count").cast("long"),
+            *[F.col(c).cast("long") for c in counts],
             # per-partition rows carry 0; the batch total lives on the
             # partition_id=-1 summary row so sum() over rows is correct
             F.lit(0).cast("long").alias("rows_quarantined"),
@@ -61,22 +59,17 @@ def batch_lineage(
     # quarantine count and guarantees a ledger entry even for a batch
     # whose every row was quarantined (routed empty -> no per-partition
     # rows -> without this the replay guard would re-append bad rows).
-    # A global aggregate always yields exactly one row, and it stays in
-    # the JVM: never createDataFrame over Python rows, whose pickled
-    # partitions cost ~4.6 s per batch through the Python runner for one
-    # literal row (decomposed A/B in BENCH/BASELINE.md r05).
-    counted = bad if bad is not None else routed.limit(0)
-    summary = counted.agg(F.count(F.lit(1)).alias("rows_quarantined")).select(
+    # Literals over a one-partition range(1) stay in the JVM: never
+    # createDataFrame over Python rows, whose pickled partitions cost
+    # ~4.6 s per batch through the Python runner for one literal row
+    # (decomposed A/B in BENCH/BASELINE.md r05).
+    summary = routed.sparkSession.range(0, 1, 1, 1).select(
         F.lit(int(batch_id)).cast("long").alias("batch_id"),
         F.lit(-1).cast("int").alias("partition_id"),
         F.lit(None).cast("long").alias("lsn_min"),
         F.lit(None).cast("long").alias("lsn_max"),
-        F.lit(0).cast("long").alias("rows_applied"),
-        F.lit(0).cast("long").alias("rows_inserted"),
-        F.lit(0).cast("long").alias("rows_updated"),
-        F.lit(0).cast("long").alias("rows_deleted"),
-        F.lit(0).cast("long").alias("conflict_count"),
-        "rows_quarantined",
+        *[F.lit(0).cast("long").alias(c) for c in counts],
+        F.lit(int(quarantined)).cast("long").alias("rows_quarantined"),
         F.current_timestamp().alias("commit_ts"),
     )
     return per_part.unionByName(summary)

@@ -58,9 +58,9 @@ CHANGES_SCHEMA_V2 = T.StructType(
 # the analogue of the reference's audit/counter side outputs
 # (record_update.py:26-34, :262-286; field_replacement_count.py).
 # Convention: one row per key-hash partition plus a batch-summary row
-# with partition_id = -1 carrying the quarantine total (per-partition
-# rows hold rows_quarantined = 0 so SUM() over the table is correct) —
-# see plans/lineage.py batch_lineage.
+# with partition_id = -1 carrying the quarantine total the sink counted
+# before the merge (per-partition rows hold rows_quarantined = 0 so
+# SUM() over the table is correct) — see plans/lineage.py batch_lineage.
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("batch_id", T.LongType(), False),

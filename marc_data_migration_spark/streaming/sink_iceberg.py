@@ -93,6 +93,7 @@ def prepare_source(
     fuzzy_threshold: int = 50,
     require_perfect_match: bool = False,
     dedup_method: str = "agg",
+    salt_buckets: int = 0,
 ) -> tuple[DataFrame, DataFrame]:
     """Build the MERGE source the SQL in :func:`merge_sql` assumes:
     per-key max-LSN deduped changes with a precomputed ``gate_ok``.
@@ -103,13 +104,14 @@ def prepare_source(
     left-joined here and the Arrow UDF computes the gate up front,
     mirroring record_update.py:352-443's lookup-then-compare order.
     Returns ``(source, bad)`` — quarantined rows (null key / unknown
-    op) are the caller's to persist, same contract as ParquetMergeSink.
-    Runs on plain Spark (unit-testable without an Iceberg runtime)."""
+    op) are the caller's to persist, same contract as ParquetMergeSink;
+    ``salt_buckets`` as in apply_changes. Runs on plain Spark
+    (unit-testable without an Iceberg runtime)."""
     from ..operators.dedup import latest_per_key
-    from ..operators.merge import gate_ratio, passes_gate, split_bad
+    from ..operators.merge import gate_ratio, passes_gate, salted, split_bad
 
     good, bad = split_bad(batch_df)
-    latest = latest_per_key(good, method=dedup_method)
+    latest = latest_per_key(salted(good, salt_buckets), method=dedup_method)
     if not fuzzy_gate:
         return latest.withColumn("gate_ok", F.lit(True)), bad
     # _t_hit marks a join hit independently of the target text value:
@@ -177,7 +179,8 @@ class IcebergMergeSink:
         view = f"_changes_batch_{batch_id}"
         source.createOrReplaceTempView(view)
         self.spark.sql(merge_sql(self.table, view, payload_cols, strategy=strategy))
-        if audit != "lineage" and bad.take(1):
+        quarantined = bad.count()
+        if audit != "lineage" and quarantined:
             bad.withColumn("batch_id", F.lit(batch_id)).write.mode("append").saveAsTable(
                 f"{self.table}_quarantine"
             )
@@ -189,6 +192,5 @@ class IcebergMergeSink:
                 *KEY_COLS, F.col("op"), F.col("lsn"), F.lit("applied").alias("route"),
                 F.lit(0).alias("conflict"),
             ),
-            batch_id,
-            bad=bad,
+            batch_id, quarantined=quarantined,
         ).write.mode("append").saveAsTable(lineage_tbl)

@@ -16,8 +16,8 @@ sink's ``phase_s`` and describes its Spark jobs as ``<phase> batch <id>``:
    re-apply converge);
 2. ``maintain`` — the staging a failed attempt left is dropped and
    ``_maintain`` runs the table maintenance due before the batch reads;
-3. ``touched`` — ``_touched_buckets`` collects the set of buckets the
-   batch's keys touch (at most n_buckets values to the driver); the
+3. ``touched`` — ``_touched_buckets`` collects the buckets the batch's
+   keys touch and its quarantine count (≤ n_buckets + 1 rows); the
    merge's join cache (step 4) is the only thing a batch materializes;
 4. ``plan`` — ``_read_buckets`` reads ONLY those buckets (partition
    pruning — the scan filter is on the partition column, so untouched
@@ -27,9 +27,9 @@ sink's ``phase_s`` and describes its Spark jobs as ``<phase> batch <id>``:
    bucketed, to ``_staging_batch_<id>/``;
 6. ``commit`` — ``_commit_lineage_and_audits`` stages the routed, bad
    and field-audit rows in the same directory while it collects the
-   batch's lineage rows (one Spark action), then writes them on the
-   driver as ``lineage/batch-<id>.parquet`` — tmp file + rename, THE
-   ledger commit;
+   batch's lineage rows from the join cache (one Spark action), then
+   writes them on the driver as ``lineage/batch-<id>.parquet`` — tmp
+   file + rename, THE ledger commit;
 7. ``publish`` — ``_publish`` moves everything staged into place.
 
 A crash before the ledger rename replays the batch on an untouched
@@ -65,7 +65,6 @@ from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
-import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -73,7 +72,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..operators.merge import MergeResult, apply_changes, split_bad
+from ..operators.merge import MergeResult, apply_changes, is_bad
 from ..plans.lineage import batch_lineage
 from ..schemas import KEY_COLS, LINEAGE_SCHEMA, TRANSCRIPTS_SCHEMA
 
@@ -303,14 +302,14 @@ class ParquetMergeSink:
             shutil.rmtree(self._staging(batch_id), ignore_errors=True)
             self._maintain()
         with self._phase("touched", batch_id):
-            touched = self._touched_buckets(batch_df)
+            touched, quarantined = self._touched_buckets(batch_df)
         res = None
         try:
             with self._phase("plan", batch_id):
                 base = self._read_buckets(touched) if self.exists() else self._empty_base(batch_df)
                 # persist_join: the dedup+join+gate plan is evaluated
-                # exactly once (by the staging write); routed/lineage/bad
-                # then project from the cache instead of re-running it.
+                # exactly once (by the staging write); routed, lineage and
+                # field-audit rows then project from the cache.
                 res = apply_changes(
                     base,
                     batch_df,
@@ -323,7 +322,7 @@ class ParquetMergeSink:
             with self._phase("stage", batch_id):
                 self._stage(res, touched, batch_id)
             with self._phase("commit", batch_id):
-                self._commit_lineage_and_audits(res, batch_id, audit)
+                self._commit_lineage_and_audits(res, batch_id, audit, quarantined)
             with self._phase("publish", batch_id):
                 self._publish(batch_id)
         finally:
@@ -402,30 +401,33 @@ class ParquetMergeSink:
                 os.makedirs(self.data_path, exist_ok=True)
                 os.replace(src, dst)
 
-    def _touched_buckets(self, batch_df: DataFrame) -> list[int]:
-        """The bucket ids the batch's well-formed keys touch (≤ n_buckets),
-        collected over the batch as it arrives: the sink neither caches
-        nor re-keys it, so the dedup's exchange is the batch's one key
-        shuffle. Quarantined rows touch no bucket (xxhash64 of a null
-        conv_id is 42, a real bucket). The source is scanned by this
-        collect, by the merge (once, into the join cache) and by the
-        quarantine count, plus the staged ``bad`` write in batches with
-        quarantined rows."""
-        b = bucket_expr(self.n_buckets).alias("b")
-        return [r.b for r in split_bad(batch_df)[0].select(b).distinct().collect()]
+    def _touched_buckets(self, batch_df: DataFrame) -> tuple[list[int], int]:
+        """(the buckets the batch's well-formed keys touch, its quarantined
+        row count) from one grouped collect over the batch as it arrives:
+        the sink neither caches nor re-keys it, so the dedup's exchange is
+        the batch's one key shuffle. A quarantined row falls in the NULL
+        group and touches no bucket (xxhash64(NULL) is 42, a real bucket).
+        The source is scanned by this collect and by the merge (once, into
+        the join cache), plus the staged ``bad`` write when a row is bad."""
+        b = F.when(~is_bad(), bucket_expr(self.n_buckets)).alias("b")
+        counts = {r.b: r["count"] for r in batch_df.groupBy(b).count().collect()}
+        return [k for k in counts if k is not None], counts.get(None, 0)
 
-    def _commit_lineage_and_audits(self, res: MergeResult, batch_id: int, audit: str) -> None:
+    def _commit_lineage_and_audits(
+        self, res: MergeResult, batch_id: int, audit: str, quarantined: int
+    ) -> None:
         """Shared commit tail for both sinks: stage the audit outputs while
-        the ledger record is collected, then commit the batch by writing
-        its ledger file. Each audit write runs in its own thread (one
-        Spark job each, projecting from the join cache the staging write
-        already materialized), so the commit waits for the slowest write,
-        not their sum. A failure here precedes the ledger: the batch
-        replays and re-stages. The staged audits become visible only in
-        ``_publish``, after the ledger, so every audit row lands exactly
-        once. The writes coalesce to few files: a long-lived stream
-        otherwise accretes shuffle-partition-count tiny files per batch
-        (measured 4.5× on the routed append)."""
+        the ledger record is collected from the join cache, then commit
+        the batch by writing its ledger file. Each audit write runs in its
+        own thread (one Spark job each; ``bad`` reads the batch, the rest
+        project from the join cache the staging write materialized), so
+        the commit waits for the slowest write, not their sum. A failure
+        here precedes the ledger: the batch replays and re-stages. The
+        staged audits become visible only in ``_publish``, after the
+        ledger, so every audit row lands exactly once. The writes coalesce
+        to few files: a long-lived stream otherwise accretes
+        shuffle-partition-count tiny files per batch (measured 4.5× on the
+        routed append)."""
         staging = self._staging(batch_id)
 
         def stage(name: str, df: DataFrame) -> None:
@@ -446,12 +448,11 @@ class ParquetMergeSink:
                 pending.append(submit("routed", res.routed))
             if audit == "fields" and res.field_diffs is not None:
                 pending.append(submit("field_audit", res.field_diffs))
-            # one action: the per-partition aggregate and the bad count
-            ledger = batch_lineage(
-                res.routed, batch_id, n_partitions=self.n_buckets, bad=res.bad
-            ).toArrow()
-            if audit != "lineage" and pc.sum(ledger["rows_quarantined"]).as_py():
+            if audit != "lineage" and quarantined:
                 pending.append(submit("bad", res.bad))
+            ledger = batch_lineage(
+                res.routed, batch_id, n_partitions=self.n_buckets, quarantined=quarantined
+            ).toArrow()
         for f in pending:
             f.result()
         # THE commit: one driver-written file, made visible by one rename
@@ -481,7 +482,6 @@ class ParquetMergeSink:
     def field_audit(self) -> DataFrame:
         """Per-field old→new diff rows (audit='fields' batches only)."""
         return self.spark.read.parquet(self.field_audit_path)
-
 
     def compact_audit(self, target_files: int = 8) -> dict[str, int]:
         """Maintenance pass for the append-only side tables: each batch

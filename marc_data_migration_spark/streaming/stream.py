@@ -4,8 +4,8 @@ sequential file tail (record_update.py:182-254) becomes:
     readStream (file source over staged WAL chunks; Kafka/CDC source
     in production — same downstream code; every JSON source decodes
     through parse_wal_json)
-      → foreachBatch: optional salted repartition → max-LSN dedup →
-        fuzzy gate → MERGE into the sink → lineage append
+      → foreachBatch: MERGE into the sink (optional salted repartition
+        → max-LSN dedup → fuzzy gate) → lineage append
       → checkpoint advances only after the sink commit returns, and the
         sink's batch_id ledger + LSN guard make replayed batches no-ops
         → end-to-end exactly-once.
@@ -18,9 +18,9 @@ bounds batch size so a touched-bucket rewrite stays within executor
 memory. The sink neither re-keys nor caches the batch: the dedup's
 exchange is the batch's one key shuffle, and the merge join reuses it
 (a one-partition batch dedups in place and the join shuffles it once).
-A ``salt_buckets`` batch therefore reaches the dedup's partial
-(map-side) aggregation still spread by (conv_id, salt), so a hot
-conversation's rows are pre-reduced on several tasks before its one
+A ``salt_buckets`` merge option salts the batch in ``apply_changes``,
+just before the dedup, whose partial (map-side) aggregation then
+pre-reduces a hot conversation's rows on several tasks before its one
 final group; AQE handles residual join skew.
 """
 
@@ -76,7 +76,6 @@ def run_stream(
     checkpoint_dir: str,
     evolved: bool = False,
     max_files_per_trigger: int = 1,
-    salt_buckets: int = 0,
     transform=None,
     feed_format: str = "parquet",
     **merge_opts,
@@ -102,12 +101,6 @@ def run_stream(
     def apply_batch(batch_df, batch_id: int):
         if transform is not None:
             batch_df = transform(batch_df)
-        if salt_buckets:
-            batch_df = batch_df.repartition(
-                salt_buckets,
-                F.col("conv_id"),
-                F.pmod(F.xxhash64("lsn"), F.lit(salt_buckets)),
-            )
         sink.apply_merge(batch_df, batch_id, **merge_opts)
 
     reader = spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)

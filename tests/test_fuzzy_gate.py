@@ -6,8 +6,13 @@ routing at 100 / ≥τ / <τ (record_update.py:352-443).
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from marc_data_migration_spark.operators.merge import apply_changes
+from marc_data_migration_spark.streaming.sink_parquet import (
+    MorParquetMergeSink,
+    ParquetMergeSink,
+)
 
 BASE = pd.DataFrame(
     [
@@ -105,28 +110,57 @@ def test_split_bad_partitions_completely(spark):
     assert good.count() == 1 and bad.count() == 3
 
 
-def test_quarantine_count_in_lineage(spark, tmp_path):
+@pytest.mark.parametrize("audit", ["full", "fields", "lineage"])
+@pytest.mark.parametrize("cls", [ParquetMergeSink, MorParquetMergeSink])
+def test_quarantine_count_in_lineage(spark, tmp_path, cls, audit):
     """Bad rows (null key / unknown op) surface in the lineage metrics
-    as rows_quarantined, not only as quarantine files."""
-    import pandas as pd
+    as rows_quarantined under every audit mode, and as quarantine files
+    under every mode but "lineage". The bucket a null conv_id hashes to
+    is touched by no well-formed row of the batch, so none of its files
+    may change."""
+    import os
+
+    from pyspark.sql import functions as F
 
     from marc_data_migration_spark import feedgen
-    from marc_data_migration_spark.streaming.sink_parquet import ParquetMergeSink
+    from marc_data_migration_spark.streaming.sink_parquet import BUCKET_COL, bucket_expr
 
+    n = 4
     base_pd = feedgen.gen_transcripts(n_convs=5, seed=3)
     ch_pd = feedgen.gen_changes("upsert", n_events=50, n_convs=5, seed=3)
+    null_key = spark.range(1).select(F.lit(None).cast("string").alias("conv_id"))
+    null_bucket = null_key.select(bucket_expr(n)).first()[0]
+    convs = spark.createDataFrame(ch_pd[["conv_id"]].drop_duplicates())
+    in_null_bucket = {
+        r.conv_id for r in convs.filter(bucket_expr(n) == null_bucket).collect()
+    }
+    ch_pd = ch_pd[~ch_pd.conv_id.isin(in_null_bucket)].reset_index(drop=True)
     ch_pd.loc[ch_pd.index[:3], "conv_id"] = None  # 3 malformed rows
-    sink = ParquetMergeSink(spark, str(tmp_path / "lake"), n_buckets=4)
+    sink = cls(spark, str(tmp_path / "lake"), n_buckets=n)
     sink.init(spark.createDataFrame(base_pd))
-    sink.apply_merge(spark.createDataFrame(ch_pd), batch_id=0)
+
+    def bucket_files():
+        return sorted(
+            os.path.join(d, f)
+            for d, _, fs in os.walk(sink.path)
+            for f in fs
+            if f"{BUCKET_COL}={null_bucket}" in d.split(os.sep) and f.endswith(".parquet")
+        )
+
+    before = bucket_files()
+    assert before  # the bucket holds base rows
+    sink.apply_merge(spark.createDataFrame(ch_pd), batch_id=0, audit=audit)
     lin = sink.lineage().toPandas()
-    assert int(lin.rows_quarantined.max()) == 3
-    assert sink.spark.read.parquet(sink.bad_path).count() == 3
+    assert int(lin.rows_quarantined.sum()) == 3
+    assert lin.loc[lin.partition_id == -1, "rows_quarantined"].tolist() == [3]
+    bad_rows = spark.read.parquet(sink.bad_path).count() if os.path.isdir(sink.bad_path) else 0
+    assert bad_rows == (3 if audit != "lineage" else 0)
+    assert bucket_files() == before
 
 
 def test_lineage_plan_is_jvm_side(spark):
-    """The batch_lineage summary row must stay JVM-side (a global count
-    over ``bad`` + lits), never a createDataFrame over Python rows: the
+    """The batch_lineage summary row must stay JVM-side (literals over
+    ``range(1)``), never a createDataFrame over Python rows: the
     latter parallelizes into defaultParallelism pickled partitions and
     a single-partition commit evaluates them through the Python runner
     sequentially (~4.6 s per batch for one literal row — the r05
@@ -144,8 +178,7 @@ def test_lineage_plan_is_jvm_side(spark):
         F.lit("updated").alias("route"),
         F.lit(0).alias("conflict"),
     )
-    bad = spark.range(3).select(F.lit(None).cast("string").alias("conv_id"))
-    lin = batch_lineage(routed, 7, n_partitions=8, bad=bad)
+    lin = batch_lineage(routed, 7, n_partitions=8, quarantined=3)
     plan = lin._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" not in plan
     # and the row itself is right: one -1 summary row counting bad

@@ -77,14 +77,16 @@ def _changes_pdf(events: list[tuple[str, int, int]]) -> pd.DataFrame:
         max_size=25,
     ),
     strategy=st.sampled_from(["replace_and_add", "replace_only"]),
+    salt_buckets=st.sampled_from([0, 3]),
 )
-def test_random_feed_matches_oracle(spark, events, strategy):
+def test_random_feed_matches_oracle(spark, events, strategy, salt_buckets):
     base_pdf = _base_pdf()
     ch_pdf = _changes_pdf(events)
     res = apply_changes(
         spark.createDataFrame(base_pdf),
         spark.createDataFrame(ch_pdf),
         strategy=strategy,
+        salt_buckets=salt_buckets,
     )
     got = res.final.orderBy(*KEY_COLS).toPandas()
     want = oracle.replay(base_pdf, ch_pdf, strategy=strategy)
