@@ -160,11 +160,16 @@ def cmd_apply(args) -> None:
     changes = spark.read.parquet(args.changes)
     if args.policy:
         changes = load_policy(args.policy).transform(changes)
-    res = apply_changes(base, changes, **_merge_opts(args))
-    res.final.write.mode("overwrite").parquet(os.path.join(args.out, "final"))
-    res.routed.write.mode("overwrite").parquet(os.path.join(args.out, "routed"))
-    res.bad.write.mode("overwrite").parquet(os.path.join(args.out, "bad"))
-    counts = {r["route"]: r["n"] for r in res.routed.groupBy("route").agg(F.count("*").alias("n")).collect()}
+    # persist_join: the final write runs the dedup, join and gate once;
+    # the routed write and the route counts project from the cache
+    res = apply_changes(base, changes, persist_join=True, **_merge_opts(args))
+    try:
+        res.final.write.mode("overwrite").parquet(os.path.join(args.out, "final"))
+        res.routed.write.mode("overwrite").parquet(os.path.join(args.out, "routed"))
+        res.bad.write.mode("overwrite").parquet(os.path.join(args.out, "bad"))
+        counts = {r["route"]: r["n"] for r in res.routed.groupBy("route").agg(F.count("*").alias("n")).collect()}
+    finally:
+        res.unpersist()
     print(json.dumps({"out": args.out, "final_rows": spark.read.parquet(os.path.join(args.out, "final")).count(), "routes": counts}))
 
 

@@ -28,10 +28,8 @@ from pyspark.sql import functions as F
 
 from ..functions.normalize import normalize_text
 from ..functions.similarity import token_sort_ratio
-from ..schemas import KEY_COLS
+from ..schemas import CHANGE_META, KEY_COLS
 from .dedup import latest_per_key
-
-CHANGE_META = {"op", "lsn", "commit_ts"}
 
 
 @dataclass

@@ -11,9 +11,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from .schemas import KEY_COLS
-
-META_COLS = {"op", "lsn", "commit_ts"}
+from .schemas import CHANGE_META, KEY_COLS
 
 
 def replay(
@@ -30,7 +28,7 @@ def replay(
     - replace_only: same merge but unmatched keys are dropped
       (reference M3, record_update.py:878-887).
     """
-    payload = [c for c in changes.columns if c not in META_COLS and c not in KEY_COLS]
+    payload = [c for c in changes.columns if c not in CHANGE_META and c not in KEY_COLS]
     state: dict[tuple, dict] = {}
     for _, row in base.iterrows():
         k = (row["conv_id"], int(row["turn_idx"]))

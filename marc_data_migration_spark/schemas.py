@@ -16,8 +16,10 @@ from pyspark.sql import types as T
 # /root/reference/processors/utils.py:31-115).
 KEY_COLS = ["conv_id", "turn_idx"]
 
-# Payload columns every version of the table carries.
-BASE_PAYLOAD_COLS = ["role", "text", "tool", "ts"]
+# Change metadata: the columns a change-feed row carries beside its
+# key and payload. ``lsn`` is also kept on the target as the LSN guard;
+# ``op`` and ``commit_ts`` never reach it.
+CHANGE_META = ("op", "lsn", "commit_ts")
 
 # transcripts — the lake/target table. `lsn` is engine metadata: the
 # LSN of the change that produced the row (-1 for initial load); it is
@@ -76,23 +78,3 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("commit_ts", T.TimestampType(), True),
     ]
 )
-
-# reconcile_src — authoritative lookup side for the fuzzy-match pass
-# (FIXTURES.md §3; mirror of the OCLC store,
-# add_response_to_database.py:15-16).
-RECONCILE_SRC_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("role", T.StringType(), True),
-        T.StructField("tool", T.StringType(), True),
-    ]
-)
-
-
-def payload_cols(schema: T.StructType) -> list[str]:
-    """Payload (non-key, non-op-metadata) columns of a changes/target
-    schema — the set MERGE copies. Additive evolution = this list grows."""
-    meta = {"op", "lsn", "commit_ts", *KEY_COLS}
-    return [f.name for f in schema.fields if f.name not in meta]

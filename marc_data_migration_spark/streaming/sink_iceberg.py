@@ -1,13 +1,17 @@
 """Iceberg MERGE sink — the production sink (north_rule: "lake upsert
-... exactly-once sink" over Iceberg). The sandbox's PySpark has no
-Iceberg runtime jar (SURVEY.md §7 risk 1), so this module:
+... exactly-once sink" over Iceberg). The merge rules have one
+statement, ``operators/merge.apply_changes``, shared with both parquet
+sinks: this sink reads the table rows the batch's keys hit, lets
+``apply_changes`` compute their new row images, and MERGEs those
+images into the table. The ``MERGE INTO`` it issues only applies rows:
+replace the whole row, delete, or insert, each behind the LSN guard
+that makes a replay or a racing writer a no-op.
 
-- generates the exact ``MERGE INTO`` SQL the engine runs on a real
-  cluster (unit-tested as text);
-- activates only when an Iceberg catalog is configured
-  (``is_available``); otherwise ``ParquetMergeSink`` is the drop-in
-  (same ``apply_merge`` contract, same semantics, tested against the
-  same oracle).
+The sink activates only when an Iceberg catalog is configured
+(``is_available``); without the Iceberg runtime jar (SURVEY.md §7
+risk 1) ``ParquetMergeSink`` is the drop-in (same ``apply_merge``
+contract and merge core). The generated SQL is unit-tested as text and
+executed in DuckDB against ``apply_changes``.
 
 On a real cluster the table is created
 ``PARTITIONED BY (bucket(N, conv_id))`` so MERGE touches only the
@@ -20,7 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import KEY_COLS
+from ..operators.merge import apply_changes, is_bad
+from ..plans.lineage import batch_lineage
+from ..schemas import KEY_COLS, LINEAGE_SCHEMA
 
 
 def is_available(spark: SparkSession) -> bool:
@@ -45,38 +51,26 @@ def create_table_sql(table: str, n_buckets: int = 256) -> str:
     )
 
 
-def merge_sql(
-    table: str,
-    source_view: str,
-    payload_cols: list[str],
-    strategy: str = "replace_and_add",
-) -> str:
-    """The MERGE the engine issues per micro-batch after max-LSN dedup.
-    Field-level merge: non-null source columns overwrite (coalesce),
-    the LSN guard makes replays no-ops, D deletes. ``replace_only``
-    (M3, record_update.py:878-887) is the same MERGE without the
-    WHEN NOT MATCHED insert clause — update-without-insert.
-    (Reference semantics M1-M3, record_update.py:843-887.)"""
-    if strategy not in ("replace_and_add", "replace_only"):
-        raise ValueError(f"unknown strategy: {strategy}")
+def merge_sql(table: str, source_view: str, cols: list[str]) -> str:
+    """The MERGE the engine issues per micro-batch. ``source_view`` holds
+    row images already merged by ``apply_changes`` (its ``delta``: key,
+    ``cols``, ``lsn`` and ``_op``), so the statement only applies them:
+    a 'D' deletes, any other row replaces the whole target row or is
+    inserted. The LSN guard makes a replay or a racing writer a no-op.
+    Column lists are explicit, never ``*``."""
     on = " AND ".join(f"t.{k} = s.{k}" for k in KEY_COLS)
-    sets = ", ".join(f"t.{c} = coalesce(s.{c}, t.{c})" for c in payload_cols)
-    ins_cols = ", ".join(KEY_COLS + payload_cols + ["lsn"])
-    ins_vals = ", ".join(f"s.{c}" for c in KEY_COLS + payload_cols + ["lsn"])
-    sql = (
+    sets = ", ".join(f"t.{c} = s.{c}" for c in [*cols, "lsn"])
+    ins_cols = [*KEY_COLS, *cols, "lsn"]
+    return (
         f"MERGE INTO {table} t\n"
         f"USING {source_view} s\n"
         f"ON {on}\n"
-        f"WHEN MATCHED AND s.op = 'D' AND s.lsn > t.lsn THEN DELETE\n"
-        f"WHEN MATCHED AND s.op <> 'D' AND s.lsn > t.lsn AND s.gate_ok THEN\n"
-        f"  UPDATE SET {sets}, t.lsn = s.lsn"
+        f"WHEN MATCHED AND s._op = 'D' AND s.lsn > t.lsn THEN DELETE\n"
+        f"WHEN MATCHED AND s.lsn > t.lsn THEN\n"
+        f"  UPDATE SET {sets}\n"
+        f"WHEN NOT MATCHED AND s._op <> 'D' THEN\n"
+        f"  INSERT ({', '.join(ins_cols)}) VALUES ({', '.join(f's.{c}' for c in ins_cols)})"
     )
-    if strategy == "replace_and_add":
-        sql += (
-            f"\nWHEN NOT MATCHED AND s.op <> 'D' THEN\n"
-            f"  INSERT ({ins_cols}) VALUES ({ins_vals})"
-        )
-    return sql
 
 
 def evolve_sql(table: str, new_cols: dict[str, str]) -> str:
@@ -86,56 +80,10 @@ def evolve_sql(table: str, new_cols: dict[str, str]) -> str:
     return f"ALTER TABLE {table} ADD COLUMNS ({cols})"
 
 
-def prepare_source(
-    batch_df: DataFrame,
-    target_keys_text: DataFrame,
-    fuzzy_gate: bool = False,
-    fuzzy_threshold: int = 50,
-    require_perfect_match: bool = False,
-    dedup_method: str = "agg",
-    salt_buckets: int = 0,
-) -> tuple[DataFrame, DataFrame]:
-    """Build the MERGE source the SQL in :func:`merge_sql` assumes:
-    per-key max-LSN deduped changes with a precomputed ``gate_ok``.
-
-    The similarity gate compares incoming vs *existing* text, so it
-    cannot live inside the MERGE's WHEN clause (no pandas UDFs in SQL
-    MERGE conditions) — instead the target's ``(key, text)`` slice is
-    left-joined here and the Arrow UDF computes the gate up front,
-    mirroring record_update.py:352-443's lookup-then-compare order.
-    Returns ``(source, bad)`` — quarantined rows (null key / unknown
-    op) are the caller's to persist, same contract as ParquetMergeSink;
-    ``salt_buckets`` as in apply_changes. Runs on plain Spark
-    (unit-testable without an Iceberg runtime)."""
-    from ..operators.dedup import latest_per_key
-    from ..operators.merge import gate_ratio, passes_gate, salted, split_bad
-
-    good, bad = split_bad(batch_df)
-    latest = latest_per_key(salted(good, salt_buckets), method=dedup_method)
-    if not fuzzy_gate:
-        return latest.withColumn("gate_ok", F.lit(True)), bad
-    # _t_hit marks a join hit independently of the target text value:
-    # a matched row with NULL target text must still be gated (compared
-    # against ''), matching operators/merge.py's coalesce semantics —
-    # keying the candidate off _t_text.isNotNull() would silently wave
-    # those rows through the gate that the parquet sink rejects.
-    t = target_keys_text.select(
-        *KEY_COLS, F.col("text").alias("_t_text"), F.lit(True).alias("_t_hit")
-    )
-    j = latest.join(t, KEY_COLS, "left_outer")
-    candidate = F.col("_t_hit").isNotNull() & (F.col("op") != "D")
-    ratio = gate_ratio(candidate, F.col("text"), F.col("_t_text"))
-    ok = passes_gate(ratio, fuzzy_threshold, require_perfect_match)
-    return (
-        j.withColumn("gate_ok", F.when(candidate, ok).otherwise(F.lit(True))).drop(
-            "_t_text", "_t_hit"
-        ),
-        bad,
-    )
-
-
 class IcebergMergeSink:
-    """Same contract as ParquetMergeSink; requires a live catalog."""
+    """Same contract and merge core as ParquetMergeSink, over an Iceberg
+    table: ``apply_changes`` decides every row, and the MERGE applies
+    the row images it computed. Requires a live catalog."""
 
     def __init__(self, spark: SparkSession, table: str, n_buckets: int = 256):
         if not is_available(spark):
@@ -153,15 +101,15 @@ class IcebergMergeSink:
         batch_df: DataFrame,
         batch_id: int,
         audit: str = "full",
-        strategy: str = "replace_and_add",
-        **gate_opts,
+        **merge_opts,
     ) -> None:
-        """run_stream-compatible contract (same kwargs ParquetMergeSink
-        accepts): dedup + gate via prepare_source, MERGE under the
-        chosen strategy, quarantine + lineage appended to sibling
-        tables, batch_id replay-guarded via the lineage ledger."""
-        from ..plans.lineage import batch_lineage
-
+        """run_stream-compatible contract (the merge options
+        ParquetMergeSink accepts): ``apply_changes`` merges the batch
+        into the table rows its well-formed keys hit, the MERGE applies
+        the resulting row images, and the quarantined rows and the
+        route-level lineage rows are appended to sibling tables. A
+        batch_id already in the lineage table is a checkpoint replay and
+        is skipped."""
         lineage_tbl = f"{self.table}_lineage"
         # the first batch creates the ledger table; a failing read of an
         # existing one must raise, not re-apply (and re-append) the batch
@@ -169,28 +117,30 @@ class IcebergMergeSink:
             self.spark.table(lineage_tbl).filter(F.col("batch_id") == batch_id).take(1)
         ):
             return  # checkpoint replay — already applied
-        target = self.spark.table(self.table).select(*KEY_COLS, "text")
-        source, bad = prepare_source(batch_df, target, **gate_opts)
-        payload_cols = [
-            c
-            for c in source.columns
-            if c not in (*KEY_COLS, "op", "lsn", "commit_ts", "gate_ok")
-        ]
+        keys = batch_df.filter(~is_bad()).select(*KEY_COLS)
+        target = self.spark.table(self.table).join(keys, KEY_COLS, "left_semi")
+        res = apply_changes(target, batch_df, persist_join=True, **merge_opts)
         view = f"_changes_batch_{batch_id}"
-        source.createOrReplaceTempView(view)
-        self.spark.sql(merge_sql(self.table, view, payload_cols, strategy=strategy))
-        quarantined = bad.count()
-        if audit != "lineage" and quarantined:
-            bad.withColumn("batch_id", F.lit(batch_id)).write.mode("append").saveAsTable(
-                f"{self.table}_quarantine"
-            )
-        # minimal ledger row (route granularity needs the join outputs
-        # the SQL MERGE keeps engine-side; the parquet sink records the
-        # full per-partition breakdown)
-        batch_lineage(
-            source.select(
-                *KEY_COLS, F.col("op"), F.col("lsn"), F.lit("applied").alias("route"),
-                F.lit(0).alias("conflict"),
-            ),
-            batch_id, quarantined=quarantined,
-        ).write.mode("append").saveAsTable(lineage_tbl)
+        try:
+            quarantined = res.bad.count()
+            # collected before the MERGE: its commit makes Spark recache
+            # every cached plan that reads the table, the join cache too,
+            # and a join recomputed over the merged table routes every
+            # applied change as stale (a delete as delete-noop). This
+            # collect also fills the cache the MERGE reads.
+            ledger = batch_lineage(
+                res.routed, batch_id, n_partitions=self.n_buckets, quarantined=quarantined
+            ).toArrow()
+            res.delta.createOrReplaceTempView(view)
+            cols = [c for c in res.delta.columns if c not in (*KEY_COLS, "lsn", "_op")]
+            self.spark.sql(merge_sql(self.table, view, cols))
+            if audit != "lineage" and quarantined:
+                res.bad.withColumn("batch_id", F.lit(batch_id)).write.mode(
+                    "append"
+                ).saveAsTable(f"{self.table}_quarantine")
+            self.spark.createDataFrame(ledger, LINEAGE_SCHEMA).write.mode(
+                "append"
+            ).saveAsTable(lineage_tbl)
+        finally:
+            self.spark.catalog.dropTempView(view)
+            res.unpersist()

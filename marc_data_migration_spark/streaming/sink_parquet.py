@@ -74,7 +74,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..operators.merge import MergeResult, apply_changes, is_bad
 from ..plans.lineage import batch_lineage
-from ..schemas import KEY_COLS, LINEAGE_SCHEMA, TRANSCRIPTS_SCHEMA
+from ..schemas import CHANGE_META, KEY_COLS, LINEAGE_SCHEMA, TRANSCRIPTS_SCHEMA
 
 BUCKET_COL = "bucket"
 PROPS_FILE = "_table_properties.json"
@@ -469,7 +469,7 @@ class ParquetMergeSink:
         return os.path.join(self.path, f"_staging_batch_{batch_id}")
 
     def _empty_base(self, batch_df: DataFrame) -> DataFrame:
-        payload = [c for c in batch_df.columns if c not in ("op", "lsn", "commit_ts")]
+        payload = [c for c in batch_df.columns if c not in CHANGE_META]
         empty = batch_df.select(*payload, F.col("lsn")).limit(0)
         return empty.select(*KEY_COLS, *[c for c in empty.columns if c not in KEY_COLS])
 

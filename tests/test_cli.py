@@ -59,6 +59,26 @@ def test_apply_lifecycle(tmp_path, spark, capsys, monkeypatch):
     import marc_data_migration_spark.__main__ as cli
 
     monkeypatch.setattr(cli, "get_spark", lambda *a, **k: spark)
+    # the merge runs once: its join cache is the one frame the command
+    # persists, and the command releases it
+    results = []
+    real_apply = cli.apply_changes
+
+    def recording_apply(*a, **kw):
+        results.append(real_apply(*a, **kw))
+        return results[-1]
+
+    monkeypatch.setattr(cli, "apply_changes", recording_apply)
+    frame_cls = type(spark.range(1))
+    orig_persist = frame_cls.persist
+    persisted = []
+
+    def counting_persist(self, *a, **kw):
+        persisted.append(self)
+        return orig_persist(self, *a, **kw)
+
+    monkeypatch.setattr(frame_cls, "persist", counting_persist)
+    spark.catalog.clearCache()
 
     base = gen_transcripts(n_convs=10, seed=3).assign(lsn=0)
     changes = gen_changes(variant="upsert", n_events=150, n_convs=10, seed=3)
@@ -84,6 +104,8 @@ def test_apply_lifecycle(tmp_path, spark, capsys, monkeypatch):
     )
     out = json.loads(capsys.readouterr().out.strip())
     assert out["final_rows"] > 0
+    assert len(results) == 1 and persisted == [results[0].cached]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert set(out["routes"]) <= {
         "updated",
         "fuzzy-updated",

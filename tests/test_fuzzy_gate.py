@@ -63,6 +63,43 @@ def test_fuzzy_routes(spark):
     assert conflicts["c4"] == 1 and sum(conflicts.values()) == 1
 
 
+def test_gate_against_null_target_text(spark):
+    """A matched target row with NULL text is still gated, compared
+    against '': a dissimilar update is a conflict, not applied."""
+    schema = "conv_id string, turn_idx long, role string, text string, tool string, ts timestamp, lsn long"
+    res = apply_changes(
+        spark.createDataFrame(BASE.iloc[[0]].assign(text=None), schema),
+        spark.createDataFrame(CHANGES.iloc[[0]].assign(text="completely new text")),
+        fuzzy_gate=True,
+    )
+    (row,) = res.routed.collect()
+    assert (row.route, row.conflict) == ("unmodified", 1)
+    (kept,) = res.final.collect()
+    assert kept.text is None and kept.lsn == -1
+
+
+def test_gate_scores_the_max_lsn_change_and_skips_deletes(spark):
+    """The gate scores only the key's max-LSN change: an earlier change
+    with matching text does not let a dissimilar later one through. A
+    delete of a matched key is never gated."""
+    ch = pd.concat(
+        [
+            CHANGES.iloc[[3]].assign(lsn=7),  # c4: disjoint text, max LSN
+            CHANGES.iloc[[3]].assign(lsn=6, text=BASE.text[3]),  # c4: same text
+            CHANGES.iloc[[0]].assign(op="D", lsn=8, role=None, text=None, tool=None),
+        ],
+        ignore_index=True,
+    )
+    res = apply_changes(
+        spark.createDataFrame(BASE), spark.createDataFrame(ch), fuzzy_gate=True
+    )
+    routed = {r.conv_id: r for r in res.routed.collect()}
+    assert (routed["c4"].route, routed["c4"].lsn, routed["c4"].conflict) == ("unmodified", 7, 1)
+    assert (routed["c1"].route, routed["c1"].conflict) == ("deleted", 0)
+    final = {r.conv_id: r.text for r in res.final.collect()}
+    assert "c1" not in final and final["c4"] == BASE.text[3]
+
+
 def test_require_perfect_match(spark):
     res = apply_changes(
         spark.createDataFrame(BASE),

@@ -19,18 +19,19 @@ def test_create_table_buckets_by_conv():
 
 
 def test_merge_sql_clauses():
-    sql = merge_sql("lake.db.transcripts", "batch_latest", ["role", "text", "tool", "ts"])
+    sql = merge_sql("lake.db.transcripts", "batch_delta", ["role", "text", "tool", "ts"])
     # keyed on the composite primary key
     assert "ON t.conv_id = s.conv_id AND t.turn_idx = s.turn_idx" in sql
-    # LSN guard on every mutating clause -> replays are no-ops
-    assert "WHEN MATCHED AND s.op = 'D' AND s.lsn > t.lsn THEN DELETE" in sql
-    assert "s.op <> 'D' AND s.lsn > t.lsn AND s.gate_ok" in sql
-    # field-level replace_and_add: null source fields preserve target
-    assert "t.text = coalesce(s.text, t.text)" in sql
-    assert "t.lsn = s.lsn" in sql
-    # unmatched inserts carry the full payload
-    assert "WHEN NOT MATCHED AND s.op <> 'D' THEN" in sql
+    # LSN guard on every matched clause -> replays are no-ops
+    assert "WHEN MATCHED AND s._op = 'D' AND s.lsn > t.lsn THEN DELETE" in sql
+    assert "WHEN MATCHED AND s.lsn > t.lsn THEN" in sql
+    # the source holds merged row images: every column is replaced
+    assert "UPDATE SET t.role = s.role, t.text = s.text, t.tool = s.tool, t.ts = s.ts, t.lsn = s.lsn" in sql
+    assert "coalesce" not in sql and "*" not in sql
+    # unmatched non-delete rows insert with explicit column lists
+    assert "WHEN NOT MATCHED AND s._op <> 'D' THEN" in sql
     assert "INSERT (conv_id, turn_idx, role, text, tool, ts, lsn)" in sql
+    assert "VALUES (s.conv_id, s.turn_idx, s.role, s.text, s.tool, s.ts, s.lsn)" in sql
 
 
 def test_evolve_sql_additive():
@@ -38,85 +39,6 @@ def test_evolve_sql_additive():
         evolve_sql("lake.db.transcripts", {"tool_meta": "string"})
         == "ALTER TABLE lake.db.transcripts ADD COLUMNS (tool_meta string)"
     )
-
-
-def test_prepare_source_gate(spark):
-    """prepare_source computes the gate_ok column merge_sql assumes:
-    deduped per key, gated only on matched non-delete rows, True
-    everywhere else (inserts, deletes, gate off)."""
-    import pandas as pd
-
-    from marc_data_migration_spark.streaming.sink_iceberg import prepare_source
-
-    EP = pd.Timestamp("2026-01-01")
-    ch = pd.DataFrame(
-        [
-            # matched key, same text -> gate passes
-            dict(op="U", lsn=1, commit_ts=EP, conv_id="c1", turn_idx=0,
-                 role="user", text="hello world", tool="t", ts=EP),
-            # matched key, disjoint text -> gate fails
-            dict(op="U", lsn=2, commit_ts=EP, conv_id="c1", turn_idx=1,
-                 role="user", text="zzz qqq xxx", tool="t", ts=EP),
-            # stale duplicate of (c1,1): dedup must keep lsn=2 only
-            dict(op="U", lsn=0, commit_ts=EP, conv_id="c1", turn_idx=1,
-                 role="user", text="hello world", tool="t", ts=EP),
-            # unmatched insert -> gate trivially True
-            dict(op="I", lsn=3, commit_ts=EP, conv_id="c9", turn_idx=0,
-                 role="user", text="new", tool="t", ts=EP),
-            # matched delete -> gate trivially True (deletes aren't gated)
-            dict(op="D", lsn=4, commit_ts=EP, conv_id="c1", turn_idx=2,
-                 role=None, text=None, tool=None, ts=pd.NaT),
-        ]
-    )
-    ch["turn_idx"] = ch["turn_idx"].astype("int32")
-    tgt = pd.DataFrame(
-        [
-            dict(conv_id="c1", turn_idx=0, text="hello world"),
-            dict(conv_id="c1", turn_idx=1, text="hello world"),
-            dict(conv_id="c1", turn_idx=2, text="bye"),
-        ]
-    )
-    tgt["turn_idx"] = tgt["turn_idx"].astype("int32")
-    src, bad = prepare_source(
-        spark.createDataFrame(ch), spark.createDataFrame(tgt), fuzzy_gate=True
-    )
-    assert bad.count() == 0
-    out = src.toPandas().set_index(["conv_id", "turn_idx"])
-    assert len(out) == 4  # stale lsn=0 deduped away
-    assert bool(out.loc[("c1", 0)].gate_ok) is True
-    assert bool(out.loc[("c1", 1)].gate_ok) is False  # disjoint text
-    assert bool(out.loc[("c9", 0)].gate_ok) is True  # insert
-    assert bool(out.loc[("c1", 2)].gate_ok) is True  # delete
-    assert out.loc[("c1", 1)].lsn == 2  # max-LSN survivor
-
-
-def test_prepare_source_gate_null_target_text(spark):
-    """A matched target row with NULL text must still be gated — compared
-    against '' exactly like operators/merge.py apply_changes — so the two
-    'same semantics' sinks agree: a dissimilar update against a null-text
-    row is a conflict in both, not silently applied by the Iceberg path."""
-    import datetime as dt
-
-    from marc_data_migration_spark.streaming.sink_iceberg import prepare_source
-
-    EP = dt.datetime(2026, 1, 1)
-    ch = spark.createDataFrame(
-        [("U", 1, EP, "c1", 0, "user", "completely new text", "t", EP)],
-        "op string, lsn long, commit_ts timestamp, conv_id string, "
-        "turn_idx int, role string, text string, tool string, ts timestamp",
-    )
-    tgt = spark.createDataFrame(
-        [("c1", 0, None)], "conv_id string, turn_idx int, text string"
-    )
-    src, _ = prepare_source(ch, tgt, fuzzy_gate=True)
-    row = src.collect()[0]
-    assert row.gate_ok is False  # ratio('completely new text','') = 0 < 50
-
-
-def test_merge_sql_replace_only_omits_insert():
-    sql = merge_sql("t", "s", ["text"], strategy="replace_only")
-    assert "WHEN NOT MATCHED" not in sql  # M3: update-without-insert
-    assert "UPDATE SET" in sql
 
 
 # ---------------------------------------------------------------------
@@ -129,10 +51,11 @@ def test_merge_sql_replace_only_omits_insert():
 # list and the INSERT column/value lists are lifted verbatim from the
 # statement, first-match-wins clause order is enforced with NOT(prior)
 # guards, and NOT MATCHED is evaluated against a pre-mutation snapshot
-# of the target (real MERGE matches against the original table). Any
-# semantic drift in merge_sql — a lost lsn guard, a wrong coalesce, a
+# of the target (real MERGE matches against the original table). The
+# source is apply_changes' delta, the row images the Iceberg sink
+# MERGEs; any drift in merge_sql — a lost lsn guard, a dropped column, a
 # reordered clause — propagates into execution and breaks final-state
-# equality with the engine's apply_changes.
+# equality with the same apply_changes call's final state.
 
 import re
 
@@ -141,7 +64,7 @@ import pandas as pd
 
 from marc_data_migration_spark import feedgen
 from marc_data_migration_spark.operators.merge import apply_changes
-from marc_data_migration_spark.schemas import KEY_COLS
+from marc_data_migration_spark.schemas import CHANGES_SCHEMA, KEY_COLS
 
 
 def execute_merge_in_duckdb(con, sql_text: str) -> None:
@@ -198,49 +121,42 @@ def execute_merge_in_duckdb(con, sql_text: str) -> None:
             )
 
 
-def _run_merge_parity(spark, variant: str, strategy: str, fuzzy_gate: bool, seed: int):
-    from pyspark.sql import functions as F
+def _canon(pdf, cols):
+    pdf = pdf[cols].sort_values([*KEY_COLS]).reset_index(drop=True)
+    return [
+        tuple("<N>" if pd.isna(v) else str(v) for v in row)
+        for row in pdf.itertuples(index=False, name=None)
+    ]
 
-    from marc_data_migration_spark.streaming.sink_iceberg import merge_sql, prepare_source
+
+def _run_merge_parity(spark, variant: str, strategy: str, fuzzy_gate: bool, seed: int):
+    from marc_data_migration_spark.streaming.sink_iceberg import merge_sql
 
     base_pd = feedgen.gen_transcripts(n_convs=15, seed=seed)
     base_pd = base_pd.assign(lsn=0)
     ch_pd = feedgen.gen_changes(variant, n_events=300, n_convs=15, seed=seed)
-    base = spark.createDataFrame(base_pd)
-    changes = spark.createDataFrame(ch_pd)
-
-    # engine side
-    engine = apply_changes(
-        base, changes, strategy=strategy, fuzzy_gate=fuzzy_gate
-    ).final.toPandas()
-
-    # SQL side: the SAME source builder the Iceberg sink uses, then the
-    # generated MERGE text executed in DuckDB
-    src, _bad = prepare_source(
-        changes, base.select(*KEY_COLS, "text"), fuzzy_gate=fuzzy_gate
+    res = apply_changes(
+        spark.createDataFrame(base_pd),
+        spark.createDataFrame(ch_pd),
+        strategy=strategy,
+        fuzzy_gate=fuzzy_gate,
     )
-    src_pd = src.toPandas()
-    payload_cols = [
-        c for c in src_pd.columns if c not in (*KEY_COLS, "op", "lsn", "commit_ts", "gate_ok")
-    ]
+    engine = res.final.toPandas()
+
+    # SQL side: the row images the Iceberg sink MERGEs, applied to the
+    # base by the generated MERGE text executed in DuckDB
+    src_pd = res.delta.toPandas()
+    cols = [c for c in src_pd.columns if c not in (*KEY_COLS, "lsn", "_op")]
     con = duckdb.connect()
     con.register("_base_view", base_pd)
     con.register("_src_view", src_pd)
     con.execute("CREATE TABLE merged AS SELECT * FROM _base_view")
     con.execute("CREATE TABLE batch_src AS SELECT * FROM _src_view")
-    sql = merge_sql("merged", "batch_src", payload_cols, strategy=strategy)
-    execute_merge_in_duckdb(con, sql)
+    execute_merge_in_duckdb(con, merge_sql("merged", "batch_src", cols))
     sql_state = con.sql("SELECT * FROM merged").df()
 
-    def canon(pdf):
-        cols = [*KEY_COLS, *payload_cols, "lsn"]
-        pdf = pdf[cols].sort_values([*KEY_COLS]).reset_index(drop=True)
-        out = []
-        for row in pdf.itertuples(index=False, name=None):
-            out.append(tuple("<N>" if pd.isna(v) else str(v) for v in row))
-        return out
-
-    assert canon(sql_state) == canon(engine), (
+    want = [*KEY_COLS, *cols, "lsn"]
+    assert _canon(sql_state, want) == _canon(engine, want), (
         f"MERGE-text execution diverged from apply_changes "
         f"(variant={variant}, strategy={strategy}, gate={fuzzy_gate})"
     )
@@ -356,3 +272,102 @@ def test_iceberg_fields_audit_keeps_quarantine(spark, monkeypatch):
     finally:
         spark.catalog.dropTempView("t")
     assert written["t_quarantine"] == 2, written
+    # the batch's MERGE source view is dropped, not left in the session
+    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("_changes_batch_")]
+    assert views == [], views
+
+
+def test_iceberg_ledger_matches_parquet_ledger(spark, tmp_path, monkeypatch):
+    """The Iceberg sink records the same route-level ledger as the
+    parquet sink, and its MERGE leaves the same table. One base and one
+    gated batch with updates, inserts, deletes, a stale row, a gate
+    conflict and 2 null-key rows go through ParquetMergeSink and through
+    IcebergMergeSink, built without its constructor over a parquet
+    table. The MERGE text is executed in DuckDB and its result written
+    over that table, which recaches every plan reading it, as an Iceberg
+    commit does; the table writes are captured. Lineage rows must be
+    equal but for commit_ts, and the table must equal
+    ParquetMergeSink.read()."""
+    from pyspark.sql import SparkSession
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from marc_data_migration_spark.streaming.sink_iceberg import IcebergMergeSink
+    from marc_data_migration_spark.streaming.sink_parquet import ParquetMergeSink
+
+    n_buckets = 4
+    opts = dict(fuzzy_gate=True, fuzzy_threshold=50)
+    base_pd = feedgen.gen_transcripts(n_convs=12, seed=41)
+    keys = list(base_pd[KEY_COLS].itertuples(index=False, name=None))
+    stale, conflict, deleted, same = keys[0], keys[3], keys[6], keys[9]
+    base_pd.loc[0, "lsn"] = 10_000  # newer than any change below
+    ch_pd = feedgen.gen_changes("upsert", n_events=60, n_convs=12, seed=41)
+    mine = ch_pd.set_index(KEY_COLS).index.isin([stale, conflict, deleted, same])
+    extra = pd.DataFrame(
+        [
+            dict(op="U", lsn=101, conv_id=stale[0], turn_idx=stale[1], text="late"),
+            dict(op="U", lsn=102, conv_id=conflict[0], turn_idx=conflict[1], text="zzz qqq"),
+            dict(op="D", lsn=103, conv_id=deleted[0], turn_idx=deleted[1]),
+            dict(op="U", lsn=104, conv_id=same[0], turn_idx=same[1], text=base_pd.text[9]),
+            dict(op="I", lsn=105, conv_id="conv-new", turn_idx=0, text="a new turn"),
+            dict(op="I", lsn=106, conv_id=None, turn_idx=0, text="no key"),
+            dict(op="U", lsn=107, conv_id=None, turn_idx=1, text="no key"),
+        ]
+    ).assign(commit_ts=feedgen.EPOCH)
+    ch_pd = pd.concat([ch_pd[~mine], extra], ignore_index=True)
+    ch_pd["turn_idx"] = ch_pd["turn_idx"].astype("int32")
+    batch = spark.createDataFrame(ch_pd[CHANGES_SCHEMA.names], schema=CHANGES_SCHEMA)
+
+    parquet = ParquetMergeSink(spark, str(tmp_path / "lake"), n_buckets=n_buckets)
+    parquet.init(spark.createDataFrame(base_pd))
+    parquet.apply_merge(batch, batch_id=0, **opts)
+    routes = {r.route for r in parquet.routed().select("route").collect()}
+    assert {"updated", "non-updated", "deleted", "stale", "unmodified"} <= routes, routes
+
+    sink = object.__new__(IcebergMergeSink)
+    sink.spark, sink.table, sink.n_buckets = spark, "ice_t", n_buckets
+    spark.createDataFrame(base_pd).write.parquet(str(tmp_path / "ice"))
+    spark.catalog.createTable("ice_t", path=str(tmp_path / "ice"), source="parquet")
+    real_sql, real_table = SparkSession.sql, SparkSession.table
+    merges, written = [], {}
+
+    def sql(self, query, *a, **kw):
+        if not query.lstrip().startswith("MERGE"):
+            return real_sql(self, query, *a, **kw)
+        merges.append(query)
+        view = re.search(r"USING (\S+) s", query)[1]
+        con = duckdb.connect()
+        con.register("_t", real_table(self, "ice_t").toPandas())
+        con.register("_s", real_table(self, view).toPandas())
+        con.execute("CREATE TABLE ice_t AS SELECT * FROM _t")
+        con.execute(f"CREATE TABLE {view} AS SELECT * FROM _s")
+        execute_merge_in_duckdb(con, query)
+        merged = self.createDataFrame(con.sql("SELECT * FROM ice_t").df(), base.schema)
+        merged.write.mode("overwrite").insertInto("ice_t")
+
+    def save_as_table(self, name, *a, **kw):
+        written[name] = self._df.toPandas()
+
+    base = spark.table("ice_t")
+    monkeypatch.setattr(SparkSession, "sql", sql)
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", save_as_table)
+    try:
+        sink.apply_merge(batch, batch_id=0, **opts)
+        monkeypatch.undo()
+        assert len(merges) == 1
+        cols = list(base_pd.columns)
+        assert _canon(spark.table("ice_t").toPandas(), cols) == _canon(
+            parquet.read().toPandas(), cols
+        )
+    finally:
+        spark.sql("DROP TABLE IF EXISTS ice_t")
+
+    def ledger(pdf):
+        pdf = pdf.drop(columns="commit_ts").sort_values("partition_id")
+        return [tuple(int(v) if pd.notna(v) else None for v in r)
+                for r in pdf.itertuples(index=False, name=None)]
+
+    want = ledger(parquet.lineage().toPandas())
+    assert ledger(written["ice_t_lineage"]) == want
+    assert sum(r[8] for r in want) >= 1  # the gate conflict
+    assert [r[9] for r in want if r[1] == -1] == [2]  # the null-key rows
+    assert len(written["ice_t_quarantine"]) == 2
