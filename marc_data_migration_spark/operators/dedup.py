@@ -43,7 +43,7 @@ def latest_per_key(
         # the row with max(order_col); unique LSNs make this deterministic.
         packed = F.max(F.struct(order_col, *[c for c in others if c != order_col])).alias("_top")
         out = df.groupBy(*keys).agg(packed)
-        return out.select(*keys, *[F.col(f"_top.{c}") for c in [order_col] + [c for c in others if c != order_col]]).select(df.columns)
+        return out.select(*[c if c in keys else F.col(f"_top.{c}") for c in df.columns])
     if method == "window":
         w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
         return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")

@@ -21,7 +21,9 @@ at runtime for skew.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,16 +36,19 @@ from .dedup import latest_per_key
 
 @dataclass
 class MergeResult:
-    final: DataFrame  # post-merge target table state
+    """A merge's outputs; a sink writes ``final`` or ``delta``, built on first use."""
     routed: DataFrame  # one row per deduped change: key, op, lsn, route, conflict
     bad: DataFrame  # quarantined malformed changes (reference S8 'bad' sink)
-    delta: DataFrame  # changed rows only: merged values for applied
-    # upserts + 'D' markers, the write set of a merge-on-read sink —
-    # O(batch) rows instead of O(touched partitions)
+    build_final: Callable[[], DataFrame]  # post-merge target table state
+    build_delta: Callable[[], DataFrame]  # changed rows only: merged values
+    # for applied upserts + 'D' markers, the write set of a merge-on-read
+    # sink — O(batch) rows instead of O(touched partitions)
     cached: DataFrame | None = None  # persisted join (persist_join=True);
     # caller unpersists after consuming final/routed
     field_diffs: DataFrame | None = None  # per-field old→new audit rows
     # (field_audit=True) — reference fields-audit log, record_update.py:626-641
+    final = cached_property(lambda self: self.build_final())
+    delta = cached_property(lambda self: self.build_delta())
 
     def unpersist(self) -> None:
         if self.cached is not None:
@@ -142,8 +147,10 @@ def apply_changes(
     good, bad = split_bad(changes)
     latest = latest_per_key(salted(good, salt_buckets), method=dedup_method)
 
-    t_payload = [c for c in base.columns if c not in KEY_COLS and c != "lsn"]
-    c_payload = [c for c in latest.columns if c not in KEY_COLS and c not in CHANGE_META]
+    # each input's schema is read once; the dedup keeps the change columns
+    t_types, c_types = dict(base.dtypes), dict(changes.dtypes)
+    t_payload = [c for c in t_types if c not in KEY_COLS and c != "lsn"]
+    c_payload = [c for c in c_types if c not in KEY_COLS and c not in CHANGE_META]
     all_payload = list(dict.fromkeys(t_payload + c_payload))  # ordered union
 
     t = base.select(
@@ -157,7 +164,7 @@ def apply_changes(
         F.col("op").alias("c_op"),
         *[F.col(x).alias(f"c_{x}") for x in c_payload],
     )
-    cond = [t[f"t_{k}"] == c[f"c_{k}"] for k in KEY_COLS]
+    cond = [F.col(f"t_{k}") == F.col(f"c_{k}") for k in KEY_COLS]
     j = t.join(c, cond, "full_outer")
 
     has_t = F.col("t_lsn").isNotNull()
@@ -166,12 +173,14 @@ def apply_changes(
     matched_update = fresh & has_t & (F.col("c_op") != "D")
 
     if fuzzy_gate:
+        # a column of the cached join, so no output's filter re-runs the UDF
         ratio = gate_ratio(matched_update, F.col("c_text"), F.col("t_text"))
         j = j.withColumn("_ratio", F.when(matched_update, ratio))
-        gate_ok = passes_gate(F.col("_ratio"), fuzzy_threshold, require_perfect_match)
+        ratio = F.col("_ratio")
+        gate_ok = passes_gate(ratio, fuzzy_threshold, require_perfect_match)
         gate_ok = ~matched_update | F.coalesce(gate_ok, F.lit(True))
     else:
-        j = j.withColumn("_ratio", F.lit(None).cast("int"))
+        ratio = F.lit(None).cast("int")
         gate_ok = F.lit(True)
 
     is_insert = fresh & ~has_t & (F.col("c_op") != "D")
@@ -188,29 +197,25 @@ def apply_changes(
     deleted = fresh & has_t & (F.col("c_op") == "D")
 
     route = (
-        F.when(deleted, F.lit("deleted"))
-        .when(has_c & (F.col("c_op") == "D") & ~has_t, F.lit("delete-noop"))
-        .when(has_c & ~fresh, F.lit("stale"))
-        .when(matched_update & ~gate_ok, F.lit("unmodified"))
-        .when(apply_update & fuzzy_gate & (F.col("_ratio") < 100), F.lit("fuzzy-updated"))
-        .when(apply_update, F.lit("updated"))
-        .when(apply_insert, F.lit("non-updated"))
-        .when(is_insert & ~insert_ok, F.lit("skipped-insert"))
+        F.when(deleted, "deleted")
+        .when(has_c & (F.col("c_op") == "D") & ~has_t, "delete-noop")
+        .when(has_c & ~fresh, "stale")
+        .when(matched_update & ~gate_ok, "unmodified")
+        .when(apply_update & fuzzy_gate & (ratio < 100), "fuzzy-updated")
+        .when(apply_update, "updated")
+        .when(apply_insert, "non-updated")
+        .when(is_insert & ~insert_ok, "skipped-insert")
     )
     # With persist_join the expensive dedup+join+gate runs ONCE; final,
     # routed, delta and lineage all project from the cache instead of
     # re-executing the plan (one merge evaluation per micro-batch).
-    j = j.withColumn("_route", route).withColumn(
-        "_conflict", (matched_update & ~gate_ok).cast("int")
-    )
+    conflict = (matched_update & ~gate_ok).cast("int")
+    j = j.withColumns({"_ratio": ratio, "_route": route, "_conflict": conflict})
     if persist_join:
         j = j.persist()
 
     field_diffs = None
     if field_audit:
-        c_types = dict(latest.dtypes)
-        t_types = dict(base.dtypes)
-
         def _ser(col, dtype):
             # epoch-µs strings for timestamps: engine-portable and
             # comparable; everything else casts to string directly
@@ -232,22 +237,21 @@ def apply_changes(
                     _ser(F.col(f"c_{col}"), c_types[col]).alias("new_value"),
                 )
             )
-        # explode over a literal-width array: one pass over the applied
+        # inline a literal-width array: one pass over the applied
         # matched updates, no shuffle — row count ≤ |updates| × n_cols
         field_diffs = (
             j.filter(apply_update)  # matched, fresh, gate-passed updates
             .select(
                 *[F.col(f"c_{k}").alias(k) for k in KEY_COLS],
                 F.col("c_lsn").alias("lsn"),
-                F.explode(F.array(*entries)).alias("d"),
+                F.inline(F.array(*entries)),  # field, old_value, new_value
             )
             # a null change column preserves the target (M9), so only
             # non-null, value-differing fields are audited as replaced
             .filter(
-                F.col("d.new_value").isNotNull()
-                & ~F.col("d.new_value").eqNullSafe(F.col("d.old_value"))
+                F.col("new_value").isNotNull()
+                & ~F.col("new_value").eqNullSafe(F.col("old_value"))
             )
-            .select(*KEY_COLS, "lsn", "d.field", "d.old_value", "d.new_value")
         )
 
     merged_cols = []
@@ -258,25 +262,24 @@ def apply_changes(
             F.when(applied, F.coalesce(c_col, t_col)).otherwise(t_col).alias(col)
         )
 
-    final = (
-        j.filter(~deleted & (has_t | applied))
-        .select(
+    def final():
+        return j.filter(~deleted & (has_t | applied)).select(
             *[F.coalesce(F.col(f"c_{k}"), F.col(f"t_{k}")).alias(k) for k in KEY_COLS],
             *merged_cols,
             F.when(applied, F.col("c_lsn")).otherwise(F.col("t_lsn")).alias("lsn"),
         )
-    )
 
     # The write set of a merge-on-read sink: only rows the batch actually
     # changed — merged values for applied upserts plus delete markers.
     # Rejected/stale/noop rows emit nothing, so a replay of an
     # already-applied batch produces an EMPTY delta.
-    delta = j.filter(applied | deleted).select(
-        *[F.col(f"c_{k}").alias(k) for k in KEY_COLS],
-        *merged_cols,
-        F.col("c_lsn").alias("lsn"),
-        F.when(deleted, F.lit("D")).otherwise(F.lit("U")).alias("_op"),
-    )
+    def delta():
+        return j.filter(applied | deleted).select(
+            *[F.col(f"c_{k}").alias(k) for k in KEY_COLS],
+            *merged_cols,
+            F.col("c_lsn").alias("lsn"),
+            F.when(deleted, "D").otherwise("U").alias("_op"),
+        )
 
     routed = j.filter(has_c).select(
         *[F.col(f"c_{k}").alias(k) for k in KEY_COLS],
@@ -287,10 +290,10 @@ def apply_changes(
         F.col("_ratio").alias("ratio"),
     )
     return MergeResult(
-        final=final,
         routed=routed,
         bad=bad,
-        delta=delta,
+        build_final=final,
+        build_delta=delta,
         cached=j if persist_join else None,
         field_diffs=field_diffs,
     )

@@ -27,28 +27,26 @@ def batch_lineage(
     row, so a single action over ``routed`` yields the whole ledger
     record."""
     counts = ("rows_applied", "rows_inserted", "rows_updated", "rows_deleted", "conflict_count")
-    by_part = routed.withColumn(
-        "partition_id", F.pmod(F.xxhash64("conv_id"), F.lit(n_partitions)).cast("int")
-    )
+    route = F.col("route")
     per_part = (
-        by_part.groupBy("partition_id")
+        routed.groupBy(
+            F.pmod(F.xxhash64("conv_id"), F.lit(n_partitions)).cast("int").alias("partition_id")
+        )
         .agg(
             F.min("lsn").alias("lsn_min"),
             F.max("lsn").alias("lsn_max"),
+            # sums of ints: already long, like the summary row's counts
             F.sum(
-                F.when(F.col("route").isin("updated", "fuzzy-updated", "non-updated", "deleted"), 1).otherwise(0)
+                F.when(route.isin("updated", "fuzzy-updated", "non-updated", "deleted"), 1).otherwise(0)
             ).alias("rows_applied"),
-            F.sum(F.when(F.col("route") == "non-updated", 1).otherwise(0)).alias("rows_inserted"),
-            F.sum(F.when(F.col("route").isin("updated", "fuzzy-updated"), 1).otherwise(0)).alias("rows_updated"),
-            F.sum(F.when(F.col("route") == "deleted", 1).otherwise(0)).alias("rows_deleted"),
+            F.sum(F.when(route == "non-updated", 1).otherwise(0)).alias("rows_inserted"),
+            F.sum(F.when(route.isin("updated", "fuzzy-updated"), 1).otherwise(0)).alias("rows_updated"),
+            F.sum(F.when(route == "deleted", 1).otherwise(0)).alias("rows_deleted"),
             F.sum("conflict").alias("conflict_count"),
         )
         .select(
             F.lit(batch_id).cast("long").alias("batch_id"),
-            "partition_id",
-            "lsn_min",
-            "lsn_max",
-            *[F.col(c).cast("long") for c in counts],
+            "*",
             # per-partition rows carry 0; the batch total lives on the
             # partition_id=-1 summary row so sum() over rows is correct
             F.lit(0).cast("long").alias("rows_quarantined"),

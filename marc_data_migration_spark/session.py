@@ -1,6 +1,13 @@
 """SparkSession factory tuned for the sandbox (local[N], 128 GiB) but
 configured the way a 1000-executor cluster run would be: AQE on,
 Arrow on, UTC session time, shuffle partitions sized to parallelism.
+
+Python call-site capture is off (``spark.python.sql.dataFrameDebugging.
+enabled``): it costs about ten py4j round trips per Column call, and a
+micro-batch builds its plans from hundreds. In exchange, an analysis
+error no longer names the Python ``file:line`` of the failing call.
+PySpark reads the setting once per process, so an ``extra_conf``
+override to ``"true"`` works only in a process's first session.
 """
 
 from __future__ import annotations
@@ -38,6 +45,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # Shuffle/spill on tmpfs when available: the sandbox block device has
     # erratic latency that swamps benchmarks; a real cluster would use
@@ -71,7 +79,10 @@ def lazy_local_checkpoint(df):
     The checkpointed subtree therefore plans WITHOUT AQE (static
     shuffle partitions, no in-subtree skew-join) — fine for the linear
     agg/projection pipelines this engine checkpoints; all joins stay
-    downstream of the checkpoint where AQE remains active.
+    downstream of the checkpoint where AQE remains active. It assumes a
+    single-threaded driver, since it flips the session-wide AQE setting.
+    On a cluster a local checkpoint does not survive an executor loss:
+    the query fails instead of recomputing its blocks.
     """
     spark = df.sparkSession
     key = "spark.sql.adaptive.enabled"

@@ -188,9 +188,9 @@ class ParquetMergeSink:
         order and type. apply_merge calls this before ``_stage``, so a
         new column is stored before any row that has it can become
         visible; files written earlier read it as null. Writes only for
-        a new table or a grown field set."""
+        a new table or a grown field set; a delta's ``_op`` is not stored."""
         stored = self.schema.fields if self.schema is not None else []
-        known = {f.name for f in stored}
+        known = {f.name for f in stored} | {"_op"}
         new = [f for f in schema.fields if f.name not in known]
         if self.schema is None or new:
             self._write_props(T.StructType(stored + new))
@@ -234,14 +234,15 @@ class ParquetMergeSink:
         return self._scan(self.data_path, buckets, self.schema)
 
     def _scan(
-        self, path: str, buckets: list[int] | None, schema: T.StructType
+        self, path: str, buckets: list[int] | None, schema: T.StructType, *extra
     ) -> DataFrame:
-        """Rows of the bucketed directory ``path`` read with ``schema``
-        (Spark appends the partition columns), pruned to ``buckets``."""
+        """Rows of the bucketed directory ``path`` read with ``schema``,
+        pruned to ``buckets``, as the ``schema`` columns and ``extra``."""
         df = self.spark.read.schema(schema).parquet(path)
         if buckets is not None:
-            df = df.filter(F.col(BUCKET_COL).isin(buckets))
-        return df.drop(BUCKET_COL)
+            # one py4j call (isin makes several per value); IN (NULL) is empty
+            df = df.filter(f"{BUCKET_COL} IN ({', '.join(map(str, buckets)) or 'NULL'})")
+        return df.select(*schema.names, *extra)
 
     # -- exactly-once ledger ---------------------------------------------
     def _ledger(self) -> set[int]:
@@ -318,7 +319,7 @@ class ParquetMergeSink:
                     **merge_opts,
                 )
                 # a stream onto an un-init'd path creates the table here
-                self._widen_schema(res.final.schema)
+                self._widen_schema(self._rows(res).schema)
             with self._phase("stage", batch_id):
                 self._stage(res, touched, batch_id)
             with self._phase("commit", batch_id):
@@ -352,6 +353,10 @@ class ParquetMergeSink:
     def _maintain(self) -> None:
         """Table maintenance due before a batch reads the table (none)."""
 
+    def _rows(self, res: MergeResult) -> DataFrame:
+        """The rows a batch stages: the new version of the touched buckets."""
+        return res.final
+
     def _stage(self, res: MergeResult, touched: list[int], batch_id: int) -> None:
         """Write the new version of the touched buckets to the batch's
         staging ``data/``, plus an empty ``bucket=<k>`` marker for each
@@ -360,7 +365,7 @@ class ParquetMergeSink:
         overwrite deletes. The staging write also materializes the
         persisted join, which the commit tail then projects from."""
         staged = os.path.join(self._staging(batch_id), "data")
-        self._write_bucketed(res.final, staged, max(len(touched), 1))
+        self._write_bucketed(self._rows(res), staged, max(len(touched), 1))
         for b in touched:
             os.makedirs(os.path.join(staged, f"{BUCKET_COL}={b}"), exist_ok=True)
 
@@ -635,20 +640,14 @@ class MorParquetMergeSink(ParquetMergeSink):
         so the reconstruction is map-side-limited, not a full sort."""
         parts = []
         if super().exists():
-            parts.append(
-                self._scan(self.data_path, buckets, self.schema)
-                .withColumn("_op", F.lit("U"))
-                .withColumn("_seq", F.lit(-1).cast("long"))
-            )
+            marks = F.lit("U").alias("_op"), F.lit(-1).cast("long").alias("_seq")
+            parts.append(self._scan(self.data_path, buckets, self.schema, *marks))
         if self._has_deltas():
             delta_schema = T.StructType(
                 [*self.schema.fields, T.StructField("_op", T.StringType())]
             )
-            parts.append(
-                self._scan(self.delta_path, buckets, delta_schema)
-                .withColumn("_seq", F.col("batch_id").cast("long"))
-                .drop("batch_id")
-            )
+            seq = F.col("batch_id").cast("long").alias("_seq")
+            parts.append(self._scan(self.delta_path, buckets, delta_schema, seq))
         view = parts[0]
         for p in parts[1:]:
             view = view.unionByName(p)
@@ -675,10 +674,14 @@ class MorParquetMergeSink(ParquetMergeSink):
         ):
             self.compact_data()
 
+    def _rows(self, res: MergeResult) -> DataFrame:
+        """The batch's delta: its changed rows, each marked by ``_op``."""
+        return res.delta
+
     def _stage(self, res: MergeResult, touched: list[int], batch_id: int) -> None:
         """Stage the delta; it stays invisible to readers until _publish."""
         staged = os.path.join(self._staging(batch_id), "delta")
-        self._write_bucketed(res.delta, staged, max(len(touched), 1))
+        self._write_bucketed(self._rows(res), staged, max(len(touched), 1))
 
     def _publish_rows(self, staging: str, batch_id: int) -> None:
         self._publish_delta(os.path.join(staging, "delta"), batch_id)

@@ -671,6 +671,40 @@ def test_apply_merge_times_and_labels_its_phases(spark, tmp_path, cls):
     )
 
 
+@pytest.mark.parametrize("cls", [ParquetMergeSink, MorParquetMergeSink])
+def test_plan_phase_runs_no_spark_job(spark, tmp_path, cls):
+    """Building a batch's plans stays construction: with the gate, the
+    field audit and quarantined rows, no Spark job runs under the
+    ``plan``, ``ledger`` or ``maintain`` label, while ``stage`` and
+    ``commit`` run the batch's work. A second batch covers the
+    merge-on-read view over base and delta."""
+    from collections import Counter
+
+    import pandas as pd
+
+    base_pd = feedgen.gen_transcripts(n_convs=20, seed=47)
+    ch_pd = feedgen.gen_changes("upsert", n_events=200, n_convs=20, seed=47)
+    ch_pd = pd.concat([ch_pd, ch_pd.head(2).assign(conv_id=None)], ignore_index=True)
+    sink = cls(spark, str(tmp_path / "t"), n_buckets=8)
+    sink.init(spark.createDataFrame(base_pd))
+    sc = spark.sparkContext
+    group = f"plan-{cls.__name__}"
+    sc.setJobGroup(group, group)
+    try:
+        for batch_id, part in enumerate((ch_pd.iloc[::2], ch_pd.iloc[1::2])):
+            batch = spark.createDataFrame(part.reset_index(drop=True))
+            sink.apply_merge(batch, batch_id, audit="fields", fuzzy_gate=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    descs = [store.job(i).description() for i in sc.statusTracker().getJobIdsForGroup(group)]
+    labels = Counter(d.get() if d.isDefined() else None for d in descs)
+    assert not {"plan", "ledger", "maintain"} & {str(x).split()[0] for x in labels}, labels
+    assert all(labels[f"{p} batch {b}"] for p in ("stage", "commit") for b in (0, 1)), labels
+
+
 def test_quarantined_rows_touch_no_bucket(spark, tmp_path):
     """A batch whose only row is quarantined rewrites no bucket: the
     data-file set is unchanged and the ledger counts the row. The
