@@ -234,15 +234,15 @@ class ParquetMergeSink:
         return self._scan(self.data_path, buckets, self.schema)
 
     def _scan(
-        self, path: str, buckets: list[int] | None, schema: T.StructType, *extra
+        self, path: str, buckets: list[int] | None, schema: T.StructType
     ) -> DataFrame:
-        """Rows of the bucketed directory ``path`` read with ``schema``,
-        pruned to ``buckets``, as the ``schema`` columns and ``extra``."""
+        """Rows of the bucketed directory ``path`` read with ``schema``
+        (Spark appends the partition columns), pruned to ``buckets``."""
         df = self.spark.read.schema(schema).parquet(path)
         if buckets is not None:
             # one py4j call (isin makes several per value); IN (NULL) is empty
             df = df.filter(f"{BUCKET_COL} IN ({', '.join(map(str, buckets)) or 'NULL'})")
-        return df.select(*schema.names, *extra)
+        return df.drop(BUCKET_COL)
 
     # -- exactly-once ledger ---------------------------------------------
     def _ledger(self) -> set[int]:
@@ -640,14 +640,14 @@ class MorParquetMergeSink(ParquetMergeSink):
         so the reconstruction is map-side-limited, not a full sort."""
         parts = []
         if super().exists():
-            marks = F.lit("U").alias("_op"), F.lit(-1).cast("long").alias("_seq")
-            parts.append(self._scan(self.data_path, buckets, self.schema, *marks))
+            marks = {"_op": F.lit("U"), "_seq": F.lit(-1).cast("long")}
+            parts.append(self._scan(self.data_path, buckets, self.schema).withColumns(marks))
         if self._has_deltas():
             delta_schema = T.StructType(
                 [*self.schema.fields, T.StructField("_op", T.StringType())]
             )
-            seq = F.col("batch_id").cast("long").alias("_seq")
-            parts.append(self._scan(self.delta_path, buckets, delta_schema, seq))
+            delta = self._scan(self.delta_path, buckets, delta_schema)
+            parts.append(delta.withColumn("_seq", F.col("batch_id").cast("long")).drop("batch_id"))
         view = parts[0]
         for p in parts[1:]:
             view = view.unionByName(p)
