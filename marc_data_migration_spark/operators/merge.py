@@ -58,15 +58,13 @@ class MergeResult:
 def is_bad():
     """The quarantine predicate: a null key or LSN, or an op outside
     I/U/D. It must never be NULL: a NULL predicate fails BOTH
-    ``filter(p)`` and ``filter(~p)``, and ``~isin(...)`` is NULL for a
-    null op, hence the explicit ``op IS NULL`` disjunct. So
-    ``when(~is_bad(), x)`` is NULL exactly on the bad rows."""
-    return (
-        F.col("conv_id").isNull()
-        | F.col("turn_idx").isNull()
-        | F.col("lsn").isNull()
-        | F.col("op").isNull()
-        | ~F.col("op").isin("I", "U", "D")
+    ``filter(p)`` and ``filter(~p)``, and ``op NOT IN (...)`` is NULL
+    for a null op, hence the explicit ``op IS NULL`` disjunct. So
+    ``when(~is_bad(), x)`` is NULL exactly on the bad rows. SQL text:
+    one py4j call, not one per column reference and operator."""
+    return F.expr(
+        "conv_id IS NULL OR turn_idx IS NULL OR lsn IS NULL"
+        " OR op IS NULL OR op NOT IN ('I', 'U', 'D')"
     )
 
 
@@ -153,19 +151,10 @@ def apply_changes(
     c_payload = [c for c in c_types if c not in KEY_COLS and c not in CHANGE_META]
     all_payload = list(dict.fromkeys(t_payload + c_payload))  # ordered union
 
-    t = base.select(
-        *[F.col(k).alias(f"t_{k}") for k in KEY_COLS],
-        F.col("lsn").alias("t_lsn"),
-        *[F.col(c).alias(f"t_{c}") for c in t_payload],
-    )
-    c = latest.select(
-        *[F.col(k).alias(f"c_{k}") for k in KEY_COLS],
-        F.col("lsn").alias("c_lsn"),
-        F.col("op").alias("c_op"),
-        *[F.col(x).alias(f"c_{x}") for x in c_payload],
-    )
-    cond = [F.col(f"t_{k}") == F.col(f"c_{k}") for k in KEY_COLS]
-    j = t.join(c, cond, "full_outer")
+    # renames as SQL text: one py4j call per projection, not ~4 per column
+    t = base.selectExpr(*[f"`{x}` AS `t_{x}`" for x in (*KEY_COLS, "lsn", *t_payload)])
+    c = latest.selectExpr(*[f"`{x}` AS `c_{x}`" for x in (*KEY_COLS, "lsn", "op", *c_payload)])
+    j = t.join(c, F.expr(" AND ".join(f"t_{k} = c_{k}" for k in KEY_COLS)), "full_outer")
 
     has_t = F.col("t_lsn").isNotNull()
     has_c = F.col("c_lsn").isNotNull()
@@ -281,13 +270,9 @@ def apply_changes(
             F.when(deleted, "D").otherwise("U").alias("_op"),
         )
 
-    routed = j.filter(has_c).select(
-        *[F.col(f"c_{k}").alias(k) for k in KEY_COLS],
-        F.col("c_op").alias("op"),
-        F.col("c_lsn").alias("lsn"),
-        F.col("_route").alias("route"),
-        F.col("_conflict").alias("conflict"),
-        F.col("_ratio").alias("ratio"),
+    routed = j.filter(has_c).selectExpr(
+        *[f"c_{k} AS {k}" for k in KEY_COLS],
+        "c_op AS op", "c_lsn AS lsn", "_route AS route", "_conflict AS conflict", "_ratio AS ratio",
     )
     return MergeResult(
         routed=routed,

@@ -44,13 +44,13 @@ def batch_lineage(
             F.sum(F.when(route == "deleted", 1).otherwise(0)).alias("rows_deleted"),
             F.sum("conflict").alias("conflict_count"),
         )
-        .select(
-            F.lit(batch_id).cast("long").alias("batch_id"),
+        .selectExpr(
+            f"{int(batch_id)}L AS batch_id",
             "*",
             # per-partition rows carry 0; the batch total lives on the
             # partition_id=-1 summary row so sum() over rows is correct
-            F.lit(0).cast("long").alias("rows_quarantined"),
-            F.current_timestamp().alias("commit_ts"),
+            "0L AS rows_quarantined",
+            "current_timestamp() AS commit_ts",
         )
     )
     # Batch-level summary row (partition_id = -1): carries the
@@ -60,15 +60,16 @@ def batch_lineage(
     # Literals over a one-partition range(1) stay in the JVM: never
     # createDataFrame over Python rows, whose pickled partitions cost
     # ~4.6 s per batch through the Python runner for one literal row
-    # (decomposed A/B in BENCH/BASELINE.md r05).
-    summary = routed.sparkSession.range(0, 1, 1, 1).select(
-        F.lit(int(batch_id)).cast("long").alias("batch_id"),
-        F.lit(-1).cast("int").alias("partition_id"),
-        F.lit(None).cast("long").alias("lsn_min"),
-        F.lit(None).cast("long").alias("lsn_max"),
-        *[F.lit(0).cast("long").alias(c) for c in counts],
-        F.lit(int(quarantined)).cast("long").alias("rows_quarantined"),
-        F.current_timestamp().alias("commit_ts"),
+    # (decomposed A/B in BENCH/BASELINE.md r05). As SQL text, the row is
+    # one py4j call rather than about five per literal.
+    summary = routed.sparkSession.range(0, 1, 1, 1).selectExpr(
+        f"{int(batch_id)}L AS batch_id",
+        "-1 AS partition_id",
+        "CAST(NULL AS BIGINT) AS lsn_min",
+        "CAST(NULL AS BIGINT) AS lsn_max",
+        *[f"0L AS {c}" for c in counts],
+        f"{int(quarantined)}L AS rows_quarantined",
+        "current_timestamp() AS commit_ts",
     )
     return per_part.unionByName(summary)
 

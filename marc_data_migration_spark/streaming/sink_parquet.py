@@ -231,18 +231,18 @@ class ParquetMergeSink:
 
     def _read_buckets(self, buckets: list[int] | None) -> DataFrame:
         """Current state of ``buckets`` (None = all) of an existing table."""
-        return self._scan(self.data_path, buckets, self.schema)
+        return self._scan(self.data_path, buckets, self.schema).drop(BUCKET_COL)
 
     def _scan(
         self, path: str, buckets: list[int] | None, schema: T.StructType
     ) -> DataFrame:
         """Rows of the bucketed directory ``path`` read with ``schema``
-        (Spark appends the partition columns), pruned to ``buckets``."""
+        plus the partition columns Spark appends, pruned to ``buckets``."""
         df = self.spark.read.schema(schema).parquet(path)
         if buckets is not None:
             # one py4j call (isin makes several per value); IN (NULL) is empty
             df = df.filter(f"{BUCKET_COL} IN ({', '.join(map(str, buckets)) or 'NULL'})")
-        return df.drop(BUCKET_COL)
+        return df
 
     # -- exactly-once ledger ---------------------------------------------
     def _ledger(self) -> set[int]:
@@ -640,24 +640,24 @@ class MorParquetMergeSink(ParquetMergeSink):
         so the reconstruction is map-side-limited, not a full sort."""
         parts = []
         if super().exists():
-            marks = {"_op": F.lit("U"), "_seq": F.lit(-1).cast("long")}
+            # the base ranks below every delta batch
+            marks = {"_op": F.lit("U"), "batch_id": F.lit(-1)}
             parts.append(self._scan(self.data_path, buckets, self.schema).withColumns(marks))
         if self._has_deltas():
             delta_schema = T.StructType(
                 [*self.schema.fields, T.StructField("_op", T.StringType())]
             )
-            delta = self._scan(self.delta_path, buckets, delta_schema)
-            parts.append(delta.withColumn("_seq", F.col("batch_id").cast("long")).drop("batch_id"))
+            parts.append(self._scan(self.delta_path, buckets, delta_schema))
         view = parts[0]
         for p in parts[1:]:
             view = view.unionByName(p)
         w = Window.partitionBy(*KEY_COLS).orderBy(
-            F.col("_seq").desc(), F.col("lsn").desc()
+            F.col("batch_id").desc(), F.col("lsn").desc()
         )
         return (
             view.withColumn("_rn", F.row_number().over(w))
             .filter((F.col("_rn") == 1) & (F.col("_op") != "D"))
-            .drop("_rn", "_op", "_seq")
+            .drop("_rn", "_op", "batch_id", BUCKET_COL)
         )
 
     # -- sink hooks: delta write, published after the ledger ---------------
@@ -707,7 +707,7 @@ class MorParquetMergeSink(ParquetMergeSink):
         the last writer, so the view is unchanged. (Deleting in
         lexicographic order — 'batch_id=10' before 'batch_id=2' — could
         leave an OLD delta alive after newer ones were removed, and its
-        _seq would outrank the folded base: silent regression.)"""
+        batch_id would outrank the folded base: silent regression.)"""
         batches = self._delta_batch_dirs()  # ascending numeric order
         if not batches:
             return 0
