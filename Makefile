@@ -10,12 +10,13 @@ test:
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
 	python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
-# The CoW/MoR sink and stream tests alone, under the tier-1 environment.
+# The sink-contract and stream tests of all three sinks (CoW, MoR and
+# Iceberg over a stand-in catalog) and the CLI, under the tier-1 environment.
 test-sinks:
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
 	python -m pytest tests/test_streaming.py tests/test_mor_sink.py \
 	tests/test_table_properties.py tests/test_merge_oracle.py \
-	tests/test_fuzzy_gate.py tests/test_sinks_sql.py \
+	tests/test_fuzzy_gate.py tests/test_sinks_sql.py tests/test_cli.py \
 	tests/test_property.py::test_random_feed_matches_oracle -q -p no:cacheprovider
 
 # Seconds per apply_merge phase (`phase_sec`) of a small stream run, under

@@ -72,7 +72,6 @@ def _merge_opts(args) -> dict:
         fuzzy_gate=args.fuzzy_gate,
         fuzzy_threshold=args.fuzzy_match_ratio,
         require_perfect_match=args.require_perfect_match,
-        dedup_method=args.dedup_method,
     )
 
 
@@ -86,7 +85,6 @@ def _add_merge_flags(p: argparse.ArgumentParser) -> None:
     p.add_argument("--fuzzy-gate", action="store_true", help="gate matched updates on title/text similarity")
     p.add_argument("--fuzzy-match-ratio", type=int, default=50, help="similarity threshold 0-100 (reference default 50)")
     p.add_argument("--require-perfect-match", action="store_true", help="reference -pm: only ratio==100 updates apply")
-    p.add_argument("--dedup-method", choices=["agg", "window", "salted_window"], default="agg")
     p.add_argument("--policy", default=None, help="dotted path to a TransformPolicy (reference plugin loader record_update.py:132-134)")
 
 

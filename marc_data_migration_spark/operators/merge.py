@@ -27,6 +27,7 @@ from functools import cached_property
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.normalize import normalize_text
 from ..functions.similarity import token_sort_ratio
@@ -82,6 +83,13 @@ def salted(changes: DataFrame, salt_buckets: int) -> DataFrame:
     return changes.repartition(salt_buckets, F.col("conv_id"), salt)
 
 
+# The gate scores through a nondeterministic copy of the shared UDF, so
+# the optimizer never pushes an output's filter on ``_ratio`` below the
+# projection that computes it: such a filter would run the UDF again
+# whenever the join is not cached.
+_gate_udf = F.pandas_udf(token_sort_ratio.func, T.IntegerType()).asNondeterministic()
+
+
 def gate_ratio(candidate, incoming_text, existing_text):
     """The fuzzy gate's score (J5/F3): token_sort_ratio of the normalized
     incoming vs existing text. Only rows where ``candidate`` holds get a
@@ -93,7 +101,7 @@ def gate_ratio(candidate, incoming_text, existing_text):
     are gated instead: null text for non-candidate rows costs one null
     per row over Arrow and short-circuits in Python, and the LCS compute
     only runs on genuine candidates."""
-    return token_sort_ratio(
+    return _gate_udf(
         F.when(candidate, normalize_text(F.coalesce(incoming_text, F.lit("")))),
         F.when(candidate, normalize_text(F.coalesce(existing_text, F.lit("")))),
     )
@@ -110,7 +118,6 @@ def apply_changes(
     base: DataFrame,
     changes: DataFrame,
     strategy: str = "replace_and_add",
-    dedup_method: str = "agg",
     fuzzy_gate: bool = False,
     fuzzy_threshold: int = 50,
     require_perfect_match: bool = False,
@@ -143,7 +150,7 @@ def apply_changes(
       strings so the audit is engine-portable.
     """
     good, bad = split_bad(changes)
-    latest = latest_per_key(salted(good, salt_buckets), method=dedup_method)
+    latest = latest_per_key(salted(good, salt_buckets))
 
     # each input's schema is read once; the dedup keeps the change columns
     t_types, c_types = dict(base.dtypes), dict(changes.dtypes)

@@ -128,7 +128,7 @@ class IncrementalLshDedup:
         ONCE per object lifetime (the resume path) and maintained by
         apply_batch afterwards — a per-batch distinct-collect over the
         accumulated index is an O(batches²) read volume over a long
-        ingest stream (mirrors ParquetMergeSink._ledger)."""
+        ingest stream (mirrors MergeSink._ledger)."""
         if self._applied_ids is None:
             rows = self._index().select("batch_id").distinct().collect()
             self._applied_ids = {r.batch_id for r in rows}

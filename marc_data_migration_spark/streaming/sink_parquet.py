@@ -1,58 +1,22 @@
-"""Exactly-once MERGE sink over bucketed parquet — operator S7
-(SURVEY.md §2.1) for the sandbox, where Iceberg jars are unavailable
-(SURVEY.md §7 risk 1). Behavior contract shared with sink_iceberg:
-``apply_merge(batch_df)`` is idempotent per batch_id and per LSN.
+"""Exactly-once MERGE sinks over bucketed parquet — operator S7
+(SURVEY.md §2.1) where Iceberg jars are unavailable (SURVEY.md §7 risk
+1). Both run the ``sink.py`` skeleton with directories and renames for
+hooks: the table is hash-bucketed on conv_id into ``bucket=<k>``
+directories and a batch reads ONLY the buckets it touches (partition
+pruning); every output of batch N is staged in ``_staging_batch_<N>/``;
+the commit is one driver-written ledger file, ``lineage/batch-<N>.parquet``
+(tmp file + rename: the driver must reach the table's filesystem);
+``_publish`` then moves everything staged into place, each step safe to
+run again on what is left.
 
-Scale design: the target table is hash-bucketed on conv_id into
-``bucket=<k>`` directory partitions. The copy-on-write
-(:class:`ParquetMergeSink`) and merge-on-read
-(:class:`MorParquetMergeSink`) sinks commit a batch through one
-``apply_merge`` skeleton of seven phases; each adds its seconds to the
-sink's ``phase_s`` and describes its Spark jobs as ``<phase> batch <id>``:
-
-1. ``ledger`` — a batch_id that already has lineage rows is a replay:
-   it is skipped after ``_publish`` finishes any publish the failed
-   attempt left undone (the LSN guard in the MERGE makes even a forced
-   re-apply converge);
-2. ``maintain`` — the staging a failed attempt left is dropped and
-   ``_maintain`` runs the table maintenance due before the batch reads;
-3. ``touched`` — ``_touched_buckets`` collects the buckets the batch's
-   keys touch and its quarantine count (≤ n_buckets + 1 rows); the
-   merge's join cache (step 4) is the only thing a batch materializes;
-4. ``plan`` — ``_read_buckets`` reads ONLY those buckets (partition
-   pruning — the scan filter is on the partition column, so untouched
-   data is never read), ``apply_changes`` builds the full-outer MERGE
-   of the batch against that slice, and the table schema is widened;
-5. ``stage`` — ``_stage`` writes the sink's rows for the batch,
-   bucketed, to ``_staging_batch_<id>/``;
-6. ``commit`` — ``_commit_lineage_and_audits`` stages the routed, bad
-   and field-audit rows in the same directory while it collects the
-   batch's lineage rows from the join cache (one Spark action), then
-   writes them on the driver as ``lineage/batch-<id>.parquet`` — tmp
-   file + rename, THE ledger commit;
-7. ``publish`` — ``_publish`` moves everything staged into place.
-
-A crash before the ledger rename replays the batch on an untouched
-table; a crash after it is rolled forward by ``_publish`` (same-object
-retry) or by init-time recovery, so the data and audit tables see each
-batch exactly once.
-
-The sinks differ only in what step 5 stages and step 7 publishes.
-Copy-on-write stages the new version of every touched bucket in
-``data/`` and swaps those bucket directories into the table; merge-on-
-read stages only the changed rows (a delta) in ``delta/`` and renames
-it into the table's ``delta/``. The ledger file is written by the
-driver, so the driver must reach the table's filesystem — the publish
-renames already require that.
-
-At 100 TB with n_buckets sized so a bucket ≈ a few GB, a copy-on-write
-batch that touches 1% of conversations rewrites ~1% of the table — the
-same I/O shape as an Iceberg copy-on-write MERGE with bucket
-partitioning. Schema evolution is additive: the table schema is stored
-in ``_table_properties.json`` next to the layout, a batch that brings
-new columns appends them there before its rows become visible, and
-every base and delta scan reads with the stored schema, so older files
-present the new columns as nulls.
+Copy-on-write (:class:`ParquetMergeSink`) stages the new version of every
+touched bucket and swaps those bucket directories in: at 100 TB with a
+bucket ≈ a few GB, a batch touching 1% of conversations rewrites ~1% of
+the table, the I/O shape of an Iceberg copy-on-write MERGE. Merge-on-read
+(:class:`MorParquetMergeSink`) stages only the changed rows, a delta.
+Schema evolution is additive: ``_table_properties.json`` stores the
+schema, a batch appends its new columns there before its rows become
+visible, and every scan reads with it, so older files read them as null.
 """
 
 from __future__ import annotations
@@ -60,29 +24,20 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import time
-from collections import Counter
-from concurrent.futures import ThreadPoolExecutor
-from contextlib import contextmanager
 
 import pyarrow.parquet as pq
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..operators.merge import MergeResult, apply_changes, is_bad
-from ..plans.lineage import batch_lineage
+from ..operators.merge import MergeResult
 from ..schemas import CHANGE_META, KEY_COLS, LINEAGE_SCHEMA, TRANSCRIPTS_SCHEMA
+from .sink import MergeSink, bucket_expr
 
 BUCKET_COL = "bucket"
 PROPS_FILE = "_table_properties.json"
 AUDIT_TABLES = ("lineage", "routed", "bad", "field_audit")
-
-
-def bucket_expr(n_buckets: int):
-    return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
 
 
 def load_table_properties(path: str) -> dict | None:
@@ -116,20 +71,18 @@ def open_sink(
     return cls(spark, path, n_buckets=n_buckets)
 
 
-class ParquetMergeSink:
+class ParquetMergeSink(MergeSink):
     SINK_MODE = "cow"
 
     def __init__(self, spark: SparkSession, path: str, n_buckets: int | None = None):
-        self.spark = spark
         self.path = path
         self.data_path = os.path.join(path, "data")
         self.lineage_path = os.path.join(path, "lineage")
         self.routed_path = os.path.join(path, "routed")
         self.bad_path = os.path.join(path, "bad")
         self.field_audit_path = os.path.join(path, "field_audit")
-        self.n_buckets, self.schema = self._resolve_layout(n_buckets)
-        self._applied_ids: set[int] | None = None  # lazy ledger cache
-        self.phase_s: Counter[str] = Counter()  # seconds per apply_merge phase
+        n_buckets, self.schema = self._resolve_layout(n_buckets)
+        super().__init__(spark, n_buckets)
         self._recover_compaction()
         self._recover_staging()
 
@@ -244,114 +197,17 @@ class ParquetMergeSink:
             df = df.filter(f"{BUCKET_COL} IN ({', '.join(map(str, buckets)) or 'NULL'})")
         return df
 
-    # -- exactly-once ledger ---------------------------------------------
-    def _ledger(self) -> set[int]:
-        """The in-memory applied-batch ledger. The parquet ledger is read
-        ONCE per sink lifetime (resume path); afterwards the set is
-        maintained by apply_merge — a per-batch ledger re-read would be
-        an O(batches²) scan over a long-lived stream."""
-        if self._applied_ids is None:
-            if not os.path.isdir(self.lineage_path):
-                self._applied_ids = set()
-            else:
-                rows = (
-                    self.lineage()
-                    .select("batch_id")
-                    .distinct()
-                    .collect()
-                )
-                self._applied_ids = {r.batch_id for r in rows}
-        return self._applied_ids
-
-    def applied_batch_ids(self) -> set[int]:
-        return set(self._ledger())  # copy: callers must not alias the ledger
-
-    # -- MERGE -----------------------------------------------------------
-    def apply_merge(
-        self,
-        batch_df: DataFrame,
-        batch_id: int,
-        audit: str = "full",
-        **merge_opts,
-    ) -> MergeResult | None:
-        """Idempotently MERGE one change batch. Returns None if the
-        batch_id was already applied (checkpoint replay).
-
-        ``audit`` — "full" (default) also persists the per-change routed
-        audit + quarantine tables (reference S10 per-record audit logs);
-        "fields" additionally writes the per-field old→new diff table
-        (reference fields-audit log, record_update.py:626-641) — the
-        most detailed and most expensive mode; "lineage" writes only the
-        aggregated lineage ledger (always on — it is the exactly-once
-        guard and the north_rule metrics table). The ``commit`` entry of
-        ``phase_s`` is what an audit mode costs; at maximum-throughput
-        tailing the audit is the first thing to shed."""
-        if audit not in ("fields", "full", "lineage"):
-            raise ValueError(f"unknown audit mode: {audit}")
-        with self._phase("ledger", batch_id):
-            replay = batch_id in self._ledger()
-        if replay:
-            # A same-object retry after a failure between the ledger
-            # commit and the publish: the staged rows are complete (they
-            # are staged before the ledger), so roll them forward here
-            # exactly like init-time recovery would.
-            with self._phase("publish", batch_id):
-                self._publish(batch_id)
-            return None
-        with self._phase("maintain", batch_id):
-            # left by an attempt that failed before the ledger
-            shutil.rmtree(self._staging(batch_id), ignore_errors=True)
-            self._maintain()
-        with self._phase("touched", batch_id):
-            touched, quarantined = self._touched_buckets(batch_df)
-        res = None
-        try:
-            with self._phase("plan", batch_id):
-                base = self._read_buckets(touched) if self.exists() else self._empty_base(batch_df)
-                # persist_join: the dedup+join+gate plan is evaluated
-                # exactly once (by the staging write); routed, lineage and
-                # field-audit rows then project from the cache.
-                res = apply_changes(
-                    base,
-                    batch_df,
-                    persist_join=True,
-                    field_audit=(audit == "fields"),
-                    **merge_opts,
-                )
-                # a stream onto an un-init'd path creates the table here
-                self._widen_schema(self._rows(res).schema)
-            with self._phase("stage", batch_id):
-                self._stage(res, touched, batch_id)
-            with self._phase("commit", batch_id):
-                self._commit_lineage_and_audits(res, batch_id, audit, quarantined)
-            with self._phase("publish", batch_id):
-                self._publish(batch_id)
-        finally:
-            # also on failure: a retry of a ledgered batch returns early
-            # above and would leave the join cache in executor memory
-            if res is not None:
-                res.unpersist()
-        return res
-
-    @contextmanager
-    def _phase(self, name: str, batch_id: int):
-        """Run one step of apply_merge as phase ``name``: add its seconds
-        to ``phase_s`` and label its Spark jobs ``<name> batch <id>``
-        (pool threads inherit the label), then restore the caller's job
-        description."""
-        sc = self.spark.sparkContext
-        caller = sc.getLocalProperty("spark.job.description")
-        sc.setLocalProperty("spark.job.description", f"{name} batch {batch_id}")
-        t0 = time.perf_counter()
-        try:
-            yield
-        finally:
-            self.phase_s[name] += time.perf_counter() - t0
-            sc.setLocalProperty("spark.job.description", caller)
-
     # -- sink hooks: what a batch writes, and when readers see it -------
-    def _maintain(self) -> None:
-        """Table maintenance due before a batch reads the table (none)."""
+    def _read_ledger(self) -> set[int]:
+        if not os.path.isdir(self.lineage_path):
+            return set()
+        return {r.batch_id for r in self.lineage().select("batch_id").distinct().collect()}
+
+    def _maintain(self, batch_id: int) -> None:
+        self._drop_staged(batch_id)  # left by an attempt that failed before the ledger
+
+    def _read_base(self, batch_df: DataFrame, touched: list[int]) -> DataFrame:
+        return self._read_buckets(touched) if self.exists() else self._empty_base(batch_df)
 
     def _rows(self, res: MergeResult) -> DataFrame:
         """The rows a batch stages: the new version of the touched buckets."""
@@ -360,23 +216,18 @@ class ParquetMergeSink:
     def _stage(self, res: MergeResult, touched: list[int], batch_id: int) -> None:
         """Write the new version of the touched buckets to the batch's
         staging ``data/``, plus an empty ``bucket=<k>`` marker for each
-        touched bucket the batch emptied. Writing straight over
-        data_path would race: the merge plan reads the very files the
-        overwrite deletes. The staging write also materializes the
-        persisted join, which the commit tail then projects from."""
+        touched bucket the batch emptied (writing over data/ would delete
+        the very files the merge plan reads)."""
         staged = os.path.join(self._staging(batch_id), "data")
         self._write_bucketed(self._rows(res), staged, max(len(touched), 1))
         for b in touched:
             os.makedirs(os.path.join(staged, f"{BUCKET_COL}={b}"), exist_ok=True)
 
     def _publish(self, batch_id: int) -> None:
-        """Make a ledgered batch's staged outputs visible: move each
-        staged audit file into its table, then the sink's rows
-        (``_publish_rows``), then drop the staging directory. Each step
-        moves something out of staging and is safe to run again on what
-        is left, so a publish cut short resumes — on a same-object retry
-        or in init-time recovery — where it stopped: it only ever rolls
-        forward."""
+        """Move each staged audit file into its table, then the sink's rows
+        (``_publish_rows``), then drop the staging directory. Each step is
+        safe to run again on what is left, so a publish cut short resumes
+        where it stopped: it only ever rolls forward."""
         staging = self._staging(batch_id)
         if not os.path.isdir(staging):
             return
@@ -393,9 +244,7 @@ class ParquetMergeSink:
 
     def _publish_rows(self, staging: str, batch_id: int) -> None:
         """Swap each staged bucket into data/: drop the live bucket, then
-        rename the staged one in (an empty marker: the bucket stays
-        gone). Iceberg's snapshot commit is the atomic version of this
-        swap — sink_iceberg.py."""
+        rename the staged one in (an empty marker: the bucket stays gone)."""
         staged = os.path.join(staging, "data")
         for name in sorted(os.listdir(staged)) if os.path.isdir(staged) else []:
             if not name.startswith(f"{BUCKET_COL}="):
@@ -406,69 +255,20 @@ class ParquetMergeSink:
                 os.makedirs(self.data_path, exist_ok=True)
                 os.replace(src, dst)
 
-    def _touched_buckets(self, batch_df: DataFrame) -> tuple[list[int], int]:
-        """(the buckets the batch's well-formed keys touch, its quarantined
-        row count) from one grouped collect over the batch as it arrives:
-        the sink neither caches nor re-keys it, so the dedup's exchange is
-        the batch's one key shuffle. A quarantined row falls in the NULL
-        group and touches no bucket (xxhash64(NULL) is 42, a real bucket).
-        The source is scanned by this collect and by the merge (once, into
-        the join cache), plus the staged ``bad`` write when a row is bad."""
-        b = F.when(~is_bad(), bucket_expr(self.n_buckets)).alias("b")
-        counts = {r.b: r["count"] for r in batch_df.groupBy(b).count().collect()}
-        return [k for k in counts if k is not None], counts.get(None, 0)
+    def _stage_audit(self, name: str, df: DataFrame, batch_id: int) -> None:
+        """Stage one audit output; ``_publish`` moves it in after the
+        ledger. Coalesced: a long-lived stream otherwise accretes
+        shuffle-partition-count tiny files per batch (4.5× on routed)."""
+        df.coalesce(8).withColumn("batch_id", F.lit(batch_id)).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(self._staging(batch_id), name))
 
-    def _commit_lineage_and_audits(
-        self, res: MergeResult, batch_id: int, audit: str, quarantined: int
-    ) -> None:
-        """Shared commit tail for both sinks: stage the audit outputs while
-        the ledger record is collected from the join cache, then commit
-        the batch by writing its ledger file. Each audit write runs in its
-        own thread (one Spark job each; ``bad`` reads the batch, the rest
-        project from the join cache the staging write materialized), so
-        the commit waits for the slowest write, not their sum. A failure
-        here precedes the ledger: the batch replays and re-stages. The
-        staged audits become visible only in ``_publish``, after the
-        ledger, so every audit row lands exactly once. The writes coalesce
-        to few files: a long-lived stream otherwise accretes
-        shuffle-partition-count tiny files per batch (measured 4.5× on the
-        routed append)."""
-        staging = self._staging(batch_id)
-
-        def stage(name: str, df: DataFrame) -> None:
-            df.coalesce(8).withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(staging, name))
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-
-            def submit(name: str, df: DataFrame):
-                # wrapped here, per output: each wrapper copies this
-                # thread's local properties (job group, phase label) at
-                # wrap time, into a copy of its own
-                return pool.submit(inheritable_thread_target(self.spark)(stage), name, df)
-
-            pending = []
-            if audit in ("full", "fields"):
-                pending.append(submit("routed", res.routed))
-            if audit == "fields" and res.field_diffs is not None:
-                pending.append(submit("field_audit", res.field_diffs))
-            if audit != "lineage" and quarantined:
-                pending.append(submit("bad", res.bad))
-            ledger = batch_lineage(
-                res.routed, batch_id, n_partitions=self.n_buckets, quarantined=quarantined
-            ).toArrow()
-        for f in pending:
-            f.result()
-        # THE commit: one driver-written file, made visible by one rename
+    def _write_ledger(self, ledger, batch_id: int) -> None:
+        """THE commit: one driver-written file, made visible by one rename."""
         os.makedirs(self.lineage_path, exist_ok=True)
         tmp = os.path.join(self.lineage_path, f".batch-{batch_id}.parquet.tmp")
         pq.write_table(ledger.cast(to_arrow_schema(LINEAGE_SCHEMA)), tmp)
         os.replace(tmp, os.path.join(self.lineage_path, f"batch-{batch_id}.parquet"))
-        # reconcile the in-memory ledger cache NOW: if the publish raises
-        # and the stream retries the batch on this same sink object, the
-        # retry must take the replay branch, which finishes the publish
-        self._ledger().add(batch_id)
 
     def _staging(self, batch_id: int) -> str:
         return os.path.join(self.path, f"_staging_batch_{batch_id}")
@@ -545,23 +345,18 @@ class ParquetMergeSink:
             shutil.rmtree(trash, ignore_errors=True)
 
     def _recover_staging(self) -> None:
-        """Crash recovery for apply_merge, one roll-forward rule for both
-        sinks: a ``_staging_batch_<id>`` of a ledgered batch is complete
-        (everything is staged before the ledger), so it is published; one
-        of an un-ledgered batch is deleted, and the stream's replay
-        stages it again over a table it never touched. An unrenamed
-        ledger tmp file is removed."""
-        if os.path.isdir(self.lineage_path):
-            for name in os.listdir(self.lineage_path):
-                if name.startswith(".") and name.endswith(".tmp"):
-                    os.remove(os.path.join(self.lineage_path, name))
-        for name in os.listdir(self.path) if os.path.isdir(self.path) else []:
-            if name.startswith("_staging_batch_"):
-                bid = int(name.rsplit("_", 1)[1])
-                if bid in self._ledger():
-                    self._publish(bid)
-                else:
-                    shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
+        """The shared rule, after an unrenamed ledger tmp file is removed."""
+        for name in os.listdir(self.lineage_path) if os.path.isdir(self.lineage_path) else []:
+            if name.startswith(".") and name.endswith(".tmp"):
+                os.remove(os.path.join(self.lineage_path, name))
+        super()._recover_staging()
+
+    def _staged_batch_ids(self) -> list[int]:
+        names = os.listdir(self.path) if os.path.isdir(self.path) else []
+        return [int(n.rsplit("_", 1)[1]) for n in names if n.startswith("_staging_batch_")]
+
+    def _drop_staged(self, batch_id: int) -> None:
+        shutil.rmtree(self._staging(batch_id), ignore_errors=True)
 
 
 class MorParquetMergeSink(ParquetMergeSink):
@@ -579,13 +374,8 @@ class MorParquetMergeSink(ParquetMergeSink):
     ``compact_data()`` folds deltas back into the bucketed base
     (rewrite_data_files analogue).
 
-    Commit protocol per batch — the shared ``apply_merge`` skeleton:
-    ``_stage`` writes the delta to ``_staging_batch_<id>/delta`` → audits
-    staged ∥ lineage collected → ledger file renamed into lineage/ (THE
-    commit) → ``_publish`` renames the staged audits into their tables
-    and the delta into delta/. Only the staged rows differ from the
-    copy-on-write sink; staging, ledger, publish and recovery are the
-    same code.
+    Only the staged and published rows differ from copy-on-write: the
+    delta is staged in ``_staging_batch_<id>/delta``, published to delta/.
     """
 
     SINK_MODE = "mor"
@@ -661,13 +451,14 @@ class MorParquetMergeSink(ParquetMergeSink):
         )
 
     # -- sink hooks: delta write, published after the ledger ---------------
-    def _maintain(self) -> None:
+    def _maintain(self, batch_id: int) -> None:
         """Scheduled maintenance for deltas accumulated by PREVIOUS
         batches, run BEFORE this batch reads the view: folding here both
         bounds the merge fan-in this batch pays and keeps the returned
         MergeResult valid — compacting after the return value was built
         would delete delta files its lazy plans still reference
         (FileNotFound on any post-return evaluation)."""
+        super()._maintain(batch_id)
         if (
             self.auto_compact_deltas is not None
             and len(self._delta_batch_dirs()) >= self.auto_compact_deltas

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import CHANGES_SCHEMA, CHANGES_SCHEMA_V2
-from .sink_parquet import ParquetMergeSink
+from .sink import MergeSink
 
 # The file source orders files by modification time only, and chunks
 # written within one clock tick (milliseconds) tie and come back in
@@ -72,7 +72,7 @@ def stage_feed_chunks(
 def run_stream(
     spark: SparkSession,
     feed_dir: str,
-    sink: ParquetMergeSink,
+    sink: MergeSink,
     checkpoint_dir: str,
     evolved: bool = False,
     max_files_per_trigger: int = 1,

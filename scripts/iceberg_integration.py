@@ -17,10 +17,10 @@ assertion below held on the real runtime:
 
 1. CREATE TABLE bucketed on conv_id; 2 micro-batches MERGE-applied
    (insert/update/delete + LSN guard); 3. replaying batch 0 is a
-   no-op (exactly-once ledger); 4. additive schema evolution
-   (ALTER ADD COLUMNS) back-fills nulls and new batches write the new
-   column; 5. final state equals the engine's batch oracle
-   (operators/merge.apply_changes) row-for-row.
+   no-op (exactly-once ledger); 4. additive schema evolution: a batch
+   that brings a new column widens the table itself (ALTER ADD COLUMNS)
+   before its MERGE writes the column; 5. final state equals the
+   engine's batch oracle (operators/merge.apply_changes) row-for-row.
 """
 
 from __future__ import annotations
@@ -89,7 +89,6 @@ def main() -> int:
     spark = build_session(args.warehouse)
     from marc_data_migration_spark.streaming.sink_iceberg import (
         IcebergMergeSink,
-        evolve_sql,
         is_available,
     )
 
@@ -121,9 +120,8 @@ def main() -> int:
     want = {(r.conv_id, r.turn_idx): r.text for r in oracle.collect()}
     assert replay_text == want, "final state diverges from batch oracle"
 
-    # 4. additive schema evolution + a batch that writes the new column
-    spark.sql(evolve_sql(args.table, {"meta_tag": "string"}))
-    assert spark.table(args.table).filter(F.col("meta_tag").isNotNull()).count() == 0
+    # 4. a batch that brings a new column widens the table and writes it
+    assert "meta_tag" not in spark.table(args.table).columns
     b2 = synth_batch(spark, 2).withColumn("meta_tag", F.lit("v2"))
     sink.apply_merge(b2, 2)
     n_tagged = spark.table(args.table).filter(F.col("meta_tag") == "v2").count()

@@ -63,6 +63,24 @@ def test_fuzzy_routes(spark):
     assert conflicts["c4"] == 1 and sum(conflicts.values()) == 1
 
 
+@pytest.mark.parametrize("output", ["final", "delta"])
+def test_gate_scored_once_without_join_cache(spark, output):
+    """Without ``persist_join`` an output's filter on the gate score must
+    not be pushed below the projection that scores it: the executed plan
+    runs the similarity UDF once, and the rows are those of the cached
+    merge."""
+    args = (spark.createDataFrame(BASE), spark.createDataFrame(CHANGES))
+    res = apply_changes(*args, fuzzy_gate=True)
+    df = getattr(res, output)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
+    cached = apply_changes(*args, fuzzy_gate=True, persist_join=True)
+    try:
+        assert sorted(df.collect()) == sorted(getattr(cached, output).collect())
+    finally:
+        cached.unpersist()
+
+
 def test_gate_against_null_target_text(spark):
     """A matched target row with NULL text is still gated, compared
     against '': a dissimilar update is a conflict, not applied."""

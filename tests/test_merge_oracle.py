@@ -10,18 +10,19 @@ import pandas as pd
 import pytest
 
 from marc_data_migration_spark import feedgen, oracle
+from marc_data_migration_spark.operators.dedup import latest_per_key
 from marc_data_migration_spark.operators.merge import apply_changes
 from marc_data_migration_spark.schemas import KEY_COLS
 
 VARIANTS = ["basic", "upsert", "delete", "dup-replay", "skew", "evolve"]
 
 
-def _final_state(spark, variant, strategy="replace_and_add", dedup_method="agg"):
+def _final_state(spark, variant, strategy="replace_and_add"):
     base_pd = feedgen.gen_transcripts(n_convs=30, seed=42)
     ch_pd = feedgen.gen_changes(variant, n_events=600, n_convs=30, seed=42)
     base = spark.createDataFrame(base_pd)
     changes = spark.createDataFrame(ch_pd)
-    res = apply_changes(base, changes, strategy=strategy, dedup_method=dedup_method)
+    res = apply_changes(base, changes, strategy=strategy)
     got = res.final.orderBy(*KEY_COLS).toPandas()
     want = oracle.replay(base_pd, ch_pd, strategy=strategy)
     return got, want
@@ -61,9 +62,15 @@ def test_replace_only_drops_unmatched(spark):
 
 @pytest.mark.parametrize("dedup_method", ["window", "salted_window"])
 def test_dedup_methods_equivalent(spark, dedup_method):
-    got_agg, _ = _final_state(spark, "skew", dedup_method="agg")
-    got_other, _ = _final_state(spark, "skew", dedup_method=dedup_method)
-    pd.testing.assert_frame_equal(got_agg, got_other)
+    """Every max-LSN dedup method keeps the same row per key of a skewed
+    feed as the ``agg`` method the merge uses."""
+    ch_pd = feedgen.gen_changes("skew", n_events=600, n_convs=30, seed=42)
+    changes = spark.createDataFrame(ch_pd)
+
+    def latest(method):
+        return latest_per_key(changes, method=method).orderBy(*KEY_COLS).toPandas()
+
+    pd.testing.assert_frame_equal(latest("agg"), latest(dedup_method))
 
 
 def test_field_diffs_reconcile_with_change_counts(spark):

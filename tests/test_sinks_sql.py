@@ -202,96 +202,307 @@ def test_merge_executor_honors_clause_order():
     assert con.sql("SELECT * FROM tgt ORDER BY k").fetchall() == [(2, 2), (3, 300)]
 
 
-def test_iceberg_ledger_probe(spark, monkeypatch):
-    """The replay guard reads the lineage table only when it exists:
-    a ledgered batch_id is skipped, and a failing read of the ledger
-    propagates instead of re-applying the batch (which would append its
-    quarantine and lineage rows a second time). The sink is built
-    without its constructor, its tables backed by temp views."""
-    import pytest
-    from pyspark.sql import SparkSession
+# ---------------------------------------------------------------------
+# The Iceberg sink over a stand-in catalog
+# ---------------------------------------------------------------------
 
-    from marc_data_migration_spark.streaming.sink_iceberg import IcebergMergeSink
+import threading
 
-    sink = object.__new__(IcebergMergeSink)
-    sink.spark, sink.table, sink.n_buckets = spark, "t", 4
+import pytest
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
+
+from marc_data_migration_spark.schemas import CHANGES_SCHEMA_V2, TRANSCRIPTS_SCHEMA
+from marc_data_migration_spark.streaming import sink_iceberg
+from marc_data_migration_spark.streaming.sink_iceberg import IcebergMergeSink
+
+PHASES = {"ledger", "maintain", "touched", "plan", "stage", "commit", "publish"}
+SUFFIXES = ("", "_staged", "_quarantine", "_routed", "_field_audit", "_lineage")
+
+
+class InjectedCrash(RuntimeError):
+    pass
+
+
+class FakeIceberg:
+    """Stands in for an Iceberg catalog at the seams catalog work goes
+    through: ``SparkSession.sql``, ``DataFrame.writeTo`` and
+    ``DataFrameWriter.saveAsTable``. Its tables are parquet tables of the
+    session catalog. CREATE and ALTER run as Spark SQL; MERGE runs in
+    DuckDB (``execute_merge_in_duckdb``) and its result is written over
+    the table, which recaches every plan reading it, as an Iceberg commit
+    does; DELETE and the writers rewrite the table, resolving columns by
+    name, and a write with a column the table lacks fails, as Iceberg's
+    does. Each statement and write is logged as (kind, table); with
+    ``arm(n)`` the n-th one from then on raises once, before it runs."""
+
+    def __init__(self, spark, root, monkeypatch):
+        self.spark, self.root = spark, root
+        self.log, self.tables, self.fail_at = [], [], None
+        self._lock = threading.Lock()
+        self._sql, self._save = SparkSession.sql, DataFrameWriter.saveAsTable
+        monkeypatch.setattr(sink_iceberg, "is_available", lambda spark: True)
+        monkeypatch.setattr(SparkSession, "sql", lambda ss, q, *a, **kw: self.sql(ss, q, *a, **kw))
+        monkeypatch.setattr(type(spark.range(1)), "writeTo", lambda df, name: _FakeWriter(self, df, name))
+        monkeypatch.setattr(DataFrameWriter, "saveAsTable", lambda w, name, *a, **kw: self.append(w, name))
+
+    def arm(self, fail_at):
+        self.log.clear()
+        self.fail_at = fail_at
+
+    def step(self, kind, table):
+        with self._lock:
+            self.log.append((kind, table))
+            if len(self.log) == self.fail_at:
+                raise InjectedCrash(f"injected crash at {kind} {table}")
+
+    def sql(self, session, query, *a, **kw):
+        q = query.strip()
+        create = re.match(r"CREATE TABLE IF NOT EXISTS (\S+) \((.*?)\) USING iceberg", q, re.S)
+        if create:
+            name, cols = create.groups()
+            self.tables.append(name)
+            return self._sql(
+                session,
+                f"CREATE TABLE IF NOT EXISTS {name} ({cols}) USING parquet "
+                f"LOCATION '{self.root / name}'",
+            )
+        kind = q.split()[0]
+        if kind not in ("ALTER", "DELETE", "MERGE"):
+            return self._sql(session, query, *a, **kw)
+        table = q.split()[2]
+        self.step(kind, table)
+        if kind == "ALTER":
+            return self._sql(session, q)
+        if kind == "DELETE":
+            return self.rewrite(table, f"NOT ({re.search(r'WHERE (.*)', q, re.S)[1]})")
+        src = re.search(r"USING (.*?) s\nON", q, re.S)[1]
+        con = duckdb.connect()
+        con.register("_t", self.spark.table(table).toArrow())
+        con.register("_s", self._sql(session, f"SELECT * FROM {src} s").toArrow())
+        con.execute(f"CREATE TABLE {table} AS SELECT * FROM _t")
+        con.execute("CREATE TABLE _src AS SELECT * FROM _s")
+        execute_merge_in_duckdb(con, q.replace(src, "_src"))
+        merged = con.sql(f"SELECT * FROM {table}").arrow()
+        schema = self.spark.table(table).schema
+        self.spark.createDataFrame(merged, schema).write.insertInto(table, overwrite=True)
+
+    def rewrite(self, table, keep, new=None):
+        """Overwrite ``table`` with its rows matching ``keep`` plus ``new``."""
+        current = self.spark.table(table)
+        rows = current.filter(keep).collect()
+        if new is not None:
+            if set(new.columns) - set(current.columns):
+                raise ValueError(f"{table} has no column {set(new.columns) - set(current.columns)}")
+            cols = [F.col(f.name) if f.name in new.columns else F.lit(None).cast(f.dataType)
+                    for f in current.schema]
+            rows += new.select(*cols).collect()
+        self.spark.createDataFrame(rows, current.schema).write.insertInto(table, overwrite=True)
+
+    def create(self, df, table):
+        self.step("create", table)
+        self.tables.append(table)
+        self._save(df.write.option("path", str(self.root / table)), table)
+
+    def append(self, writer, table):
+        self.step("append", table)
+        if table not in self.tables:
+            self.tables.append(table)
+            writer = writer.option("path", str(self.root / table))
+        self._save(writer.mode("append"), table)
+
+    def snapshot(self, table):
+        """Every table of the sink: its columns and sorted rows, the
+        lineage's commit_ts left out."""
+        out = {}
+        for suffix in SUFFIXES:
+            name = table + suffix
+            if not self.spark.catalog.tableExists(name):
+                out[suffix] = None
+                continue
+            df = self.spark.table(name).drop("commit_ts")
+            out[suffix] = (df.columns, sorted(tuple(map(str, r)) for r in df.collect()))
+        return out
+
+
+class _FakeWriter:
+    def __init__(self, fake, df, table):
+        self.fake, self.df, self.table = fake, df, table
+
+    def partitionedBy(self, *cols):
+        return self
+
+    def create(self):
+        self.fake.create(self.df, self.table)
+
+    def overwrite(self, condition):
+        self.fake.step("overwrite", self.table)
+        self.fake.rewrite(self.table, ~condition, self.df)
+
+
+@pytest.fixture
+def iceberg(spark, tmp_path, monkeypatch):
+    fake = FakeIceberg(spark, tmp_path, monkeypatch)
+    yield fake
+    monkeypatch.undo()
+    for name in fake.tables:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def _open_iceberg(spark, table, base_pd):
+    sink = IcebergMergeSink(spark, table, n_buckets=4)
+    spark.createDataFrame(base_pd[TRANSCRIPTS_SCHEMA.names], TRANSCRIPTS_SCHEMA).write.insertInto(table)
+    return sink
+
+
+def _sweep_feed(spark):
+    """A base and two gated batches. Batch 0 updates, inserts, deletes,
+    brings a stale row and 2 null-key rows; batch 1 brings the new
+    column ``tool_meta`` and a null-key row that carries it."""
+    base_pd = feedgen.gen_transcripts(n_convs=8, seed=51)
+    keys = list(base_pd[KEY_COLS].itertuples(index=False, name=None))
+    stale, deleted = keys[0], keys[3]
+    base_pd.loc[0, "lsn"] = 10_000  # newer than any change of batch 0
+    ch = feedgen.gen_changes("upsert", n_events=40, n_convs=8, seed=51)
+    ch = ch[~ch.set_index(KEY_COLS).index.isin([stale, deleted])]
+    extra = pd.DataFrame(
+        [
+            dict(op="U", lsn=101, conv_id=stale[0], turn_idx=stale[1], text="late"),
+            dict(op="D", lsn=102, conv_id=deleted[0], turn_idx=deleted[1]),
+            dict(op="I", lsn=103, conv_id=None, turn_idx=0, text="no key"),
+            dict(op="U", lsn=104, conv_id=None, turn_idx=1, text="no key"),
+        ]
+    ).assign(commit_ts=feedgen.EPOCH)
+    b0 = pd.concat([ch, extra], ignore_index=True)
+    b1 = feedgen.gen_changes("evolve", n_events=40, n_convs=8, seed=52)
+    b1 = pd.concat([b1, b1.tail(1).assign(conv_id=None)], ignore_index=True)
+    b1["lsn"] += 20_000
+    batches = []
+    for pdf, schema in ((b0, CHANGES_SCHEMA), (b1, CHANGES_SCHEMA_V2)):
+        pdf = pdf.assign(turn_idx=pdf.turn_idx.astype("int32"))[schema.names]
+        batches.append(spark.createDataFrame(pdf, schema=schema))
+    return base_pd, batches
+
+
+OPTS = dict(audit="fields", fuzzy_gate=True, fuzzy_threshold=50)
+
+
+def test_iceberg_ledger_read_at_open(spark, iceberg, monkeypatch):
+    """The sink reads its ledger once, when it opens: a batch_id in the
+    lineage table is a replay and is skipped, and a failing read of the
+    ledger raises at open instead of re-applying (and re-writing) a
+    batch."""
     batch = spark.createDataFrame(
         feedgen.gen_changes("upsert", n_events=20, n_convs=4, seed=3)
     )
-    batch.limit(0).createOrReplaceTempView("t")
-    spark.range(1).selectExpr("0L AS batch_id").createOrReplaceTempView("t_lineage")
+    IcebergMergeSink(spark, "ledger_t", n_buckets=4).apply_merge(batch, batch_id=0)
+    reopened = IcebergMergeSink(spark, "ledger_t", n_buckets=4)
+    assert reopened.applied_batch_ids() == {0}
+    assert reopened.apply_merge(batch, batch_id=0) is None
     real_table = SparkSession.table
 
     def failing_table(self, name):
-        if name == "t_lineage":
+        if name == "ledger_t_lineage":
             raise RuntimeError("injected ledger read failure")
         return real_table(self, name)
 
-    try:
-        assert sink.apply_merge(batch, batch_id=0) is None  # ledgered: skipped
-        monkeypatch.setattr(SparkSession, "table", failing_table)
-        with pytest.raises(RuntimeError, match="injected ledger read failure"):
-            sink.apply_merge(batch, batch_id=1)
-    finally:
-        spark.catalog.dropTempView("t")
-        spark.catalog.dropTempView("t_lineage")
+    monkeypatch.setattr(SparkSession, "table", failing_table)
+    with pytest.raises(RuntimeError, match="injected ledger read failure"):
+        IcebergMergeSink(spark, "ledger_t", n_buckets=4)
 
 
-def test_iceberg_fields_audit_keeps_quarantine(spark, monkeypatch):
+def test_iceberg_fields_audit_keeps_quarantine(spark, iceberg):
     """Every audit mode but "lineage" keeps the quarantined rows, as the
     parquet sinks do: under audit="fields" a batch with null-key rows
-    appends them to ``<table>_quarantine``. The sink is built without
-    its constructor, its table backed by a temp view; the MERGE is
-    skipped and each table write recorded with its row count."""
-    from pyspark.sql import SparkSession
-    from pyspark.sql.readwriter import DataFrameWriter
-
-    from marc_data_migration_spark.streaming.sink_iceberg import IcebergMergeSink
-
-    sink = object.__new__(IcebergMergeSink)
-    sink.spark, sink.table, sink.n_buckets = spark, "t", 4
+    writes them to ``<table>_quarantine``, next to its routed and
+    field-audit rows."""
     ch_pd = feedgen.gen_changes("upsert", n_events=20, n_convs=4, seed=3)
     ch_pd.loc[:1, "conv_id"] = None
-    batch = spark.createDataFrame(ch_pd)
-    batch.limit(0).createOrReplaceTempView("t")
-    real_sql = SparkSession.sql
-    written = {}
-
-    def sql(self, query, *a, **kw):
-        if query.lstrip().startswith("MERGE"):
-            return None
-        return real_sql(self, query, *a, **kw)
-
-    def save_as_table(self, name, *a, **kw):
-        written[name] = self._df.count()
-
-    monkeypatch.setattr(SparkSession, "sql", sql)
-    monkeypatch.setattr(DataFrameWriter, "saveAsTable", save_as_table)
-    try:
-        sink.apply_merge(batch, batch_id=0, audit="fields")
-    finally:
-        spark.catalog.dropTempView("t")
-    assert written["t_quarantine"] == 2, written
-    # the batch's MERGE source view is dropped, not left in the session
+    sink = IcebergMergeSink(spark, "fields_t", n_buckets=4)
+    sink.apply_merge(spark.createDataFrame(ch_pd), batch_id=0, audit="fields")
+    assert spark.table("fields_t_quarantine").count() == 2
+    assert spark.table("fields_t_routed").count() > 0
+    assert spark.catalog.tableExists("fields_t_field_audit")
+    # the batch's MERGE source is the staged table: no view is left behind
     views = [t.name for t in spark.catalog.listTables() if t.name.startswith("_changes_batch_")]
     assert views == [], views
 
 
-def test_iceberg_ledger_matches_parquet_ledger(spark, tmp_path, monkeypatch):
+def test_iceberg_sink_runs_the_shared_skeleton(spark, iceberg):
+    """The Iceberg sink runs the parquet sinks' apply_merge: it reports
+    the same seven phases, runs no Spark job under the ``ledger`` or
+    ``plan`` label, widens the table before the MERGE of a batch that
+    brings a new column, and a replayed batch changes no table."""
+    base_pd, batches = _sweep_feed(spark)
+    sink = _open_iceberg(spark, "skel_t", base_pd)
+    sc = spark.sparkContext
+    sc.setJobGroup("iceberg-skeleton", "iceberg-skeleton")
+    try:
+        for batch_id, batch in enumerate(batches):
+            iceberg.arm(None)
+            sink.apply_merge(batch, batch_id, **OPTS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(sink.phase_s) == PHASES
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    descs = [store.job(i).description() for i in sc.statusTracker().getJobIdsForGroup("iceberg-skeleton")]
+    phases = {str(d.get()).split()[0] for d in descs if d.isDefined()}
+    assert "stage" in phases and not {"ledger", "plan"} & phases, phases
+    # batch 1's statements: the table gains tool_meta before its MERGE
+    assert iceberg.log.index(("ALTER", "skel_t")) < iceberg.log.index(("MERGE", "skel_t"))
+    assert spark.table("skel_t").filter(F.col("tool_meta").isNotNull()).count() > 0
+    assert "tool_meta" in spark.table("skel_t_quarantine").columns
+    before = iceberg.snapshot("skel_t")
+    assert before["_staged"][1] == []  # every staged row was published
+    assert sink.apply_merge(batches[1], 1, **OPTS) is None
+    assert iceberg.snapshot("skel_t") == before
+
+
+@pytest.mark.parametrize("evolve", [False, True], ids=["plain", "evolve"])
+def test_iceberg_crash_point_sweep(spark, iceberg, evolve):
+    """Each write or statement of the last batch fails once; the sink is
+    then reopened (recovery runs at open) and the stream replays the
+    batch. Every table — data, staged, quarantine, routed, field audit
+    and lineage (but commit_ts) — must then equal a clean run's. The
+    ``evolve`` case sweeps a batch that brings a new column, so its
+    ALTERs are swept too."""
+    base_pd, batches = _sweep_feed(spark)
+    batches = batches if evolve else batches[:1]
+
+    def run(table, fail_at=None):
+        sink = _open_iceberg(spark, table, base_pd)
+        for batch_id, batch in enumerate(batches):
+            if batch_id == len(batches) - 1:
+                iceberg.arm(fail_at)
+            try:
+                sink.apply_merge(batch, batch_id, **OPTS)
+            except InjectedCrash:
+                sink = IcebergMergeSink(spark, table, n_buckets=4)
+                sink.apply_merge(batch, batch_id, **OPTS)
+        return iceberg.snapshot(table)
+
+    want = run("clean_t")
+    n_steps = len(iceberg.log)
+    for fail_at in range(1, n_steps + 1):
+        got = run(f"crash{fail_at}_t", fail_at)
+        crashed_at = iceberg.log[fail_at - 1]
+        assert got == want, f"diverged after a crash at {crashed_at}"
+
+
+def test_iceberg_ledger_matches_parquet_ledger(spark, tmp_path, iceberg):
     """The Iceberg sink records the same route-level ledger as the
     parquet sink, and its MERGE leaves the same table. One base and one
     gated batch with updates, inserts, deletes, a stale row, a gate
     conflict and 2 null-key rows go through ParquetMergeSink and through
-    IcebergMergeSink, built without its constructor over a parquet
-    table. The MERGE text is executed in DuckDB and its result written
-    over that table, which recaches every plan reading it, as an Iceberg
-    commit does; the table writes are captured. Lineage rows must be
-    equal but for commit_ts, and the table must equal
-    ParquetMergeSink.read()."""
-    from pyspark.sql import SparkSession
-    from pyspark.sql.readwriter import DataFrameWriter
-
-    from marc_data_migration_spark.streaming.sink_iceberg import IcebergMergeSink
+    IcebergMergeSink over the stand-in catalog (``FakeIceberg``): its
+    MERGE text is executed in DuckDB and the result written over the
+    table, which recaches every plan reading it, as an Iceberg commit
+    does. Lineage rows must be equal but for commit_ts, the table must
+    equal ParquetMergeSink.read(), and both sinks report the same
+    phases."""
     from marc_data_migration_spark.streaming.sink_parquet import ParquetMergeSink
 
     n_buckets = 4
@@ -323,43 +534,16 @@ def test_iceberg_ledger_matches_parquet_ledger(spark, tmp_path, monkeypatch):
     routes = {r.route for r in parquet.routed().select("route").collect()}
     assert {"updated", "non-updated", "deleted", "stale", "unmodified"} <= routes, routes
 
-    sink = object.__new__(IcebergMergeSink)
-    sink.spark, sink.table, sink.n_buckets = spark, "ice_t", n_buckets
-    spark.createDataFrame(base_pd).write.parquet(str(tmp_path / "ice"))
-    spark.catalog.createTable("ice_t", path=str(tmp_path / "ice"), source="parquet")
-    real_sql, real_table = SparkSession.sql, SparkSession.table
-    merges, written = [], {}
-
-    def sql(self, query, *a, **kw):
-        if not query.lstrip().startswith("MERGE"):
-            return real_sql(self, query, *a, **kw)
-        merges.append(query)
-        view = re.search(r"USING (\S+) s", query)[1]
-        con = duckdb.connect()
-        con.register("_t", real_table(self, "ice_t").toPandas())
-        con.register("_s", real_table(self, view).toPandas())
-        con.execute("CREATE TABLE ice_t AS SELECT * FROM _t")
-        con.execute(f"CREATE TABLE {view} AS SELECT * FROM _s")
-        execute_merge_in_duckdb(con, query)
-        merged = self.createDataFrame(con.sql("SELECT * FROM ice_t").df(), base.schema)
-        merged.write.mode("overwrite").insertInto("ice_t")
-
-    def save_as_table(self, name, *a, **kw):
-        written[name] = self._df.toPandas()
-
-    base = spark.table("ice_t")
-    monkeypatch.setattr(SparkSession, "sql", sql)
-    monkeypatch.setattr(DataFrameWriter, "saveAsTable", save_as_table)
-    try:
-        sink.apply_merge(batch, batch_id=0, **opts)
-        monkeypatch.undo()
-        assert len(merges) == 1
-        cols = list(base_pd.columns)
-        assert _canon(spark.table("ice_t").toPandas(), cols) == _canon(
-            parquet.read().toPandas(), cols
-        )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS ice_t")
+    sink = _open_iceberg(spark, "ice_t", base_pd)
+    iceberg.arm(None)
+    sink.apply_merge(batch, batch_id=0, **opts)
+    merges = [step for step in iceberg.log if step[0] == "MERGE"]
+    assert len(merges) == 1
+    cols = list(base_pd.columns)
+    assert _canon(spark.table("ice_t").toPandas(), cols) == _canon(
+        parquet.read().toPandas(), cols
+    )
+    assert set(sink.phase_s) == set(parquet.phase_s) == PHASES
 
     def ledger(pdf):
         pdf = pdf.drop(columns="commit_ts").sort_values("partition_id")
@@ -367,7 +551,7 @@ def test_iceberg_ledger_matches_parquet_ledger(spark, tmp_path, monkeypatch):
                 for r in pdf.itertuples(index=False, name=None)]
 
     want = ledger(parquet.lineage().toPandas())
-    assert ledger(written["ice_t_lineage"]) == want
+    assert ledger(spark.table("ice_t_lineage").toPandas()) == want
     assert sum(r[8] for r in want) >= 1  # the gate conflict
     assert [r[9] for r in want if r[1] == -1] == [2]  # the null-key rows
-    assert len(written["ice_t_quarantine"]) == 2
+    assert spark.table("ice_t_quarantine").count() == 2
